@@ -1,6 +1,6 @@
 """The engine's benchmark: one workload per run, one JSON result line.
 
-    python3 perfbench/run.py --workload weekly_retrain --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload weekly_retrain --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout.  The benchmark generates its inputs
 from ``--seed`` (``gen.py``), runs the workload closed-loop from one
@@ -14,6 +14,12 @@ With ``--trace 0`` the metrics are the end-to-end metrics of
 on every other operation with spans and Spark listeners on (the
 operations in between run untraced, which gives the tracing overhead).
 The line before it carries the workload's own named metrics (``detail``).
+
+Each workload times a fixed amount of work (one week; one revisit of
+every page; twice that in a traced run), so that every host times the
+same operations.  ``--seconds`` is accepted for the command-line
+contract only: BENCHMARK.json's ``run_seconds`` is about what that fixed
+work takes on a 4-core host.
 
 Every file a run writes stays under ``.perfbench_runs/<run>/`` in the
 checkout; only ``result.json`` (and ``spans.jsonl`` when traced) remain
@@ -39,8 +45,6 @@ ROOT = os.path.dirname(HERE)
 PKG_DIR = os.path.join(ROOT, "sales_forecast_mlops_at_scale_spark")
 #: A run that has not finished by then is killed without a result.
 DEADLINE_S = 175.0
-#: Set-up repetitions whose median is reported as ``setup_s``.
-SETUP_REPS = 3
 #: Canary runs at least, whatever the number of operations.
 MIN_CANARIES = 9
 
@@ -59,7 +63,6 @@ class Run:
 
     def __init__(self, args, run_dir: str) -> None:
         self.seed = args.seed
-        self.seconds = args.seconds
         self.trace = bool(args.trace)
         self.dir = run_dir
         self.data = os.path.join(run_dir, "data")
@@ -72,6 +75,8 @@ class Run:
         self.tracer = None
         self.probe = None
         self.op_counters: list[dict] = []
+        self.canaries: list[float] = []
+        self.measuring = False
 
     # -- session ----------------------------------------------------------
 
@@ -174,6 +179,14 @@ class Run:
         probe.detach()
         self.spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
 
+    def sample_canary(self) -> None:
+        """Time the canary once, while measuring: between operations, and
+        between the untimed checks inside an untraced one, so that the
+        samples cover the same stretch of host load as the walls (a
+        traced operation counts every Spark job it runs)."""
+        if self.measuring and not (self._op is not None and self._op["traced"]):
+            self.canaries.append(canary(self.spark, self.cpus))
+
     def span(self, name: str, layer: str):
         return self.tracer.span(name, layer) if self.tracer else contextlib.nullcontext()
 
@@ -210,12 +223,22 @@ def peak_rss_mb(spark) -> tuple[float, float]:
 
 
 def timed_stats(ops: list[dict], canary_s: float) -> dict:
-    """Latency and throughput of the timed operations, raw and relative to
-    the canary: ``op_p50_rel`` is the median operation in canaries,
-    ``throughput_rel`` the operations completed per canary of busy time."""
+    """Latency and throughput of the timed operations.  ``op_gmean_rel``
+    is the geometric mean, over the kinds of operation (``key``: the week;
+    each page), of each kind's median wall, in canaries: every kind's
+    relative change counts the same, and a fixed mix of kinds with unlike
+    walls has no middle operation for a median to settle on."""
     walls = [op["wall"] for op in ops]
-    p50, per_s = statistics.median(walls), len(walls) / sum(walls)
-    return {"op_p50_s": p50, "ops_per_s": per_s, "op_p50_rel": p50 / canary_s, "throughput_rel": per_s * canary_s}
+    by_key: dict[str, list[float]] = {}
+    for op in ops:
+        by_key.setdefault(op["key"], []).append(op["wall"])
+    gmean = statistics.geometric_mean(statistics.median(w) for w in by_key.values())
+    return {
+        "op_p50_s": statistics.median(walls),
+        "ops_per_s": len(walls) / sum(walls),
+        "op_gmean_s": gmean,
+        "op_gmean_rel": gmean / canary_s,
+    }
 
 
 def canary(spark, cpus: int) -> float:
@@ -223,7 +246,7 @@ def canary(spark, cpus: int) -> float:
     one aggregate over every core).  Host speed on shared machines drifts
     by 20-40% between runs and moves every wall of a run together; the
     end-to-end latency metrics are reported relative to this job, timed
-    in the same run between the operations, so that runs compare."""
+    in the same run around the operations, so that runs compare."""
     t = time.perf_counter()
     spark.range(0, 4_000_000, 1, cpus).selectExpr("sum(id * id % 7)").collect()
     return time.perf_counter() - t
@@ -285,40 +308,42 @@ def main(argv=None) -> int:
     run = Run(args, run_dir)
     wl = workloads.WORKLOADS[args.workload](run, fault=args.inject_fault)
     try:
-        prep = []
-        for _ in range(SETUP_REPS):
-            t = time.perf_counter()
-            wl.prepare()
-            prep.append(time.perf_counter() - t)
+        # input generation is the benchmark's own work: outside setup_s
+        t = time.perf_counter()
+        wl.prepare()
+        gen_s = time.perf_counter() - t
         t = time.perf_counter()
         run.start_spark()
         jvm_s = time.perf_counter() - t
-        t = time.perf_counter()
-        wl.warm()
-        warm_s = time.perf_counter() - t
-        setup_s = jvm_s + statistics.median(prep) + warm_s
+        warm_s = wl.warm()
+        setup_s = jvm_s + warm_s
         setup_total_s = time.perf_counter() - t_process
 
-        canaries = []
+        run.measuring = True
         t0 = time.perf_counter()
-        while time.perf_counter() - t0 < args.seconds or not wl.done_minimum():
-            canaries.append(canary(run.spark, run.cpus))
+        while True:
+            run.sample_canary()
             if wl.step() is False:
                 break
         measured_s = time.perf_counter() - t0
-        while len(canaries) < MIN_CANARIES:
-            canaries.append(canary(run.spark, run.cpus))
-        canary_s = statistics.median(canaries)
+        while len(run.canaries) < MIN_CANARIES:
+            run.sample_canary()
+        run.measuring = False
+        canary_s = statistics.median(run.canaries)
+        t = time.perf_counter()
         wl.finish()
+        finish_s = time.perf_counter() - t
         py_mb, jvm_mb = peak_rss_mb(run.spark)
         plain = [op for op in run.ops if not op["traced"]]
         failed = sum(not op["ok"] for op in run.ops) + len(run.checks_failed)
         attempted = len(run.ops) + run.checks
         detail = {
             "setup_total_s": setup_total_s,
+            "gen_s": gen_s,
             "setup_jvm_s": jvm_s,
             "setup_warm_s": warm_s,
             "measured_s": measured_s,
+            "finish_s": finish_s,
             "canary_s": canary_s,
             "peak_rss_mb": py_mb + jvm_mb,
             "python_rss_mb": py_mb,
@@ -334,12 +359,7 @@ def main(argv=None) -> int:
             if run.tracer is not None:
                 run.tracer.dump(os.path.join(run_dir, "spans.jsonl"))
         else:
-            stats = timed_stats(plain, canary_s)
-            metrics = {
-                "setup_s": setup_s,
-                "op_p50_rel": stats["op_p50_rel"],
-                "throughput_rel": stats["throughput_rel"],
-            }
+            metrics = {"setup_s": setup_s, "op_gmean_rel": detail["op_gmean_rel"]}
     finally:
         run.stop_spark()
         for sub in ("data", "tmp", "spark-local", "warehouse"):

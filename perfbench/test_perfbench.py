@@ -22,7 +22,9 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
 import gen  # noqa: E402
+import pandas as pd  # noqa: E402
 import tracing  # noqa: E402
+from workloads import compare_result  # noqa: E402
 
 
 def _spec() -> dict:
@@ -116,3 +118,17 @@ def test_self_time_subtracts_children():
         (0, 3, 0, "count", "action", 9.0, 10.0),
     ]
     assert dict(t.self_times()) == {"bench": 1.0, "pipeline": 5.0, "ml": 3.0, "action": 1.0}
+
+
+def test_oracle_comparison_accepts_a_rounding_tie_and_nothing_more():
+    # round(sum, 4) of a group whose exact sum ends in ...771.63: one engine
+    # reads 771.6299, the other 771.63
+    want = pd.DataFrame({"flag": ["A", "N"], "sum_base": [4400000771.6299, 12.5], "n": [3, 4]})
+    assert compare_result(want.iloc[::-1].copy(), want) == "same"
+    assert compare_result(want.assign(sum_base=[4400000771.63, 12.5]), want) == "tie"
+    assert compare_result(want.assign(sum_base=[4400000771.6297, 12.5]), want) == "differ"
+    assert compare_result(want.assign(n=[3, 5]), want) == "differ"
+    assert compare_result(want.iloc[:1], want) == "differ"
+    whole = pd.DataFrame({"x": [1.0, 2.0]})  # not rounded: six digits, as tools/check_oracle.py
+    assert compare_result(whole.assign(x=[1.0, 2.0000001]), whole) == "same"
+    assert compare_result(whole.assign(x=[1.0, 2.00001]), whole) == "differ"
