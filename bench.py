@@ -1,7 +1,9 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "spread": {name: sec}, "sf": ...}.
+(default: ``SF_DIR``) on local[$SPARK_GRAFT_CPUS] and prints
+JSON lines (see ``print_results``): the full record {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "spread":
+{name: sec}, "sf": ...}, the per-query mins in small numbered parts, and
+LAST a compact headline line carrying "value".
 
 Each query is executed to completion (count() materializes the whole
 result without driver-side collect of payload columns), repeated
@@ -276,6 +278,48 @@ def overhead_floor(spark) -> float:
     return round(sorted(walls)[2], 4)
 
 
+def print_results(payload: dict) -> None:
+    """Print the bench record; the LAST line is the compact headline.
+
+    A harness that keeps only a bounded tail window of the output parses
+    the last line as the record, so the lines print in this order:
+
+    1. the full ``payload`` (truncated from the FRONT by a small window);
+    2. the per-query min dict split across small (<1 KB) numbered lines,
+       each parseable on its own: ``{"queries_part": i, "of": n,
+       "q": {name: min_sec, ...}}`` — these keep per-query and scaling
+       comparison possible when line 1 is truncated;
+    3. one compact line (<1 KB) with the headline total and the slowest
+       query mins.
+    """
+    timings = payload["queries"]
+    print(json.dumps(payload))
+    part: dict[str, float] = {}
+    parts: list[dict[str, float]] = []
+    for name, sec in timings.items():
+        part[name] = sec
+        if len(json.dumps({"queries_part": 0, "of": 0, "q": part})) > 850:
+            parts.append(part)
+            part = {}
+    if part:
+        parts.append(part)
+    for i, p in enumerate(parts, 1):
+        print(json.dumps({"queries_part": i, "of": len(parts), "q": p}))
+    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:15])
+    print(json.dumps({
+        "metric": payload["metric"],
+        "value": payload["value"],
+        "unit": payload["unit"],
+        "sf": payload["sf"],
+        "n_queries": len(timings),
+        "canary_wall": payload["canary_wall"],
+        "canary_wall_end": payload["canary_wall_end"],
+        "overhead_floor": payload["overhead_floor"],
+        "overhead_floor_end": payload["overhead_floor_end"],
+        "slowest": slowest,
+    }))
+
+
 def main() -> None:
     spark = get_spark("engine-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -371,44 +415,7 @@ def main() -> None:
         "spread": spreads,
         "queries": timings,
     }
-    print(json.dumps(payload))
-    # the driver keeps only a bounded window of output, which truncates
-    # the big line above from the FRONT (losing "value") — so ALSO print
-    # one final compact line (<1 KB) carrying the headline total and the
-    # worst-query mins: small enough to survive any tail window, and
-    # parseable on its own
-    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:15])
-    print(json.dumps({
-        "metric": "headline_queries_total_wall",
-        "value": payload["value"],
-        "unit": "sec",
-        "sf": payload["sf"],
-        "n_queries": len(timings),
-        "canary_wall": canary,
-        "canary_wall_end": canary_end,
-        "overhead_floor": overhead,
-        "overhead_floor_end": overhead_end,
-        "slowest": slowest,
-    }))
-    # ... and the FULL per-query min dict again, split across small
-    # (<1 KB) numbered lines AFTER the compact headline so the driver's
-    # bounded tail window keeps them whole (additions-only, r13: PERF_r12
-    # had per_query {} because only the giant payload line carried the
-    # full dict and the tail window truncated it from the front; these
-    # parts restore driver-side per-query and scaling comparison).  Each
-    # line is independently parseable: {"queries_part": i, "of": n,
-    # "q": {name: min_sec, ...}}.
-    part: dict[str, float] = {}
-    parts: list[dict[str, float]] = []
-    for name, sec in timings.items():
-        part[name] = sec
-        if len(json.dumps({"queries_part": 0, "of": 0, "q": part})) > 850:
-            parts.append(part)
-            part = {}
-    if part:
-        parts.append(part)
-    for i, p in enumerate(parts, 1):
-        print(json.dumps({"queries_part": i, "of": len(parts), "q": p}))
+    print_results(payload)
     # full, untruncated artifact for the per-round commit
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if out_path:

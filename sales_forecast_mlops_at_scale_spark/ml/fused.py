@@ -36,6 +36,7 @@ import math
 
 import numpy as np
 
+from ..operators.groupmap import hash_partition, sorted_group_map
 from .models import MODEL_NAME_FMT, SeasonalNaiveModel, get_model
 from .train import (
     _metrics,
@@ -272,8 +273,6 @@ def gated_forecast_groups(
 
     timed = _with_time_cols(sales, date_col)
     if model_spec == "seasonal_naive":
-        from ..operators.groupmap import sorted_group_map
-
         kernel = make_gated_batch_kernel(
             keys,
             horizon_start,
@@ -303,4 +302,4 @@ def gated_forecast_groups(
         y_col=y_col,
         max_rmse=max_rmse,
     )
-    return timed.groupBy(*keys).applyInPandas(fn, schema)
+    return hash_partition(timed, keys).groupBy(*keys).applyInPandas(fn, schema)

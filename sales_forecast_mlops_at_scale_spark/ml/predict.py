@@ -23,6 +23,7 @@ from collections.abc import Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..operators.groupmap import hash_partition, sorted_group_map
 from .models import MODEL_NAME_FMT, get_model
 from .train import _seasonal_naive_lut
 
@@ -192,8 +193,6 @@ def forecast_groups(
 
     timed = _with_time_cols(sales, date_col)
     if model_spec == "seasonal_naive":
-        from ..operators.groupmap import sorted_group_map
-
         kernel = make_predict_batch_kernel(
             keys, horizon_start, horizon_days, y_col=y_col
         )
@@ -216,4 +215,4 @@ def forecast_groups(
         date_col=date_col,
         y_col=y_col,
     )
-    return timed.groupBy(*keys).applyInPandas(fn, schema)
+    return hash_partition(timed, keys).groupBy(*keys).applyInPandas(fn, schema)

@@ -15,8 +15,12 @@ Walk-forward CV mirrors ``TimeSeriesSplit(n_splits=5)``
 window, metrics averaged over splits.
 
 Skew note: group sizes are bounded (≤ a few years of daily rows), so the
-shuffle is uniform; set ``spark.sql.shuffle.partitions`` ≈ #groups / 4
-for very large group counts.
+shuffle is uniform.  The model stage runs in exactly
+``spark.sql.shuffle.partitions`` tasks — the grouped map fixes that
+count itself, because AQE would coalesce a stage this small in bytes
+into one task (``operators/groupmap.hash_partition``) — so set it to at
+least the executor core count, and ≈ #groups / 4 for very large group
+counts.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from collections.abc import Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..operators.groupmap import hash_partition, sorted_group_map
 from ..schemas import TRAIN_METRICS
 from .models import MODEL_NAME_FMT, get_model
 
@@ -343,8 +348,6 @@ def train_groups(
         schema = T.StructType(key_fields + metric_fields)
     timed = _with_time_cols(sales, date_col)
     if model_spec == "seasonal_naive":
-        from ..operators.groupmap import sorted_group_map
-
         kernel = make_train_batch_kernel(keys, n_splits=n_splits, y_col=y_col)
         # guide §4.1: mapInPandas is opaque to column pruning, so select
         # exactly what the kernel reads — the raw date column otherwise
@@ -362,4 +365,4 @@ def train_groups(
     fn = make_train_fn(
         keys, model_spec=model_spec, n_splits=n_splits, date_col=date_col, y_col=y_col
     )
-    return timed.groupBy(*keys).applyInPandas(fn, schema)
+    return hash_partition(timed, keys).groupBy(*keys).applyInPandas(fn, schema)

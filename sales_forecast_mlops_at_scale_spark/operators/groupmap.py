@@ -14,9 +14,10 @@ model math runs (measured, round 7).
 processed exactly once, in time order — but restores batch-level
 amortization:
 
-1. hash-repartition on the group keys (skippable when the input is
-   already partitioned on them — e.g. downstream of an aggregate whose
-   grouping key is a superset, which reuses the SAME exchange),
+1. hash-repartition on the group keys into a fixed partition count
+   (skippable when the input is already partitioned on them — e.g.
+   downstream of an aggregate whose grouping key is a superset, which
+   reuses the SAME exchange),
 2. ``sortWithinPartitions(*keys, *order_cols)`` — groups become
    contiguous runs, already time-ordered, so kernels need no per-group
    argsort,
@@ -31,7 +32,7 @@ boundary bookkeeping (~µs), and the Arrow round-trip count drops from
 #groups to #batches.
 
 Correctness contract (property-tested equal to ``applyInPandas`` in
-``tests/test_ml_pipeline.py``, including tiny Arrow batches that force
+``tests/test_groupmap.py``, including tiny Arrow batches that force
 multi-batch carry-over):
 
 - hash partitioning puts every row of a group in one partition, so a
@@ -40,9 +41,13 @@ multi-batch carry-over):
 - the trailing group of every batch is held back until the next batch
   proves it complete (or the partition ends), so a kernel sees each
   group exactly once, whole;
-- AQE may *coalesce* shuffle partitions (preserves co-location) but
-  never splits a hash partition of a non-join exchange, so the
-  per-partition key-completeness assumption holds under AQE.
+- the operator fixes its own partition count (:func:`hash_partition`:
+  ``repartition(n, *keys)`` with ``n = spark.sql.shuffle.partitions``).
+  AQE sizes shuffle partitions by bytes, but a grouped map's cost is
+  Python time per group: a model stage is small in bytes and heavy in
+  Python, so byte-based coalescing folded it into ONE task on one core.
+  A ``REPARTITION_BY_NUM`` exchange is one AQE neither coalesces nor
+  splits, so every key-group stays whole in one of exactly ``n`` tasks.
 
 At 100 TB: same shuffle volume as ``applyInPandas`` (one exchange on the
 keys — or zero when ``pre_partitioned``), strictly less Python overhead,
@@ -150,6 +155,15 @@ def _batched_group_gen(
             yield out
 
 
+def hash_partition(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Hash-partition ``df`` on ``keys`` into exactly
+    ``spark.sql.shuffle.partitions`` partitions (see module doc: AQE
+    leaves an explicit-count exchange as it is).  A downstream
+    ``groupBy(*keys)`` reuses this exchange rather than adding one."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *keys)
+
+
 def sorted_group_map(
     df: DataFrame,
     keys: Sequence[str],
@@ -171,7 +185,7 @@ def sorted_group_map(
     boundaries.  Opt-in; the ML callers that use it cite the exchange
     they reuse (they partition on exactly ``keys``)."""
     keys = list(keys)
-    part = df if pre_partitioned else df.repartition(*keys)
+    part = df if pre_partitioned else hash_partition(df, keys)
     ordered = part.sortWithinPartitions(*keys, *order_cols)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -60,7 +60,9 @@ def get_spark(
     """Build (or reuse) the engine's SparkSession.
 
     ``shuffle_partitions`` defaults to the local core count; on a real
-    cluster set it ≈ 2-3× total executor cores (AQE coalesces the excess).
+    cluster set it ≈ 2-3× total executor cores (AQE coalesces the excess,
+    except in grouped maps, which run exactly this many tasks — see
+    ``operators/groupmap``).
     """
     # Before the JVM launches: forked Python workers inherit the JVM's
     # env, so a discovered protobuf runtime (TWS state protocol) must
@@ -100,6 +102,15 @@ def get_spark(
         # 128 GiB host; override with SPARK_DRIVER_MEMORY for small boxes
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
+    if master.startswith("local"):
+        # list partition directories serially, without a Spark job: above
+        # this many directories Spark launches a listing job, which on
+        # one host costs more than the listing it spreads; remote masters
+        # keep the parallel listing, which spreads object-store LIST
+        # calls across executors
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

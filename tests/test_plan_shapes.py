@@ -6,6 +6,10 @@ single-partition global window in the forecast id stamping."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from sales_forecast_mlops_at_scale_spark.plans import all_queries
 
 from .conftest import SMOKE_SF_DIR
@@ -543,3 +547,64 @@ def test_partition_prune_reads_only_matching_date_dirs(spark):
     plan = _executed_plan(q.fn(spark, SMOKE_SF_DIR))
     pf = plan.split("PartitionFilters: ", 1)[1].splitlines()[0]
     assert "date" in pf and ">=" in pf, pf
+
+
+def _jobs_in_group(spark, group: str, action) -> list[int]:
+    """Run ``action()`` under job group ``group``; return the group's job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("model_spec", ["seasonal_naive", "moving_average"])
+@pytest.mark.parametrize("stage", ["train_groups", "forecast_groups"])
+def test_grouped_map_keeps_its_partition_count(spark, stage, model_spec):
+    # AQE sizes shuffle partitions by bytes; a model stage is small in
+    # bytes and heavy in Python, so a coalesced read would run every
+    # group in ONE task.  The grouped map's own exchange must carry the
+    # session's partition count through to the Python stage.
+    from sales_forecast_mlops_at_scale_spark import ml
+    from sales_forecast_mlops_at_scale_spark.fixtures import synthetic_sales
+    from sales_forecast_mlops_at_scale_spark.session import FIXED_CLOCK
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sales = synthetic_sales(spark, n_stores=4, n_days=60, as_of=FIXED_CLOCK.as_of)
+    if stage == "train_groups":
+        df = ml.train_groups(sales, model_spec=model_spec)
+    else:
+        df = ml.forecast_groups(
+            sales, horizon_start=FIXED_CLOCK.as_of, model_spec=model_spec
+        )
+    # collect runs df's own plan, so AQE finalizes it
+    jobs = _jobs_in_group(spark, f"grouped-map-{stage}-{model_spec}", df.collect)
+    # the final plan only: AQE's toString also repeats the initial plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    exchanges = re.findall(r"Exchange hashpartitioning\(.*\)", plan)
+    assert len(exchanges) == 1, plan
+    assert exchanges[0].endswith(f", {n})"), plan
+    assert "AQEShuffleRead coalesced" not in plan, plan
+    tracker = spark.sparkContext.statusTracker()
+    tasks = {
+        sid: tracker.getStageInfo(sid).numTasks
+        for jid in jobs
+        for sid in tracker.getJobInfo(jid).stageIds
+    }
+    assert tasks[max(tasks)] == n, tasks  # the last stage runs the groups
+
+
+def test_local_master_lists_partitions_without_a_job(spark, tmp_path):
+    # a 40-date warehouse read starts one job (the schema's footer read),
+    # not an extra parallel listing job over the date directories
+    root = str(tmp_path / "warehouse")
+    spark.range(40).selectExpr(
+        "date_add(DATE'2026-01-01', CAST(id AS INT)) AS date", "id AS v"
+    ).write.partitionBy("date").parquet(root)
+    jobs = _jobs_in_group(
+        spark, "partition-listing", lambda: spark.read.parquet(root)
+    )
+    assert len(jobs) == 1, jobs
