@@ -4,10 +4,14 @@ Ray task fan-out + HTTP forecast service (SURVEY.md §2.9 U2-U6).
 One Prophet model per (store, product) in the reference becomes one
 ``applyInPandas`` group here: the shuffle IS the fan-out, executors ARE the
 workers, and the 1,115-model weekly run is a single Spark job with
-group-level parallelism bounded only by cluster cores.
+group-level parallelism bounded only by cluster cores.  The weekly run
+trains and forecasts in one such job (``fused.fit_forecast_groups``): one
+row per group carrying its metrics and its horizon forecast, from which
+the metrics and the (optionally rmse-gated) forecast rows are JVM
+projections.
 """
 
-from .fused import gated_forecast_groups
+from .fused import explode_forecasts, fit_forecast_groups, gated_forecast_groups
 from .incremental import (
     delta_fingerprints,
     incremental_train,
@@ -23,6 +27,8 @@ __all__ = [
     "DEFAULT_MAX_RMSE",
     "delta_fingerprints",
     "SeasonalNaiveModel",
+    "explode_forecasts",
+    "fit_forecast_groups",
     "forecast_groups",
     "gate_report",
     "gate_series",

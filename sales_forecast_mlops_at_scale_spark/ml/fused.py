@@ -1,50 +1,199 @@
-"""Fused train → gate → predict in ONE grouped pass.
+"""Fused grouped passes: one grouped map where the composed pipeline
+runs two.
 
-The composed pipeline (``train_groups`` → ``gate_series`` →
-``forecast_groups``) is the right shape when metrics must be *persisted*
-(the reference registers them in MLflow,
-``services/training-service/app/train_utils.py:125-149``) — but when the
-only consumer of the metrics is the quality gate itself
+**Train + forecast** (:func:`fit_forecast_groups`, the weekly run).  The
+weekly DAG trains one model per (store, product) and then forecasts the
+next days from the same history (``train_predict_to_db_dag.py:76-83``).
+Composed, that is two grouped-map jobs over the same series —
+``train_groups`` for the metrics, ``forecast_groups`` for the forecasts —
+each scanning the input, exchanging and sorting the series, and paying a
+Python stage's fixed cost.  :func:`fit_forecast_groups` runs both
+kernels on the same group inside one stage and emits ONE row per group:
+the ``TRAIN_METRICS`` columns plus the horizon's ``forecast_sale`` /
+``lower_ci`` / ``upper_ci`` as three ``array<int>`` columns.  Everything
+downstream is JVM work on those rows: the metrics are a projection, the
+model-quality gate is a ``filter(rmse <= max_rmse)``, and
+:func:`explode_forecasts` turns each row back into horizon forecast rows
+(``posexplode(arrays_zip(...))``, ``date_add(horizon_start, pos)``).
+``pipeline.run_weekly`` materializes the rows once and derives both
+outputs from them.  The kernels are the existing ones — the
+``sorted_group_map`` batch kernels of ``ml/train.py`` and
+``ml/predict.py`` for the seasonal-naive model, ``make_train_fn`` and
+``make_predict_fn`` for per-group models — so the output equals the
+composed pipeline's row for row (``tests/test_domain_pipeline.py``).
+
+**CV → gate → predict** (:func:`gated_forecast_groups`).  When the only
+consumer of the metrics is the quality gate
 (``services/forecast-service/app/handlers/mlflow.py:32-40``), composing
-them costs TWO grouped-map shuffles of the same series plus a semi-join.
+train → semi-join → predict costs TWO grouped-map shuffles of the same
+series plus a semi-join.  This operator runs walk-forward CV, the rmse
+gate, and the horizon forecast inside a single grouped map: one shuffle
+on the group keys, and rejected groups emit zero rows without any
+predict work being scheduled.  It keeps its own kernels rather than
+filtering :func:`fit_forecast_groups`' rows, because they compute only
+the rmse and forecast only the survivors: the filtered train + forecast
+pass, which also computes mape / mae / medae and every group's
+forecast, measured slower on ``q_gated_forecast`` (sf0.1, cold).  The
+output is byte-identical to the composed pipeline — which is exactly
+what the oracle checks (``plans/ml_queries.py::_GATED_SQL`` derives the
+gate from the *composed* definition).
 
-This operator runs walk-forward CV, the rmse gate, and the horizon
-forecast inside a single ``applyInPandas`` group function: one shuffle on
-the group keys, one Arrow round-trip, and rejected groups emit zero rows
-without any predict work being scheduled.  At 100 TB this halves the
-dominant cost of the weekly job (the series shuffle) while producing
-byte-identical output to the composed pipeline — which is exactly what
-the oracle checks (``plans/ml_queries.py::_GATED_SQL`` derives the gate
-from the *composed* definition).
-
-Gate semantics are replicated exactly from the composed path:
-the mean CV rmse is rounded half-away-from-zero to 4 decimals *before*
-the ``<= max_rmse`` comparison (``train.train_fn`` rounds its emitted
-metrics), and a group with too little history for any CV split (NULL
-rmse) fails the gate — an unevaluated model is not a trusted model.
+Gate semantics are the composed path's in both: the mean CV rmse is
+rounded half-away-from-zero to 4 decimals *before* the ``<= max_rmse``
+comparison (``train.train_fn`` rounds its emitted metrics), and a group
+with too little history for any CV split (NULL rmse) fails the gate —
+an unevaluated model is not a trusted model.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import math
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-
-import math
-
-import numpy as np
+from pyspark.sql import functions as F
 
 from ..operators.groupmap import hash_partition, sorted_group_map
+from ..schemas import TRAIN_METRICS
 from .models import MODEL_NAME_FMT, SeasonalNaiveModel, get_model
+from .predict import make_predict_batch_kernel, make_predict_fn
 from .train import (
     _metrics,
     _round_half_away,
     _seasonal_naive_fold_preds,
     _seasonal_naive_lut,
     _split_bounds,
+    _with_time_cols,
+    make_train_batch_kernel,
+    make_train_fn,
 )
+
+#: the forecast columns carried as one ``array<int>`` per group
+FORECAST_ARRAYS = ("forecast_sale", "lower_ci", "upper_ci")
+
+
+def _attach_horizon(
+    metrics: pd.DataFrame, forecasts: pd.DataFrame, horizon_days: int
+) -> pd.DataFrame:
+    """Fold the forecast rows (``horizon_days`` per group, in the metrics'
+    group order, date-ascending) into list columns of the metrics rows."""
+    for c in FORECAST_ARRAYS:
+        metrics[c] = list(forecasts[c].to_numpy().reshape(-1, horizon_days))
+    return metrics
+
+
+def make_fit_forecast_batch_kernel(
+    keys: Sequence[str],
+    horizon_start: _dt.date,
+    horizon_days: int,
+    *,
+    n_splits: int = 5,
+    y_col: str = "y",
+):
+    """Batch kernel for :func:`operators.groupmap.sorted_group_map`: the
+    train and predict batch kernels on the same sorted batch, one fused
+    row per group."""
+    train = make_train_batch_kernel(keys, n_splits=n_splits, y_col=y_col)
+    predict = make_predict_batch_kernel(keys, horizon_start, horizon_days, y_col=y_col)
+
+    def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
+        return _attach_horizon(
+            train(pdf, starts, ends), predict(pdf, starts, ends), horizon_days
+        )
+
+    return kernel
+
+
+def make_fit_forecast_fn(
+    keys: Sequence[str],
+    horizon_start: _dt.date,
+    horizon_days: int,
+    *,
+    model_spec: str = "seasonal_naive",
+    n_splits: int = 5,
+    date_col: str = "ds",
+    y_col: str = "y",
+):
+    """Per-group function for ``applyInPandas``: ``make_train_fn`` and
+    ``make_predict_fn`` on the same pandas group, one fused row out."""
+    train_fn = make_train_fn(
+        keys, model_spec=model_spec, n_splits=n_splits, date_col=date_col, y_col=y_col
+    )
+    predict_fn = make_predict_fn(
+        keys, horizon_start, horizon_days,
+        model_spec=model_spec, date_col=date_col, y_col=y_col,
+    )
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _attach_horizon(train_fn(pdf), predict_fn(pdf), horizon_days)
+
+    return fn
+
+
+def fit_forecast_groups(
+    sales: DataFrame,
+    keys: Sequence[str] = ("store", "productname"),
+    *,
+    horizon_start: _dt.date,
+    horizon_days: int = 7,
+    model_spec: str = "seasonal_naive",
+    n_splits: int = 5,
+    date_col: str = "date",
+    y_col: str = "sales",
+) -> DataFrame:
+    """One row per key group: ``train_groups``' metrics plus the
+    ``forecast_groups`` horizon as three ``array<int>`` columns (lazy).
+    Routing mirrors ``train_groups``: batch-amortized ``sorted_group_map``
+    for the deterministic model, per-group ``applyInPandas`` for heavy
+    models."""
+    from pyspark.sql import types as T
+
+    key_fields = [sales.schema[k] for k in keys]
+    metric_fields = [f for f in TRAIN_METRICS.fields if f.name not in ("store", "productname")]
+    array_fields = [T.StructField(c, T.ArrayType(T.IntegerType())) for c in FORECAST_ARRAYS]
+    schema = T.StructType(key_fields + metric_fields + array_fields)
+    timed = _with_time_cols(sales, date_col)
+    if model_spec == "seasonal_naive":
+        kernel = make_fit_forecast_batch_kernel(
+            keys, horizon_start, horizon_days, n_splits=n_splits, y_col=y_col
+        )
+        # guide §4.1: prune to the kernel's columns — the raw date column
+        # is unused on the fast path (see ml/train.train_groups)
+        timed = timed.select(*keys, y_col, "__dow", "__ord")
+        return sorted_group_map(timed, keys, kernel, schema, order_cols=("__ord",))
+    fn = make_fit_forecast_fn(
+        keys,
+        horizon_start,
+        horizon_days,
+        model_spec=model_spec,
+        n_splits=n_splits,
+        date_col=date_col,
+        y_col=y_col,
+    )
+    return hash_partition(timed, keys).groupBy(*keys).applyInPandas(fn, schema)
+
+
+def explode_forecasts(
+    fused: DataFrame, keys: Sequence[str], horizon_start: _dt.date
+) -> DataFrame:
+    """The ``forecast_groups`` rows of fused rows, in the JVM: one row per
+    horizon day, ``forecast_date = horizon_start + pos``."""
+    return fused.select(
+        *keys,
+        "model_name",
+        "model_version",
+        F.posexplode(F.arrays_zip(*FORECAST_ARRAYS)).alias("pos", "f"),
+    ).select(
+        *keys,
+        F.date_add(F.lit(horizon_start), F.col("pos")).alias("forecast_date"),
+        *(F.col(f"f.{c}").alias(c) for c in FORECAST_ARRAYS),
+        "model_name",
+        "model_version",
+    )
+
 
 _OUT_COLS = (
     "forecast_date",
@@ -269,8 +418,6 @@ def gated_forecast_groups(
         T.StructField("model_version", T.StringType()),
     ]
     schema = T.StructType(key_fields + out_fields)
-    from .train import _with_time_cols
-
     timed = _with_time_cols(sales, date_col)
     if model_spec == "seasonal_naive":
         kernel = make_gated_batch_kernel(

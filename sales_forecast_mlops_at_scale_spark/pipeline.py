@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ml import forecast_groups, gate_series, train_groups
+from .ml.fused import FORECAST_ARRAYS, explode_forecasts, fit_forecast_groups
 from .operators import latest_per_key, top_n_per_group
 from .session import Clock
 
@@ -31,40 +31,50 @@ def run_weekly(
     model_spec: str = "seasonal_naive",
     max_rmse: float | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """The weekly DAG (§3.2) as one job pair: (metrics, forecasts).
+    """The weekly DAG (§3.2) as ONE grouped pass: (metrics, forecasts).
 
     - filter last ``train_window_days`` (reference pulls ``last_days=120``,
       ray_train_all_job.py:23-25) — prunes date partitions at the scan
-    - grouped-map CV training → metrics table (replaces 1,115 Ray tasks)
-    - model-quality gate (U6), opt-in via ``max_rmse``: groups whose CV
-      rmse exceeds the bar are pruned before any predict work is
-      scheduled.  The reference checks rmse > 1000 at serve time but only
-      logs the failure (forecast-service/app/handlers/mlflow.py:32-40);
-      pass ``max_rmse=ml.DEFAULT_MAX_RMSE`` to make that check an actual
-      hard gate — ``None`` (default) reproduces the reference's
-      serve-anyway behavior
-    - grouped-map forecast for the next ``horizon_days`` → forecast rows
-      with generation-stamped ids (feeding the W1 dedup on re-runs)
+    - one grouped map (``ml.fit_forecast_groups``, replacing 1,115 Ray
+      tasks) runs walk-forward CV and the ``horizon_days`` forecast on
+      the same group: one scan, one exchange and sort, one Python stage.
+      Its rows (metrics + three forecast arrays per group) are
+      materialized ONCE, here, with ``localCheckpoint(eager=True)``
+    - both outputs are JVM projections of those rows: ``metrics`` drops
+      the arrays; ``forecasts`` explodes them into rows with
+      generation-stamped ids (feeding the W1 dedup on re-runs)
+    - model-quality gate (U6), opt-in via ``max_rmse``: a filter on the
+      fused rows, so groups whose CV rmse exceeds the bar (or is NULL)
+      emit no forecast rows; ``metrics`` keeps every group.  The
+      reference checks rmse > 1000 at serve time but only logs the
+      failure (forecast-service/app/handlers/mlflow.py:32-40); pass
+      ``max_rmse=ml.DEFAULT_MAX_RMSE`` to make that check an actual hard
+      gate — ``None`` (default) reproduces the reference's serve-anyway
+      behavior
+
+    Trade-off of the checkpoint: it cuts lineage, so both outputs read
+    the same materialized rows (never a recomputation over newer data)
+    and the caller's two writes run no model work; but its blocks live
+    on the executors that computed them, so on a cluster an executor
+    lost between the two writes fails the second write instead of
+    recomputing it.  The blocks are not a CacheManager entry: Spark's
+    ContextCleaner frees them once both frames are dropped.
     """
+    keys = ("store", "productname")
     recent = sales.filter(
         (F.col("date") >= F.date_sub(F.lit(clock.as_of), train_window_days))
         & (F.col("open") == 1)
     )
-    metrics = train_groups(recent, ("store", "productname"), model_spec=model_spec)
-    gated = recent
-    if max_rmse is not None:
-        # metrics feeds both the returned frame and the gate's semi-join;
-        # it is one small row per group, so pin it rather than re-running
-        # the grouped-map CV job for each consumer
-        metrics = metrics.cache()
-        gated = gate_series(recent, metrics, ("store", "productname"), max_rmse=max_rmse)
-    forecasts = forecast_groups(
-        gated,
-        ("store", "productname"),
+    fused = fit_forecast_groups(
+        recent,
+        keys,
         horizon_start=clock.as_of,
         horizon_days=horizon_days,
         model_spec=model_spec,
-    )
+    ).localCheckpoint(eager=True)
+    metrics = fused.drop(*FORECAST_ARRAYS)
+    if max_rmse is not None:
+        fused = fused.filter(F.col("rmse") <= max_rmse)
     # Surrogate row ids WITHOUT a global total order: the reference's
     # Postgres sequence is replaced by the composite key
     # (created_on, id) — ``created_on`` stamps the generation, ``id`` is
@@ -75,7 +85,8 @@ def run_weekly(
     # needs a total order — latest-per-key dedup only compares versions
     # *within* a (store, product, forecast_date) partition.
     forecasts = (
-        forecasts.withColumn("id", F.monotonically_increasing_id())
+        explode_forecasts(fused, keys, clock.as_of)
+        .withColumn("id", F.monotonically_increasing_id())
         .withColumn("created_on", F.lit(clock.as_of).cast("timestamp"))
     )
     return metrics, forecasts

@@ -170,9 +170,29 @@ def pytest_configure(config):
     )
 
 
+def _stale_slow_ids(nodeids, partial_files=()) -> list[str]:
+    """Slow-tier ids naming a collected test file but no collected test:
+    a renamed or deleted slow test, whose replacement would otherwise run
+    in the default tier unnoticed.  ``partial_files`` were collected by
+    node id (``file::test``), so their missing ids prove nothing."""
+    collected = set(nodeids)
+    files = {nid.split("::", 1)[0] for nid in collected} - set(partial_files)
+    return sorted(
+        i for i in _SLOW_NODE_IDS if i.split("::", 1)[0] in files and i not in collected
+    )
+
+
 def pytest_collection_modifyitems(config, items):
+    nids = []
     for item in items:
         # nodeid is relative to rootdir: "tests/test_x.py::test_y[param]"
         nid = item.nodeid.split("tests/", 1)[-1]
+        nids.append(nid)
         if nid in _SLOW_NODE_IDS:
             item.add_marker(pytest.mark.slow)
+    partial = {os.path.basename(a.split("::", 1)[0]) for a in config.args if "::" in a}
+    stale = _stale_slow_ids(nids, partial)
+    if stale:
+        raise pytest.UsageError(
+            "_SLOW_NODE_IDS names tests that were not collected: " + ", ".join(stale)
+        )

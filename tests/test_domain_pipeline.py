@@ -80,6 +80,49 @@ def test_run_weekly_end_to_end(spark, sales):
     assert f.select("id").distinct().count() == 12 * 7
 
 
+@pytest.mark.parametrize("gated", [False, True], ids=["ungated", "median_gate"])
+@pytest.mark.parametrize("model_spec", ["seasonal_naive", "moving_average"])
+def test_fused_run_weekly_equals_composed_pipeline(spark, sales, model_spec, gated):
+    """run_weekly's one grouped pass must give exactly the rows of the
+    composed train_groups → gate_series → forecast_groups pipeline: the
+    metrics with floats compared exactly, the forecasts without their
+    per-run id / created_on stamps."""
+    from sales_forecast_mlops_at_scale_spark.ml import (
+        forecast_groups,
+        gate_series,
+        train_groups,
+    )
+
+    keys = ("store", "productname")
+    recent = sales.filter(
+        (F.col("date") >= F.date_sub(F.lit(AS_OF), 120)) & (F.col("open") == 1)
+    )
+    want_metrics = train_groups(recent, keys, model_spec=model_spec)
+    max_rmse, served = None, recent
+    if gated:
+        max_rmse = want_metrics.approxQuantile("rmse", [0.5], 0.0)[0]
+        served = gate_series(recent, want_metrics, keys, max_rmse=max_rmse)
+    want_forecasts = forecast_groups(
+        served, keys, horizon_start=AS_OF, model_spec=model_spec
+    )
+
+    metrics, forecasts = run_weekly(
+        sales, clock=FIXED_CLOCK, model_spec=model_spec, max_rmse=max_rmse
+    )
+    forecasts = forecasts.drop("id", "created_on")
+    assert metrics.columns == want_metrics.columns
+    assert forecasts.columns == want_forecasts.columns
+    got_m, want_m = sorted(metrics.collect()), sorted(want_metrics.collect())
+    assert [tuple(r) for r in got_m] == [tuple(r) for r in want_m]
+    got_f, want_f = sorted(forecasts.collect()), sorted(want_forecasts.collect())
+    assert [tuple(r) for r in got_f] == [tuple(r) for r in want_f]
+    n_served = len({(r.store, r.productname) for r in got_f})
+    if gated:
+        assert 0 < n_served < len(got_m)
+    else:
+        assert n_served == len(got_m)
+
+
 def test_quality_gate_prunes_bad_models(spark, sales):
     """U6: a tight rmse bar must drop whole groups from the forecast
     output while the default bar (1000, the reference's) passes all."""

@@ -561,7 +561,9 @@ def _jobs_in_group(spark, group: str, action) -> list[int]:
 
 
 @pytest.mark.parametrize("model_spec", ["seasonal_naive", "moving_average"])
-@pytest.mark.parametrize("stage", ["train_groups", "forecast_groups"])
+@pytest.mark.parametrize(
+    "stage", ["train_groups", "forecast_groups", "fit_forecast_groups"]
+)
 def test_grouped_map_keeps_its_partition_count(spark, stage, model_spec):
     # AQE sizes shuffle partitions by bytes; a model stage is small in
     # bytes and heavy in Python, so a coalesced read would run every
@@ -576,7 +578,7 @@ def test_grouped_map_keeps_its_partition_count(spark, stage, model_spec):
     if stage == "train_groups":
         df = ml.train_groups(sales, model_spec=model_spec)
     else:
-        df = ml.forecast_groups(
+        df = getattr(ml, stage)(
             sales, horizon_start=FIXED_CLOCK.as_of, model_spec=model_spec
         )
     # collect runs df's own plan, so AQE finalizes it
@@ -595,6 +597,64 @@ def test_grouped_map_keeps_its_partition_count(spark, stage, model_spec):
         for sid in tracker.getJobInfo(jid).stageIds
     }
     assert tasks[max(tasks)] == n, tasks  # the last stage runs the groups
+
+
+def _stage_operators(spark, stage_id: int) -> set[str]:
+    """Operator scopes (``MapInPandas``, ``Exchange``, ...) of a stage's
+    RDD graph, as the UI's stage DAG shows them."""
+    graph = spark.sparkContext._jsc.sc().statusStore().operationGraphForStage(stage_id)
+    names, todo = set(), [graph.rootCluster()]
+    while todo:
+        it = todo.pop().childClusters().iterator()
+        while it.hasNext():
+            c = it.next()
+            names.add(re.sub(r" \(\d+\)$", "", c.name()))
+            todo.append(c)
+    return names
+
+
+@pytest.mark.parametrize("max_rmse", [None, 1000.0], ids=["ungated", "gated"])
+@pytest.mark.parametrize("model_spec", ["seasonal_naive", "moving_average"])
+def test_run_weekly_is_one_grouped_pass(spark, model_spec, max_rmse):
+    # train and forecast share ONE grouped map, materialized inside
+    # run_weekly: one exchange on the keys and one Python stage run
+    # there, the two outputs are JVM projections of its rows, and no
+    # CacheManager entry is left behind
+    from sales_forecast_mlops_at_scale_spark.fixtures import synthetic_sales
+    from sales_forecast_mlops_at_scale_spark.pipeline import run_weekly
+    from sales_forecast_mlops_at_scale_spark.session import FIXED_CLOCK
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sales = synthetic_sales(spark, n_stores=4, n_days=60, as_of=FIXED_CLOCK.as_of)
+    spark.catalog.clearCache()
+    out = {}
+
+    def weekly():
+        out["metrics"], out["forecasts"] = run_weekly(
+            sales, clock=FIXED_CLOCK, model_spec=model_spec, max_rmse=max_rmse
+        )
+
+    jobs = _jobs_in_group(spark, f"run-weekly-{model_spec}-{max_rmse}", weekly)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    ran = {
+        sid
+        for jid in jobs
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid).numCompletedTasks > 0
+    }
+    ops = {sid: _stage_operators(spark, sid) for sid in ran}
+    python = [s for s in ran if ops[s] & {"MapInPandas", "FlatMapGroupsInPandas"}]
+    assert len(python) == 1, ops
+    assert tracker.getStageInfo(python[0]).numTasks == n
+    # the only other stage that ran is the map side of the one exchange
+    others = [s for s in ran if s not in python]
+    assert len(others) == 1 and "Exchange" in ops[others[0]], ops
+    for name in ("metrics", "forecasts"):
+        plan = _executed_plan(out[name])
+        assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan, plan
+        assert not re.search(r"Exchange hashpartitioning\(store", plan), plan
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_local_master_lists_partitions_without_a_job(spark, tmp_path):
