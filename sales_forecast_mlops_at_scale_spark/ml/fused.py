@@ -74,6 +74,11 @@ from .train import (
 #: the forecast columns carried as one ``array<int>`` per group
 FORECAST_ARRAYS = ("forecast_sale", "lower_ci", "upper_ci")
 
+# the weekly run's input columns (the warehouse's ``sales`` table);
+# walk-forward CV uses the train kernels' default 5 splits
+_DATE_COL = "date"
+_Y_COL = "sales"
+
 
 def _attach_horizon(
     metrics: pd.DataFrame, forecasts: pd.DataFrame, horizon_days: int
@@ -86,18 +91,13 @@ def _attach_horizon(
 
 
 def make_fit_forecast_batch_kernel(
-    keys: Sequence[str],
-    horizon_start: _dt.date,
-    horizon_days: int,
-    *,
-    n_splits: int = 5,
-    y_col: str = "y",
+    keys: Sequence[str], horizon_start: _dt.date, horizon_days: int
 ):
     """Batch kernel for :func:`operators.groupmap.sorted_group_map`: the
     train and predict batch kernels on the same sorted batch, one fused
     row per group."""
-    train = make_train_batch_kernel(keys, n_splits=n_splits, y_col=y_col)
-    predict = make_predict_batch_kernel(keys, horizon_start, horizon_days, y_col=y_col)
+    train = make_train_batch_kernel(keys, y_col=_Y_COL)
+    predict = make_predict_batch_kernel(keys, horizon_start, horizon_days, y_col=_Y_COL)
 
     def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
         return _attach_horizon(
@@ -113,18 +113,15 @@ def make_fit_forecast_fn(
     horizon_days: int,
     *,
     model_spec: str = "seasonal_naive",
-    n_splits: int = 5,
-    date_col: str = "ds",
-    y_col: str = "y",
 ):
     """Per-group function for ``applyInPandas``: ``make_train_fn`` and
     ``make_predict_fn`` on the same pandas group, one fused row out."""
     train_fn = make_train_fn(
-        keys, model_spec=model_spec, n_splits=n_splits, date_col=date_col, y_col=y_col
+        keys, model_spec=model_spec, date_col=_DATE_COL, y_col=_Y_COL
     )
     predict_fn = make_predict_fn(
         keys, horizon_start, horizon_days,
-        model_spec=model_spec, date_col=date_col, y_col=y_col,
+        model_spec=model_spec, date_col=_DATE_COL, y_col=_Y_COL,
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -140,11 +137,9 @@ def fit_forecast_groups(
     horizon_start: _dt.date,
     horizon_days: int = 7,
     model_spec: str = "seasonal_naive",
-    n_splits: int = 5,
-    date_col: str = "date",
-    y_col: str = "sales",
 ) -> DataFrame:
-    """One row per key group: ``train_groups``' metrics plus the
+    """One row per key group of a ``sales``-shaped frame (``date`` /
+    ``sales`` columns): ``train_groups``' metrics plus the
     ``forecast_groups`` horizon as three ``array<int>`` columns (lazy).
     Routing mirrors ``train_groups``: batch-amortized ``sorted_group_map``
     for the deterministic model, per-group ``applyInPandas`` for heavy
@@ -155,24 +150,14 @@ def fit_forecast_groups(
     metric_fields = [f for f in TRAIN_METRICS.fields if f.name not in ("store", "productname")]
     array_fields = [T.StructField(c, T.ArrayType(T.IntegerType())) for c in FORECAST_ARRAYS]
     schema = T.StructType(key_fields + metric_fields + array_fields)
-    timed = _with_time_cols(sales, date_col)
+    timed = _with_time_cols(sales, _DATE_COL)
     if model_spec == "seasonal_naive":
-        kernel = make_fit_forecast_batch_kernel(
-            keys, horizon_start, horizon_days, n_splits=n_splits, y_col=y_col
-        )
+        kernel = make_fit_forecast_batch_kernel(keys, horizon_start, horizon_days)
         # guide §4.1: prune to the kernel's columns — the raw date column
         # is unused on the fast path (see ml/train.train_groups)
-        timed = timed.select(*keys, y_col, "__dow", "__ord")
+        timed = timed.select(*keys, _Y_COL, "__dow", "__ord")
         return sorted_group_map(timed, keys, kernel, schema, order_cols=("__ord",))
-    fn = make_fit_forecast_fn(
-        keys,
-        horizon_start,
-        horizon_days,
-        model_spec=model_spec,
-        n_splits=n_splits,
-        date_col=date_col,
-        y_col=y_col,
-    )
+    fn = make_fit_forecast_fn(keys, horizon_start, horizon_days, model_spec=model_spec)
     return hash_partition(timed, keys).groupBy(*keys).applyInPandas(fn, schema)
 
 

@@ -190,6 +190,11 @@ def pytest_collection_modifyitems(config, items):
         nids.append(nid)
         if nid in _SLOW_NODE_IDS:
             item.add_marker(pytest.mark.slow)
+    # --lf keeps only last run's failures of a file and --sw drops the
+    # tests before the last failure, both before this hook runs, so a
+    # slow id missing from items proves nothing
+    if config.getoption("lf", False) or config.getoption("stepwise", False):
+        return
     partial = {os.path.basename(a.split("::", 1)[0]) for a in config.args if "::" in a}
     stale = _stale_slow_ids(nids, partial)
     if stale:
