@@ -7,7 +7,7 @@ refuses to serve when ``rmse > 1000``
 — the check happens per HTTP request, after pulling metric history from
 MLflow).  Here the gate is a DataFrame operator applied *before* any
 predict work is scheduled: a semi-join of the training series against the
-passing metric keys, so rejected groups never reach ``applyInPandas`` at
+passing metric keys, so rejected groups never reach the grouped map at
 all — at 100 TB that prunes whole shuffle partitions instead of loading a
 model and then refusing to use it.
 

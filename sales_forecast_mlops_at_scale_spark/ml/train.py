@@ -1,9 +1,11 @@
 """Grouped-map training with walk-forward cross-validation.
 
 Re-expresses the reference's weekly training job (SURVEY.md §3.2) — Ray
-task per (store, product), ``train_utils.py:72-151`` — as ONE Spark job:
-
-    sales.groupBy(keys).applyInPandas(train_fn, TRAIN_METRICS)
+task per (store, product), ``train_utils.py:72-151`` — as ONE Spark job,
+routed by :func:`_grouped_model_pass`: the seasonal-naive model runs as
+a batch kernel over sorted partitions
+(``operators/groupmap.sorted_group_map``), any other model as one
+``applyInPandas`` call per group with the model from ``get_model``.
 
 The reference's ``ray.put(df)`` broadcast of the full frame to 1,115 tasks
 (``ray_train_all_job.py:37``) becomes the groupBy shuffle: each executor
@@ -30,6 +32,7 @@ from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from ..operators.groupmap import hash_partition, sorted_group_map
 from ..schemas import TRAIN_METRICS
@@ -78,22 +81,11 @@ def _round_half_away(x: float, ndigits: int = 4) -> float:
     return math.copysign(math.floor(abs(x) * p + 0.5) / p, x)
 
 
-def _metrics(y: pd.Series, yhat: pd.Series) -> tuple[float, float, float, float]:
-    """RMSE / MAPE / MAE / MedAE — the reference's four metrics
-    (train_utils.py:38-53) in plain pandas."""
-    err = y.astype(float) - yhat.astype(float)
-    abs_err = err.abs()
-    rmse = float(math.sqrt((err * err).mean()))
-    nonzero = y.astype(float) != 0
-    mape = float((abs_err[nonzero] / y.astype(float)[nonzero]).mean()) if nonzero.any() else 0.0
-    return rmse, mape, float(abs_err.mean()), float(abs_err.median())
-
-
 def _metrics_np(y, yhat) -> tuple[float, float, float, float]:
-    """``_metrics`` on raw float64 numpy arrays — identical arithmetic
-    (same element order, same pairwise summation, nan-free inputs), none
-    of the pandas Series construction overhead that dominates grouped-map
-    wall time at thousands of groups × folds."""
+    """RMSE / MAPE / MAE / MedAE — the reference's four metrics
+    (train_utils.py:38-53) — on raw float64 numpy arrays: none of the
+    pandas Series construction overhead that dominates grouped-map wall
+    time at thousands of groups × folds."""
     import numpy as np
 
     err = y - yhat
@@ -104,34 +96,12 @@ def _metrics_np(y, yhat) -> tuple[float, float, float, float]:
     return rmse, mape, float(abs_err.mean()), float(np.median(abs_err))
 
 
-def _seasonal_naive_fold_preds(
-    ys, dows, train_end: int, test_end: int
-):
-    """Vectorized fold prediction for the seasonal-naive model: for each
-    test row, the last same-weekday y within the train window, else the
-    train-window mean; truncated to int.  Pure numpy — no per-row Python,
-    no pandas groupby per fit (the naive per-fold ``model.fit`` costs a
-    pandas groupby + sort per fold per group, which dominated the job at
-    3,000 groups)."""
-    import numpy as np
-
-    mean = float(ys[:train_end].mean())
-    lut = np.full(7, mean)
-    train_dows = dows[:train_end]
-    for wd in range(7):
-        pos = np.nonzero(train_dows == wd)[0]
-        if len(pos):
-            lut[wd] = ys[pos[-1]]
-    return lut[dows[train_end:test_end]].astype(int)
-
-
 def _seasonal_naive_lut(ys, dows):
     """Fitted seasonal-naive model as a 7-slot numpy lookup: latest y per
     weekday over the (time-ordered) history, overall mean for unseen
     weekdays.  The vectorized twin of ``SeasonalNaiveModel.fit`` — used by
-    the grouped-map predict paths to avoid a pandas sort + to_datetime +
-    groupby per group (which dominates wall time at thousands of
-    groups)."""
+    the batch kernels to avoid a pandas sort + to_datetime + groupby per
+    group (which dominates wall time at thousands of groups)."""
     import numpy as np
 
     mean = float(ys.mean()) if len(ys) else 0.0
@@ -144,12 +114,12 @@ def _seasonal_naive_lut(ys, dows):
 
 
 def _fold_preds_from_positions(ys, dows, wd_pos, train_end: int, test_end: int):
-    """``_seasonal_naive_fold_preds`` with the per-weekday position index
-    precomputed ONCE per group instead of 7 ``np.nonzero`` scans per fold:
+    """Seasonal-naive predictions for one CV fold: for each test row, the
+    last same-weekday y within the train window, else the train-window
+    mean; truncated to int (``SeasonalNaiveModel`` fit on the window).
+    ``wd_pos`` holds each weekday's row positions, computed ONCE per group:
     the last same-weekday observation inside the expanding train window is
-    found by ``searchsorted`` on the (sorted) position list.  Selects the
-    identical element and performs the identical float arithmetic — the
-    oracle hashes cannot move."""
+    found by ``searchsorted`` on the (sorted) position list."""
     import numpy as np
 
     mean = float(ys[:train_end].mean())
@@ -162,6 +132,14 @@ def _fold_preds_from_positions(ys, dows, wd_pos, train_end: int, test_end: int):
     return lut[dows[train_end:test_end]].astype(int)
 
 
+def _model_names(pdf: pd.DataFrame, keys: Sequence[str], starts) -> list[str]:
+    """Registry name (``MODEL_NAME_FMT``) of each batch group whose first
+    row is at ``starts``."""
+    stores = pdf[keys[0]].to_numpy()[starts]
+    products = pdf[keys[1]].to_numpy()[starts] if len(keys) > 1 else [""] * len(starts)
+    return [MODEL_NAME_FMT.format(store=s_, product=p_) for s_, p_ in zip(stores, products)]
+
+
 def make_train_batch_kernel(
     keys: Sequence[str],
     *,
@@ -169,12 +147,12 @@ def make_train_batch_kernel(
     y_col: str = "y",
 ):
     """Batch kernel for :func:`operators.groupmap.sorted_group_map`: the
-    walk-forward-CV training of :func:`make_train_fn`'s fast path, applied
-    to EVERY group in an Arrow batch with one output frame per batch.
-    Rows arrive pre-sorted by ``__ord`` within each group (the operator's
-    partition sort), so the per-group argsort disappears too.  Arithmetic
-    is call-for-call identical to ``train_fn`` — property-tested equal and
-    hash-checked by the same DuckDB oracles."""
+    seasonal-naive walk-forward CV of :func:`make_train_fn`, applied to
+    EVERY group in an Arrow batch with one output frame per batch.  Rows
+    arrive pre-sorted by ``__ord`` within each group (the operator's
+    partition sort), so no per-group sort runs either.  Property-tested
+    equal to ``make_train_fn`` with ``SeasonalNaiveModel``
+    (``tests/test_groupmap.py``) and hash-checked by the DuckDB oracles."""
     import numpy as np
 
     from .models import SeasonalNaiveModel
@@ -217,23 +195,16 @@ def make_train_batch_kernel(
                 mape_o[gi] = _round_half_away(sum(mapes) / len(mapes), 4)
                 mae_o[gi] = _round_half_away(sum(maes) / len(maes), 4)
                 medae_o[gi] = _round_half_away(sum(medaes) / len(medaes), 4)
-        key_arrs = {k: pdf[k].to_numpy()[starts] for k in keys}
-        stores = key_arrs[keys[0]]
-        products = key_arrs[keys[1]] if len(keys) > 1 else [""] * g
-        names = [
-            MODEL_NAME_FMT.format(store=s_, product=p_)
-            for s_, p_ in zip(stores, products)
-        ]
         return pd.DataFrame(
             {
-                **key_arrs,
+                **{k: pdf[k].to_numpy()[starts] for k in keys},
                 "n_rows": n_rows,
                 "n_splits": splits_out,
                 "rmse": rmse_o,
                 "mape": mape_o,
                 "mae": mae_o,
                 "medae": medae_o,
-                "model_name": names,
+                "model_name": _model_names(pdf, keys, starts),
                 "model_version": version,
             }
         )
@@ -249,46 +220,25 @@ def make_train_fn(
     date_col: str = "ds",
     y_col: str = "y",
 ):
-    """Build the executor-side group function: walk-forward CV + final fit,
-    one TRAIN_METRICS row out per group."""
+    """Build the per-group function for ``applyInPandas``: walk-forward CV
+    of ``get_model(model_spec)``, one TRAIN_METRICS row out per group."""
 
     def train_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         rmses, mapes, maes, medaes = [], [], [], []
-        done_splits = 0
-        fast = model_spec == "seasonal_naive"
         n = len(pdf)
-        if fast and "__ord" in pdf:
-            import numpy as np
-
-            order = np.argsort(pdf["__ord"].to_numpy(), kind="stable")
-            ys = pdf[y_col].to_numpy(dtype=float)[order]
-            dows = pdf["__dow"].to_numpy()[order]
-        elif fast:
-            pdf = pdf.sort_values(date_col).reset_index(drop=True)
-            ys = pdf[y_col].to_numpy(dtype=float)
-            dows = pd.to_datetime(pdf[date_col]).dt.dayofweek.to_numpy()
-        else:
-            pdf = pdf.sort_values(date_col).reset_index(drop=True)
-            history = pd.DataFrame({"ds": pdf[date_col], "y": pdf[y_col]})
+        pdf = pdf.sort_values(date_col).reset_index(drop=True)
+        history = pd.DataFrame({"ds": pdf[date_col], "y": pdf[y_col]})
         for train_end, test_end in _split_bounds(n, n_splits):
             if train_end < 1:
                 continue
-            if fast:
-                yhat = _seasonal_naive_fold_preds(ys, dows, train_end, test_end)
-                r, p, a, m = _metrics_np(
-                    ys[train_end:test_end], yhat.astype(float)
-                )
-            else:
-                model = get_model(model_spec).fit(history.iloc[:train_end])
-                fold = history.iloc[train_end:test_end]
-                yhat = model.predict(fold["ds"])["yhat"].reset_index(drop=True)
-                fold_y = fold["y"].reset_index(drop=True)
-                r, p, a, m = _metrics(fold_y, yhat)
+            model = get_model(model_spec).fit(history.iloc[:train_end])
+            fold = history.iloc[train_end:test_end]
+            yhat = model.predict(fold["ds"])["yhat"]
+            r, p, a, m = _metrics_np(fold["y"].to_numpy(float), yhat.to_numpy(float))
             rmses.append(r)
             mapes.append(p)
             maes.append(a)
             medaes.append(m)
-            done_splits += 1
         # The reference ends with a final full-history fit + MLflow registry
         # push (train_utils.py:125-149).  Our predict path fits-at-predict
         # (see predict.py), so the final fit here would be dead work; the
@@ -303,7 +253,7 @@ def make_train_fn(
                 {
                     **key_vals,
                     "n_rows": n,
-                    "n_splits": done_splits,
+                    "n_splits": len(rmses),
                     "rmse": mean(rmses),
                     "mape": mean(mapes),
                     "mae": mean(maes),
@@ -317,38 +267,43 @@ def make_train_fn(
     return train_fn
 
 
-def train_groups(
+def _keyed_schema(template: T.StructType, df: DataFrame, keys: Sequence[str]) -> T.StructType:
+    """``template`` — an output schema of ``schemas`` keyed on (store,
+    productname) — with ``df``'s ``keys`` fields in place of its own."""
+    return T.StructType(
+        [df.schema[k] for k in keys]
+        + [f for f in template.fields if f.name not in ("store", "productname")]
+    )
+
+
+def _grouped_model_pass(
     sales: DataFrame,
-    keys: Sequence[str] = ("store", "productname"),
+    keys: Sequence[str],
+    template: T.StructType,
     *,
-    model_spec: str = "seasonal_naive",
-    n_splits: int = 5,
-    date_col: str = "date",
-    y_col: str = "sales",
-    schema=None,
+    model_spec: str,
+    batch_kernel,
+    group_fn,
+    date_col: str,
+    y_col: str,
     pre_partitioned: bool = False,
 ) -> DataFrame:
-    """One CV-metrics row per key group (the reference's per-model MLflow
-    metrics, as a DataFrame).  ``schema`` defaults to TRAIN_METRICS with
-    the key columns' actual types substituted.
+    """The one routing point of every grouped model pass (train, forecast,
+    fused train + forecast, gated forecast); the output schema is
+    ``template`` keyed on ``sales``' key columns.
 
-    The deterministic fast model runs through
+    The seasonal-naive model runs ``batch_kernel`` through
     :func:`operators.groupmap.sorted_group_map` — thousands of small
     groups per Arrow batch instead of one ``applyInPandas`` call (and one
-    one-row pandas frame) per group; ``pre_partitioned=True`` additionally
-    skips the exchange when the caller already hash-partitioned ``sales``
-    on ``keys`` (see ``plans/ml_queries.demand_series``).  Heavy pluggable
-    models (Prophet) keep the classic per-group ``applyInPandas`` shape,
-    where the per-call constant is noise next to the fit."""
-    from pyspark.sql import types as T
-
-    if schema is None:
-        key_fields = [sales.schema[k] for k in keys]
-        metric_fields = [f for f in TRAIN_METRICS.fields if f.name not in ("store", "productname")]
-        schema = T.StructType(key_fields + metric_fields)
+    pandas frame) per group; ``pre_partitioned=True`` additionally skips
+    the exchange when the caller already hash-partitioned ``sales`` on
+    ``keys`` (see ``plans/ml_queries.demand_series``).  Any other model
+    (Prophet) runs ``group_fn`` in the classic per-group
+    ``applyInPandas`` shape, where the per-call constant is noise next to
+    the fit."""
+    schema = _keyed_schema(template, sales, keys)
     timed = _with_time_cols(sales, date_col)
     if model_spec == "seasonal_naive":
-        kernel = make_train_batch_kernel(keys, n_splits=n_splits, y_col=y_col)
         # guide §4.1: mapInPandas is opaque to column pruning, so select
         # exactly what the kernel reads — the raw date column otherwise
         # rides the shuffle+sort+Arrow boundary unused (date32 → pandas
@@ -357,12 +312,37 @@ def train_groups(
         return sorted_group_map(
             timed,
             keys,
-            kernel,
+            batch_kernel,
             schema,
             order_cols=("__ord",),
             pre_partitioned=pre_partitioned,
         )
-    fn = make_train_fn(
-        keys, model_spec=model_spec, n_splits=n_splits, date_col=date_col, y_col=y_col
+    return hash_partition(timed, keys).groupBy(*keys).applyInPandas(group_fn, schema)
+
+
+def train_groups(
+    sales: DataFrame,
+    keys: Sequence[str] = ("store", "productname"),
+    *,
+    model_spec: str = "seasonal_naive",
+    n_splits: int = 5,
+    date_col: str = "date",
+    y_col: str = "sales",
+    pre_partitioned: bool = False,
+) -> DataFrame:
+    """One CV-metrics row per key group (the reference's per-model MLflow
+    metrics, as a DataFrame): TRAIN_METRICS with the key columns' actual
+    types substituted, routed by :func:`_grouped_model_pass`."""
+    return _grouped_model_pass(
+        sales,
+        keys,
+        TRAIN_METRICS,
+        model_spec=model_spec,
+        batch_kernel=make_train_batch_kernel(keys, n_splits=n_splits, y_col=y_col),
+        group_fn=make_train_fn(
+            keys, model_spec=model_spec, n_splits=n_splits, date_col=date_col, y_col=y_col
+        ),
+        date_col=date_col,
+        y_col=y_col,
+        pre_partitioned=pre_partitioned,
     )
-    return hash_partition(timed, keys).groupBy(*keys).applyInPandas(fn, schema)

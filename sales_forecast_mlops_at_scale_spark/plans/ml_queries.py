@@ -2,8 +2,9 @@
 derived from ``lineitem`` (daily quantity per (l_suppkey, l_returnflag) —
 the fixtures' stand-in for the reference's per-(store, product) sales).
 
-Both queries run the REAL ``applyInPandas`` pipeline (ml/train.py,
-ml/predict.py) with the deterministic seasonal-naive model, and both have
+Both queries run the REAL grouped-map pipeline (ml/train.py,
+ml/predict.py: the ``sorted_group_map`` batch kernels) with the
+deterministic seasonal-naive model, and both have
 full DuckDB oracles: the oracle SQL re-derives the identical weekday-
 lookup model, expanding-window CV splits, truncation semantics and
 rounding.  This is the strongest check in the suite — a Python grouped-map
@@ -37,7 +38,7 @@ def demand_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     key) makes ONE exchange serve the whole ML pipeline:
     ``HashPartitioning(s, f)`` satisfies the clustered distribution of
     both the daily aggregation (grouping key (s, f, ds) ⊇ partition
-    key) and the downstream ``applyInPandas`` groupBy (s, f) — the
+    key) and the downstream grouped map on (s, f) — the
     executed plan carries exactly one ``Exchange hashpartitioning``
     where the naive formulation shuffles the series twice (agg key,
     then group key).  Trade-off: raw rows forgo map-side combine on the
@@ -80,8 +81,9 @@ def _readout_slot(
 
 
 def q_train_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Walk-forward CV (5 expanding splits) per group via applyInPandas —
-    the reference's 1,115-Ray-task weekly training as one Spark job.
+    """Walk-forward CV (5 expanding splits) per group via the
+    ``sorted_group_map`` train kernel — the reference's 1,115-Ray-task
+    weekly training as one Spark job.
     The per-group metrics OUTPUT (one row per series) is slot-pinned:
     five readout queries and the retrain decision all derive from this
     one frame (see :func:`_readout_slot`)."""
@@ -121,8 +123,9 @@ def _horizon_anchor(spark: SparkSession, sf_dir: str):
 
 
 def q_forecast_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day-ahead forecast per group via applyInPandas (UDTF-shaped: one
-    group row set → 7 forecast rows), horizon anchored at max(ds)+1.
+    """7-day-ahead forecast per group via the ``sorted_group_map`` predict
+    kernel (UDTF-shaped: one group row set → 7 forecast rows), horizon
+    anchored at max(ds)+1.
     Output (7 rows per group) slot-pinned — the totals/weekday readouts
     and repeat invocations share it (see :func:`_readout_slot`); the
     anchor is itself a pure function of the lineitem files that key the
@@ -228,7 +231,6 @@ def q_gated_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             KEYS,
             horizon_start=anchor + _dt.timedelta(days=1),
             horizon_days=7,
-            model_spec="seasonal_naive",
             date_col="ds",
             y_col="y",
             max_rmse=GATE_RMSE,

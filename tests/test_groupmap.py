@@ -1,11 +1,14 @@
 """sorted_group_map (operators/groupmap.py): the many-groups-per-batch
 grouped map that carries the ML family.
 
-The contract under test: for every routed pipeline (train / forecast /
-fused gate+forecast), the batched kernel over sorted partitions is
-BIT-IDENTICAL to the per-group ``applyInPandas`` path it replaced —
-including when Arrow batches are shrunk far below group size, forcing
-the trailing-group carry-over across many batches.  Plus the machinery
+The contract under test: the seasonal-naive batch kernels over sorted
+partitions are BIT-IDENTICAL to their references — train and forecast
+to the per-group ``applyInPandas`` path running ``SeasonalNaiveModel``
+itself, the fused gated forecast to the composed
+``forecast_groups(gate_series(series, train_groups(series)))`` — on the
+smoke demand series and on a fixture of degenerate series, and when
+Arrow batches are shrunk far below group size, forcing the
+trailing-group carry-over across many batches.  Plus the machinery
 units (boundary detection with null keys) and the plan promise
 (``pre_partitioned=True`` downstream of ``repartition(keys)`` runs the
 whole pipeline on ONE exchange)."""
@@ -18,16 +21,19 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sales_forecast_mlops_at_scale_spark.ml import (
     forecast_groups,
+    gate_series,
     gated_forecast_groups,
     train_groups,
 )
-from sales_forecast_mlops_at_scale_spark.ml.fused import make_gated_forecast_fn
 from sales_forecast_mlops_at_scale_spark.ml.predict import make_predict_fn
-from sales_forecast_mlops_at_scale_spark.ml.train import _with_time_cols, make_train_fn
+from sales_forecast_mlops_at_scale_spark.ml.train import (
+    _keyed_schema,
+    _with_time_cols,
+    make_train_fn,
+)
 from sales_forecast_mlops_at_scale_spark.operators.groupmap import (
     group_starts,
     sorted_group_map,
@@ -37,17 +43,29 @@ from sales_forecast_mlops_at_scale_spark.plans.ml_queries import (
     KEYS,
     demand_series,
 )
-from sales_forecast_mlops_at_scale_spark.schemas import TRAIN_METRICS
+from sales_forecast_mlops_at_scale_spark.schemas import FORECAST_OUTPUT, TRAIN_METRICS
 
 from .conftest import SMOKE_SF_DIR
 
-FORECAST_FIELDS = [
-    T.StructField("forecast_date", T.DateType()),
-    T.StructField("forecast_sale", T.IntegerType()),
-    T.StructField("lower_ci", T.IntegerType()),
-    T.StructField("upper_ci", T.IntegerType()),
-    T.StructField("model_name", T.StringType()),
-    T.StructField("model_version", T.StringType()),
+_DAY0 = dt.date(2025, 11, 1)
+#: degenerate (l_suppkey, l_returnflag, ds, y) series
+DEGENERATE_ROWS = [
+    # flat passer: 28 days of constant demand → rmse 0 → passes
+    *[(1, "A", _DAY0 + dt.timedelta(days=i), 10) for i in range(28)],
+    # erratic failer: alternating extremes → seasonal-naive rmse >> bar
+    *[(2, "A", _DAY0 + dt.timedelta(days=i), 1 if i % 2 else 900) for i in range(28)],
+    # degenerate: single observation → no fold with train_end >= 1 → NULL
+    (3, "B", dt.date(2025, 12, 1), 5),
+    # minimal two-point series: one fold trains on 1 row
+    (4, "B", dt.date(2025, 12, 1), 5),
+    (4, "B", dt.date(2025, 12, 2), 7),
+]
+#: the equality tests' extra cases: an all-zero series (MAPE has no
+#: nonzero actual) and a single-weekday series (every other weekday
+#: falls back to the train-window mean)
+EDGE_ROWS = [
+    *[(5, "C", _DAY0 + dt.timedelta(days=i), 0) for i in range(28)],
+    *[(6, "C", _DAY0 + dt.timedelta(weeks=i), 3 * i + 1) for i in range(12)],
 ]
 
 
@@ -70,14 +88,21 @@ def anchor(spark):
     return mx + dt.timedelta(days=1)
 
 
+@pytest.fixture(scope="module", params=["smoke", "degenerate"])
+def cmp_series(request, spark, series):
+    """The equality tests' inputs, both hash-partitioned on KEYS like
+    ``demand_series`` (so ``pre_partitioned=True`` holds)."""
+    if request.param == "smoke":
+        return series
+    return spark.createDataFrame(
+        DEGENERATE_ROWS + EDGE_ROWS, "l_suppkey int, l_returnflag string, ds date, y int"
+    ).repartition(*KEYS)
+
+
 def _schemas(series):
-    key_fields = [series.schema[k] for k in KEYS]
-    metric_fields = [
-        f for f in TRAIN_METRICS.fields if f.name not in ("store", "productname")
-    ]
     return (
-        T.StructType(key_fields + metric_fields),
-        T.StructType(key_fields + FORECAST_FIELDS),
+        _keyed_schema(TRAIN_METRICS, series, KEYS),
+        _keyed_schema(FORECAST_OUTPUT, series, KEYS),
     )
 
 
@@ -114,11 +139,12 @@ def test_sorted_group_map_counts_groups(spark):
 
 
 # ---------------------------------------------------------------------------
-# bit-exact equivalence vs the per-group applyInPandas paths
+# bit-exact equivalence vs the reference paths
 # ---------------------------------------------------------------------------
 
 
-def test_train_batched_equals_apply_in_pandas(spark, series):
+def test_train_batched_equals_apply_in_pandas(spark, cmp_series):
+    series = cmp_series
     tschema, _ = _schemas(series)
     old = (
         _with_time_cols(series, "ds")
@@ -132,7 +158,8 @@ def test_train_batched_equals_apply_in_pandas(spark, series):
     assert _canon(old) == _canon(new)
 
 
-def test_forecast_batched_equals_apply_in_pandas(spark, series, anchor):
+def test_forecast_batched_equals_apply_in_pandas(spark, cmp_series, anchor):
+    series = cmp_series
     _, fschema = _schemas(series)
     old = (
         _with_time_cols(series, "ds")
@@ -148,22 +175,16 @@ def test_forecast_batched_equals_apply_in_pandas(spark, series, anchor):
     assert _canon(old) == _canon(new)
 
 
-def test_gated_batched_equals_apply_in_pandas(spark, series, anchor):
-    _, fschema = _schemas(series)
-    old = (
-        _with_time_cols(series, "ds")
-        .groupBy(*KEYS)
-        .applyInPandas(
-            make_gated_forecast_fn(
-                KEYS, anchor, 7, date_col="ds", y_col="y", max_rmse=GATE_RMSE
-            ),
-            fschema,
-        )
+def test_gated_batched_equals_apply_in_pandas(spark, cmp_series, anchor):
+    series = cmp_series
+    metrics = train_groups(series, KEYS, date_col="ds", y_col="y")
+    old = forecast_groups(
+        gate_series(series, metrics, KEYS, max_rmse=GATE_RMSE),
+        KEYS, horizon_start=anchor, horizon_days=7, date_col="ds", y_col="y",
     )
     new = gated_forecast_groups(
         series, KEYS, horizon_start=anchor, horizon_days=7,
-        model_spec="seasonal_naive", date_col="ds", y_col="y",
-        max_rmse=GATE_RMSE, pre_partitioned=True,
+        date_col="ds", y_col="y", max_rmse=GATE_RMSE, pre_partitioned=True,
     )
     assert _canon(old) == _canon(new)
 
@@ -247,20 +268,8 @@ def test_gate_rate_scaffold_invariant_on_degenerate_series(spark):
     rows for a surviving group breaks HERE instead of silently shipping
     a wrong readout."""
     anchor = dt.date(2026, 1, 1)
-    rows = []
-    # flat passer: 28 days of constant demand → rmse 0 → passes
-    rows += [(1, "A", dt.date(2025, 11, 1) + dt.timedelta(days=i), 10) for i in range(28)]
-    # erratic failer: alternating extremes → seasonal-naive rmse >> bar
-    rows += [
-        (2, "A", dt.date(2025, 11, 1) + dt.timedelta(days=i), 1 if i % 2 else 900)
-        for i in range(28)
-    ]
-    # degenerate: single observation → no fold with train_end >= 1 → NULL
-    rows += [(3, "B", dt.date(2025, 12, 1), 5)]
-    # minimal two-point series: one fold trains on 1 row
-    rows += [(4, "B", dt.date(2025, 12, 1), 5), (4, "B", dt.date(2025, 12, 2), 7)]
     series = spark.createDataFrame(
-        rows, "l_suppkey int, l_returnflag string, ds date, y int"
+        DEGENERATE_ROWS, "l_suppkey int, l_returnflag string, ds date, y int"
     )
     tm = train_groups(
         series, KEYS, model_spec="seasonal_naive", date_col="ds", y_col="y"
@@ -271,8 +280,7 @@ def test_gate_rate_scaffold_invariant_on_degenerate_series(spark):
         derived[r.l_returnflag] = derived.get(r.l_returnflag, 0) + (7 if passed else 0)
     gated = gated_forecast_groups(
         series, KEYS, horizon_start=anchor, horizon_days=7,
-        model_spec="seasonal_naive", date_col="ds", y_col="y",
-        max_rmse=GATE_RMSE,
+        date_col="ds", y_col="y", max_rmse=GATE_RMSE,
     ).collect()
     actual = {}
     for r in gated:
