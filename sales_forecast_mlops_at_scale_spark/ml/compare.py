@@ -11,7 +11,7 @@ This module evaluates three deterministic families in ONE pass:
 
 - ``seasonal_naive`` (champion/incumbent): latest same-weekday value in
   the train window, train-mean fallback (ml/models.SeasonalNaiveModel).
-- ``moving_average`` (challenger): the mean of the last ``ma_window``
+- ``moving_average`` (challenger): the mean of the last ``MA_WINDOW``
   train-window OBSERVATIONS, constant across the fold — the right model
   when weekday seasonality is noise (ml/models.MovingAverageModel).
 - ``lag_7`` (feature-matrix challenger, VERDICT r8 #4): serve each test
@@ -34,113 +34,76 @@ family).
 Scale: ONE ``sorted_group_map`` job (same shape as ml/train.py — the
 series shuffles once on the group keys; the lag feature is a RANGE
 frame over that same Exchange+Sort, zero extra shuffles); all three
-models fit inside the same Arrow batch visit, so the challengers cost
-numpy means per fold, not more passes over 100 TB.
+models fit inside the same Arrow batch visit, over the shared CV test
+rows of ``train._cv_test_rows``, so the challengers cost numpy means per
+fold, not more passes over 100 TB.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.groupmap import sorted_group_map
-from .train import (
-    _fold_preds_from_positions,
-    _metrics_np,
-    _round_half_away,
-    _split_bounds,
-)
+from .train import N_SPLITS, _cv_average, _cv_test_rows, _fold_rmse, _window_mean
 
 COMPARE_SCHEMA = (
     "l_suppkey long, l_returnflag string, n_rows long, n_splits int, "
     "rmse_sn double, rmse_ma double, rmse_lag double, champion string"
 )
 
+#: the challenger's trailing-mean window in train-window observations
+#: (also the oracle SQL's)
+MA_WINDOW = 28
 
-def make_compare_kernel(
-    keys: Sequence[str], *, n_splits: int = 5, ma_window: int = 28, y_col: str = "y"
-):
-    """Batch kernel: per group, walk-forward CV RMSE for all THREE
-    models over identical folds, plus the promotion verdict.  Expects a
-    ``lag_7`` column (the point-in-time feature from
-    ``ml.features.feature_matrix``; NaN on gap days)."""
-    import numpy as np
 
-    keys = list(keys)
+def make_compare_kernel(keys: Sequence[str]):
+    """Batch kernel: walk-forward CV RMSE for all THREE models over
+    identical folds, plus the promotion verdict, for every group of the
+    batch at once (``train._cv_test_rows``).  Expects a ``lag_7`` column
+    (the point-in-time feature from ``ml.features.feature_matrix``; NaN
+    on gap days)."""
 
     def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        ys_all = pdf[y_col].to_numpy(dtype=float)
-        dows_all = pdf["__dow"].to_numpy()
-        lag_all = pdf["lag_7"].to_numpy(dtype=float)
-        g = len(starts)
-        n_rows = (ends - starts).astype("int64")
-        splits_out = np.zeros(g, dtype="int32")
-        rmse_sn = np.full(g, np.nan)
-        rmse_ma = np.full(g, np.nan)
-        rmse_lag = np.full(g, np.nan)
-        champ = np.full(g, "untrained", dtype=object)
-        for gi in range(g):
-            s, e = int(starts[gi]), int(ends[gi])
-            ys = ys_all[s:e]
-            dows = dows_all[s:e]
-            lags = lag_all[s:e]
-            sn_folds: list[float] = []
-            ma_folds: list[float] = []
-            lag_folds: list[float] = []
-            wd_pos = None
-            for train_end, test_end in _split_bounds(e - s, n_splits):
-                if train_end < 1:
-                    continue
-                if wd_pos is None:
-                    wd_pos = [np.nonzero(dows == wd)[0] for wd in range(7)]
-                y_test = ys[train_end:test_end]
-                yhat_sn = _fold_preds_from_positions(
-                    ys, dows, wd_pos, train_end, test_end
-                )
-                sn_folds.append(_metrics_np(y_test, yhat_sn.astype(float))[0])
-                # challenger: trunc(mean of last ma_window train rows),
-                # constant over the fold (MovingAverageModel semantics)
-                lo = max(0, train_end - ma_window)
-                yhat_ma = float(int(ys[lo:train_end].mean()))
-                ma_folds.append(
-                    _metrics_np(y_test, np.full(len(y_test), yhat_ma))[0]
-                )
-                # feature challenger: each test day served its OWN
-                # trailing lag_7 (rolling one-day-ahead), MA level on
-                # gap days — exact integers either way
-                lag_test = lags[train_end:test_end]
-                yhat_lag = np.where(np.isnan(lag_test), yhat_ma, lag_test)
-                lag_folds.append(_metrics_np(y_test, yhat_lag)[0])
-            if sn_folds:
-                splits_out[gi] = len(sn_folds)
-                r_sn = _round_half_away(sum(sn_folds) / len(sn_folds), 4)
-                r_ma = _round_half_away(sum(ma_folds) / len(ma_folds), 4)
-                r_lag = _round_half_away(sum(lag_folds) / len(lag_folds), 4)
-                rmse_sn[gi] = r_sn
-                rmse_ma[gi] = r_ma
-                rmse_lag[gi] = r_lag
-                # promotion on the ROUNDED values both engines share;
-                # ties keep the incumbent, and the older challenger on
-                # a challenger tie (strictly-better-or-stay)
-                if r_lag < r_sn and r_lag < r_ma:
-                    champ[gi] = "lag_7"
-                elif r_ma < r_sn:
-                    champ[gi] = "moving_average"
-                else:
-                    champ[gi] = "seasonal_naive"
-        key_arrs = {k: pdf[k].to_numpy()[starts] for k in keys}
+        ys = pdf["y"].to_numpy(dtype=float)
+        grp, fold, rows, train_end, yhat_sn = _cv_test_rows(
+            ys, pdf["__dow"].to_numpy(), starts, ends, N_SPLITS
+        )
+        y = ys[rows]
+        # challenger: trunc(mean of the last MA_WINDOW train rows),
+        # constant over the fold (MovingAverageModel semantics)
+        lo = np.maximum(starts[grp], train_end - MA_WINDOW)
+        yhat_ma = np.trunc(_window_mean(ys, lo, train_end))
+        # feature challenger: each test day served its OWN trailing
+        # lag_7 (rolling one-day-ahead), MA level on gap days — exact
+        # integers either way
+        lag = pdf["lag_7"].to_numpy(dtype=float)[rows]
+        yhat_lag = np.where(np.isnan(lag), yhat_ma, lag)
+        trained = ends - starts > N_SPLITS
+        r_sn, r_ma, r_lag = (
+            _cv_average(_fold_rmse(y, yhat, fold), trained, N_SPLITS)
+            for yhat in (yhat_sn, yhat_ma, yhat_lag)
+        )
         return pd.DataFrame(
             {
-                **key_arrs,
-                "n_rows": n_rows,
-                "n_splits": splits_out,
-                "rmse_sn": rmse_sn,
-                "rmse_ma": rmse_ma,
-                "rmse_lag": rmse_lag,
-                "champion": champ,
+                **{k: pdf[k].to_numpy()[starts] for k in keys},
+                "n_rows": (ends - starts).astype("int64"),
+                "n_splits": trained.astype("int32") * N_SPLITS,
+                "rmse_sn": r_sn,
+                "rmse_ma": r_ma,
+                "rmse_lag": r_lag,
+                # promotion on the ROUNDED values both engines share; ties
+                # keep the incumbent, and the older challenger on a
+                # challenger tie (strictly-better-or-stay)
+                "champion": np.select(
+                    [~trained, (r_lag < r_sn) & (r_lag < r_ma), r_ma < r_sn],
+                    ["untrained", "lag_7", "moving_average"],
+                    "seasonal_naive",
+                ),
             }
         )
 
@@ -151,13 +114,10 @@ def compare_models_groups(
     series: DataFrame,
     keys: Sequence[str],
     *,
-    n_splits: int = 5,
-    ma_window: int = 28,
-    date_col: str = "ds",
-    y_col: str = "y",
     pre_partitioned: bool = False,
 ) -> DataFrame:
-    """Per-group champion/challenger CV bake-off (see module doc).
+    """Per-group champion/challenger CV bake-off (see module doc) of a
+    ``ds`` / ``y`` series.
 
     The ``lag_7`` column rides :func:`ml.features.feature_matrix`'s
     calendar-RANGE frame over the SAME Exchange+Sort the grouped map
@@ -172,20 +132,16 @@ def compare_models_groups(
     whole series per partition."""
     from .features import feature_matrix
 
-    keys = list(keys)
     feats = feature_matrix(
-        series, keys, date_col=date_col, y_col=y_col, lags=(7,),
-        ma_window=ma_window, keep_day_index=True,
+        series, keys, lags=(7,), ma_window=MA_WINDOW, keep_day_index=True
     )
     with_cols = feats.withColumn(
-        "__dow", ((F.dayofweek(F.col(date_col)) + 5) % 7).cast("int")
+        "__dow", ((F.dayofweek(F.col("ds")) + 5) % 7).cast("int")
     ).withColumn("__ord", F.col("__di"))
     return sorted_group_map(
-        with_cols.select(
-            *keys, "__dow", "__ord", F.col(y_col).alias("y"), "lag_7"
-        ),
+        with_cols.select(*keys, "__dow", "__ord", "y", "lag_7"),
         keys,
-        make_compare_kernel(keys, n_splits=n_splits, ma_window=ma_window),
+        make_compare_kernel(keys),
         COMPARE_SCHEMA,
         order_cols=["__ord"],
         pre_partitioned=pre_partitioned,

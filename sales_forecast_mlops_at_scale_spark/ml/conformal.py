@@ -25,24 +25,20 @@ guarantee needs an infinite radius: reported as NULL with vacuous
 coverage 10^6 ppm, identically on both sides.
 
 Scale: same single-shuffle ``sorted_group_map`` shape as ml/train.py —
-the per-group work is one sort of a few hundred residuals; the
-calibration never leaves the executor.
+per Arrow batch, one sort of every group's calibration residuals by
+(class, residual); the calibration never leaves the executor.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.groupmap import sorted_group_map
-from .train import (
-    _fold_preds_from_positions,
-    _split_bounds,
-    _with_time_cols,
-)
+from .train import N_SPLITS, _cv_test_rows, _with_time_cols
 
 CONFORMAL_SCHEMA = (
     "l_suppkey long, l_returnflag string, n_cal long, n_eval long, "
@@ -54,89 +50,87 @@ ALPHA_NUM = 1
 ALPHA_DEN = 5
 
 
-def conformal_rank(n_cal: int) -> int:
-    """``k = ⌈(n_cal + 1)·(1 − α)⌉`` in pure integer arithmetic."""
+def conformal_rank(n_cal):
+    """``k = ⌈(n_cal + 1)·(1 − α)⌉`` in pure integer arithmetic (also
+    elementwise over an integer array)."""
     a, b = ALPHA_NUM, ALPHA_DEN
     return ((b - a) * (n_cal + 1) + b - 1) // b
 
 
-def make_conformal_kernel(
-    keys: Sequence[str], *, n_splits: int = 5, y_col: str = "y"
-):
-    import numpy as np
+def _conformal_by_class(pdf: pd.DataFrame, starts, ends, n_classes: int):
+    """``(n_cal, n_eval, radius, coverage_ppm)`` of every conformal class
+    of the batch — the group for ``n_classes = 1``, (group, weekday) for
+    ``n_classes = 7`` — from its CV residuals: calibration is every fold
+    but the last, eval the last.  The radius is the k-th smallest
+    calibration residual, NaN when ``k > n_cal``; coverage is the share
+    of eval residuals ≤ radius in exact integer ppm, vacuous 10^6 for an
+    infinite radius, NULL for a class with no eval row."""
+    ys = pdf["y"].to_numpy(dtype=float)
+    dows = pdf["__dow"].to_numpy()
+    grp, fold, rows, _, yhat = _cv_test_rows(ys, dows, starts, ends, N_SPLITS)
+    resid = np.abs(ys[rows] - yhat)
+    cls = grp * n_classes + (dows[rows] if n_classes > 1 else 0)
+    cal = fold % N_SPLITS < N_SPLITS - 1
+    size = len(starts) * n_classes
+    n_cal = np.bincount(cls[cal], minlength=size)
+    n_eval = np.bincount(cls[~cal], minlength=size)
+    k = conformal_rank(n_cal)
+    # calibration residuals sorted within each class, then one NaN that
+    # every class without a finite radius picks
+    srt = np.append(resid[cal][np.lexsort((resid[cal], cls[cal]))], np.nan)
+    radius = srt[np.where(k <= n_cal, np.cumsum(n_cal) - n_cal + k - 1, -1)]
+    hit = resid[~cal] <= radius[cls[~cal]]
+    covered = np.bincount(cls[~cal][hit], minlength=size)
+    coverage = pd.array(
+        np.where(np.isnan(radius), 1_000_000, covered * 1_000_000 // np.maximum(n_eval, 1)),
+        dtype="Int64",
+    )
+    coverage[n_eval == 0] = pd.NA
+    return n_cal, n_eval, radius, coverage
 
-    keys = list(keys)
+
+def make_conformal_kernel(keys: Sequence[str]):
+    """Batch kernel: the marginal conformal radius and coverage audit of
+    every group of the batch (module doc)."""
 
     def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        ys_all = pdf[y_col].to_numpy(dtype=float)
-        dows_all = pdf["__dow"].to_numpy()
-        g = len(starts)
-        n_cal_o = np.zeros(g, dtype="int64")
-        n_eval_o = np.zeros(g, dtype="int64")
-        radius_o = np.full(g, np.nan)
-        cov_o = np.full(g, -1, dtype="int64")
-        for gi in range(g):
-            s, e = int(starts[gi]), int(ends[gi])
-            ys = ys_all[s:e]
-            dows = dows_all[s:e]
-            bounds = [tb for tb in _split_bounds(e - s, n_splits) if tb[0] >= 1]
-            if len(bounds) < 2:
-                continue  # need ≥1 calibration fold + the eval fold
-            wd_pos = [np.nonzero(dows == wd)[0] for wd in range(7)]
-
-            def fold_resid(train_end, test_end):
-                yhat = _fold_preds_from_positions(
-                    ys, dows, wd_pos, train_end, test_end
-                )
-                return np.abs(ys[train_end:test_end] - yhat.astype(float))
-
-            cal = np.concatenate([fold_resid(*tb) for tb in bounds[:-1]])
-            ev = fold_resid(*bounds[-1])
-            n_cal, n_ev = len(cal), len(ev)
-            n_cal_o[gi], n_eval_o[gi] = n_cal, n_ev
-            k = conformal_rank(n_cal)
-            if k > n_cal:
-                cov_o[gi] = 1_000_000  # infinite radius: vacuous coverage
-                continue
-            radius = float(np.sort(cal)[k - 1])
-            radius_o[gi] = radius
-            cov_o[gi] = int(ev[ev <= radius].size) * 1_000_000 // n_ev
-        key_arrs = {k_: pdf[k_].to_numpy()[starts] for k_ in keys}
-        out = pd.DataFrame(
+        n_cal, n_eval, radius, coverage = _conformal_by_class(pdf, starts, ends, 1)
+        return pd.DataFrame(
             {
-                **key_arrs,
-                "n_cal": n_cal_o,
-                "n_eval": n_eval_o,
-                "radius": radius_o,
-                "coverage_ppm": cov_o,
+                **{k_: pdf[k_].to_numpy()[starts] for k_ in keys},
+                "n_cal": n_cal,
+                "n_eval": n_eval,
+                "radius": radius,
+                "coverage_ppm": coverage,
             }
         )
-        out.loc[out["coverage_ppm"] < 0, "coverage_ppm"] = pd.NA
-        out["coverage_ppm"] = out["coverage_ppm"].astype("Int64")
-        return out
 
     return kernel
+
+
+def _conformal_pass(series: DataFrame, keys, kernel, schema, pre_partitioned: bool):
+    """One ``sorted_group_map`` of a conformal ``kernel`` over a ``ds`` /
+    ``y`` series."""
+    return sorted_group_map(
+        _with_time_cols(series, "ds").select(*keys, "__dow", "__ord", "y"),
+        keys,
+        kernel,
+        schema,
+        order_cols=["__ord"],
+        pre_partitioned=pre_partitioned,
+    )
 
 
 def conformal_intervals_groups(
     series: DataFrame,
     keys: Sequence[str],
     *,
-    n_splits: int = 5,
-    date_col: str = "ds",
-    y_col: str = "y",
     pre_partitioned: bool = False,
 ) -> DataFrame:
-    """Per-group conformal radius + held-out coverage audit (module doc)."""
-    keys = list(keys)
-    with_cols = _with_time_cols(series, date_col)
-    return sorted_group_map(
-        with_cols.select(*keys, "__dow", "__ord", F.col(y_col).alias("y")),
-        keys,
-        make_conformal_kernel(keys, n_splits=n_splits),
-        CONFORMAL_SCHEMA,
-        order_cols=["__ord"],
-        pre_partitioned=pre_partitioned,
+    """Per-group conformal radius + held-out coverage audit (module doc)
+    of a ``ds`` / ``y`` series."""
+    return _conformal_pass(
+        series, keys, make_conformal_kernel(keys), CONFORMAL_SCHEMA, pre_partitioned
     )
 
 
@@ -146,9 +140,7 @@ MONDRIAN_SCHEMA = (
 )
 
 
-def make_mondrian_kernel(
-    keys: Sequence[str], *, n_splits: int = 5, y_col: str = "y"
-):
+def make_mondrian_kernel(keys: Sequence[str]):
     """Mondrian (weekday-conditional) variant: one calibration set — and
     one radius — PER ISO WEEKDAY within each group.  Marginal conformal
     guarantees only AVERAGE coverage; for a weekday-seasonal series the
@@ -156,62 +148,22 @@ def make_mondrian_kernel(
     Conditioning on the weekday taxonomy (Vovk's Mondrian construction)
     restores the guarantee within every weekday class, at the price of
     7× smaller calibration sets (tiny classes report NULL radius +
-    vacuous coverage, exactly like the marginal path)."""
-    import numpy as np
-
-    keys = list(keys)
+    vacuous coverage, exactly like the marginal path).  One row per
+    (group, weekday) class present in either window."""
 
     def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        ys_all = pdf[y_col].to_numpy(dtype=float)
-        dows_all = pdf["__dow"].to_numpy()
-        rows: list[tuple] = []
-        for gi in range(len(starts)):
-            s, e = int(starts[gi]), int(ends[gi])
-            ys = ys_all[s:e]
-            dows = dows_all[s:e]
-            bounds = [tb for tb in _split_bounds(e - s, n_splits) if tb[0] >= 1]
-            key_vals = tuple(pdf[k].iloc[s] for k in keys)
-            if len(bounds) < 2:
-                continue  # group too short for any weekday class
-            wd_pos = [np.nonzero(dows == wd)[0] for wd in range(7)]
-
-            def fold_resid(train_end, test_end):
-                yhat = _fold_preds_from_positions(
-                    ys, dows, wd_pos, train_end, test_end
-                )
-                r = np.abs(ys[train_end:test_end] - yhat.astype(float))
-                return r, dows[train_end:test_end]
-
-            cal_r, cal_d = map(
-                np.concatenate,
-                zip(*(fold_resid(*tb) for tb in bounds[:-1])),
-            )
-            ev_r, ev_d = fold_resid(*bounds[-1])
-            for wd in range(7):
-                cr = np.sort(cal_r[cal_d == wd])
-                er = ev_r[ev_d == wd]
-                n_cal, n_ev = len(cr), len(er)
-                if n_cal == 0 and n_ev == 0:
-                    continue  # weekday absent from both windows
-                k = conformal_rank(n_cal)
-                if k > n_cal:
-                    radius, cov = None, 1_000_000 if n_ev else None
-                else:
-                    radius = float(cr[k - 1])
-                    cov = (
-                        int((er <= radius).sum()) * 1_000_000 // n_ev
-                        if n_ev
-                        else None
-                    )
-                rows.append(
-                    (*key_vals, wd + 1, n_cal, n_ev, radius, cov)
-                )
-        out = pd.DataFrame(
-            rows,
-            columns=[*keys, "isodow", "n_cal", "n_eval", "radius", "coverage_ppm"],
+        n_cal, n_eval, radius, coverage = _conformal_by_class(pdf, starts, ends, 7)
+        cls = np.flatnonzero((n_cal > 0) | (n_eval > 0))
+        return pd.DataFrame(
+            {
+                **{k_: pdf[k_].to_numpy()[starts[cls // 7]] for k_ in keys},
+                "isodow": (cls % 7 + 1).astype("int32"),
+                "n_cal": n_cal[cls],
+                "n_eval": n_eval[cls],
+                "radius": radius[cls],
+                "coverage_ppm": coverage[cls],
+            }
         )
-        out["coverage_ppm"] = out["coverage_ppm"].astype("Int64")
-        return out
 
     return kernel
 
@@ -220,20 +172,10 @@ def mondrian_conformal_groups(
     series: DataFrame,
     keys: Sequence[str],
     *,
-    n_splits: int = 5,
-    date_col: str = "ds",
-    y_col: str = "y",
     pre_partitioned: bool = False,
 ) -> DataFrame:
     """Weekday-conditional conformal radii + per-weekday coverage audit
-    (see :func:`make_mondrian_kernel`)."""
-    keys = list(keys)
-    with_cols = _with_time_cols(series, date_col)
-    return sorted_group_map(
-        with_cols.select(*keys, "__dow", "__ord", F.col(y_col).alias("y")),
-        keys,
-        make_mondrian_kernel(keys, n_splits=n_splits),
-        MONDRIAN_SCHEMA,
-        order_cols=["__ord"],
-        pre_partitioned=pre_partitioned,
+    (see :func:`make_mondrian_kernel`) of a ``ds`` / ``y`` series."""
+    return _conformal_pass(
+        series, keys, make_mondrian_kernel(keys), MONDRIAN_SCHEMA, pre_partitioned
     )

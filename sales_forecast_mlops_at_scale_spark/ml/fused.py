@@ -50,22 +50,20 @@ an unevaluated model is not a trusted model.
 from __future__ import annotations
 
 import datetime as _dt
-import math
 from collections.abc import Sequence
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import FORECAST_OUTPUT, TRAIN_METRICS
-from .predict import _forecast_frame, _horizon, make_predict_batch_kernel, make_predict_fn
+from .predict import make_predict_batch_kernel, make_predict_fn
 from .train import (
-    _fold_preds_from_positions,
+    N_SPLITS,
+    _cv_average,
+    _cv_test_rows,
+    _fold_rmse,
     _grouped_model_pass,
-    _round_half_away,
-    _seasonal_naive_lut,
-    _split_bounds,
     make_train_batch_kernel,
     make_train_fn,
 )
@@ -73,11 +71,9 @@ from .train import (
 #: the forecast columns carried as one ``array<int>`` per group
 FORECAST_ARRAYS = ("forecast_sale", "lower_ci", "upper_ci")
 
-# the weekly run's input columns (the warehouse's ``sales`` table);
-# walk-forward CV uses 5 splits, the train kernels' default
+# the weekly run's input columns (the warehouse's ``sales`` table)
 _DATE_COL = "date"
 _Y_COL = "sales"
-_N_SPLITS = 5
 
 
 def _attach_horizon(
@@ -192,42 +188,21 @@ def make_gated_batch_kernel(
     """Batch kernel for :func:`operators.groupmap.sorted_group_map`: the
     seasonal-naive CV → gate → predict of every group of an Arrow batch,
     ONE output frame holding the horizon rows of the survivors (rejects
-    contribute nothing).  Fold rmse, half-away rounding, the
-    ``<= max_rmse`` comparison, and the LUT predict arithmetic are
-    expression-identical to the train and predict batch kernels, so the
-    composed-pipeline oracle (``_GATED_SQL``) hash is unchanged."""
-    _, h_dows, f_dates = _horizon(horizon_start, horizon_days)
+    contribute nothing).  The fold rmse and its half-away rounded mean
+    are the train batch kernel's own helpers and the survivors' forecast
+    is the predict batch kernel, so the composed-pipeline oracle
+    (``_GATED_SQL``) hash is unchanged."""
+    predict = make_predict_batch_kernel(keys, horizon_start, horizon_days, y_col=y_col)
 
     def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        ys_all = pdf[y_col].to_numpy(dtype=float)
-        dows_all = pdf["__dow"].to_numpy()
-        keep: list[int] = []
-        yhat_rows: list[np.ndarray] = []
-        for gi in range(len(starts)):
-            s, e = int(starts[gi]), int(ends[gi])
-            ys = ys_all[s:e]
-            dows = dows_all[s:e]
-            rmses: list[float] = []
-            wd_pos = None
-            for train_end, test_end in _split_bounds(e - s, _N_SPLITS):
-                if train_end < 1:
-                    continue
-                if wd_pos is None:
-                    wd_pos = [np.nonzero(dows == wd)[0] for wd in range(7)]
-                yhat = _fold_preds_from_positions(ys, dows, wd_pos, train_end, test_end)
-                err = ys[train_end:test_end] - yhat
-                rmses.append(float(math.sqrt((err * err).mean())))
-            if not rmses:
-                continue  # NULL rmse → gate fails
-            rmse = _round_half_away(sum(rmses) / len(rmses), 4)
-            if not (rmse <= max_rmse):
-                continue
-            keep.append(gi)
-            yhat_rows.append(_seasonal_naive_lut(ys, dows)[h_dows])
-        if not keep:
-            return pd.DataFrame(columns=[*keys, *FORECAST_OUTPUT.names[2:]])
-        kept_starts = np.asarray(starts)[np.asarray(keep, dtype=np.int64)]
-        return _forecast_frame(pdf, keys, kept_starts, np.vstack(yhat_rows), f_dates)
+        ys = pdf[y_col].to_numpy(dtype=float)
+        _, fold, rows, _, yhat = _cv_test_rows(
+            ys, pdf["__dow"].to_numpy(), starts, ends, N_SPLITS
+        )
+        trained = ends - starts > N_SPLITS
+        rmse = _cv_average(_fold_rmse(ys[rows], yhat, fold), trained, N_SPLITS)
+        keep = rmse <= max_rmse  # NULL rmse (no fold) fails
+        return predict(pdf, starts[keep], ends[keep])
 
     return kernel
 

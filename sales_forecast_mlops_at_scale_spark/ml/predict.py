@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 
 from ..schemas import FORECAST_OUTPUT
 from .models import MODEL_NAME_FMT, SeasonalNaiveModel, get_model
-from .train import _grouped_model_pass, _model_names, _seasonal_naive_lut
+from .train import _grouped_model_pass, _model_names, _seasonal_naive
 
 
 def _horizon(horizon_start: _dt.date, horizon_days: int):
@@ -113,12 +113,15 @@ def make_predict_batch_kernel(
     _, h_dows, f_dates = _horizon(horizon_start, horizon_days)
 
     def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        ys_all = pdf[y_col].to_numpy(dtype=float)
-        dows_all = pdf["__dow"].to_numpy()
-        yhat = np.empty((len(starts), horizon_days))
-        for gi in range(len(starts)):
-            s, e = int(starts[gi]), int(ends[gi])
-            yhat[gi] = _seasonal_naive_lut(ys_all[s:e], dows_all[s:e])[h_dows]
+        # one train._seasonal_naive query per (group, horizon day), each
+        # fit on the group's whole history
+        yhat = _seasonal_naive(
+            pdf[y_col].to_numpy(dtype=float),
+            pdf["__dow"].to_numpy(),
+            np.repeat(starts, horizon_days),
+            np.repeat(ends, horizon_days),
+            np.tile(h_dows, len(starts)),
+        ).reshape(len(starts), horizon_days)
         return _forecast_frame(pdf, keys, starts, yhat, f_dates)
 
     return kernel

@@ -6,6 +6,10 @@ routed by :func:`_grouped_model_pass`: the seasonal-naive model runs as
 a batch kernel over sorted partitions
 (``operators/groupmap.sorted_group_map``), any other model as one
 ``applyInPandas`` call per group with the model from ``get_model``.
+:func:`_cv_test_rows` is the one seasonal-naive walk-forward CV of
+``ml/``: numpy over every group of an Arrow batch at once, shared by the
+train, fused, gated, compare and conformal kernels (the predict kernels
+run its model, :func:`_seasonal_naive`, on the whole history).
 
 The reference's ``ray.put(df)`` broadcast of the full frame to 1,115 tasks
 (``ray_train_all_job.py:37``) becomes the groupBy shuffle: each executor
@@ -21,8 +25,7 @@ shuffle is uniform.  The model stage runs in exactly
 ``spark.sql.shuffle.partitions`` tasks — the grouped map fixes that
 count itself, because AQE would coalesce a stage this small in bytes
 into one task (``operators/groupmap.hash_partition``) — so set it to at
-least the executor core count, and ≈ #groups / 4 for very large group
-counts.
+least the executor core count.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -37,6 +41,9 @@ from pyspark.sql import types as T
 from ..operators.groupmap import hash_partition, sorted_group_map
 from ..schemas import TRAIN_METRICS
 from .models import MODEL_NAME_FMT, get_model
+
+#: walk-forward CV splits (``TimeSeriesSplit(n_splits=5)``, module doc)
+N_SPLITS = 5
 
 
 def _with_time_cols(df: DataFrame, date_col: str) -> DataFrame:
@@ -69,67 +76,127 @@ def _split_bounds(n: int, n_splits: int) -> list[tuple[int, int]]:
     ]
 
 
-def _round_half_away(x: float, ndigits: int = 4) -> float:
+def _round_half_away(x, ndigits: int = 4):
     """Half-away-from-zero rounding — matching SQL ROUND (Spark HALF_UP,
-    DuckDB std::round).  Python's built-in ``round`` is banker's rounding
-    and diverges at exact .xxxx5 boundaries, which integral sales values
-    hit constantly (e.g. mean MAE 16.15625 → SQL 16.1563, Python
-    16.1562) — a real hash-mismatch caught by the oracle harness."""
-    import math
-
+    DuckDB std::round) — of a float or, elementwise, of an array.
+    Python's built-in ``round`` is banker's rounding and diverges at
+    exact .xxxx5 boundaries, which integral sales values hit constantly
+    (e.g. mean MAE 16.15625 → SQL 16.1563, Python 16.1562) — a real
+    hash-mismatch caught by the oracle harness."""
     p = 10.0**ndigits
-    return math.copysign(math.floor(abs(x) * p + 0.5) / p, x)
+    return np.copysign(np.floor(np.abs(x) * p + 0.5) / p, x)
 
 
 def _metrics_np(y, yhat) -> tuple[float, float, float, float]:
     """RMSE / MAPE / MAE / MedAE — the reference's four metrics
     (train_utils.py:38-53) — on raw float64 numpy arrays: none of the
     pandas Series construction overhead that dominates grouped-map wall
-    time at thousands of groups × folds."""
-    import numpy as np
-
+    time at thousands of groups × folds.  MAPE skips zero actuals and is
+    NaN (SQL NULL) when the fold has none, like the oracle's
+    ``avg(CASE WHEN y <> 0 ...)``."""
     err = y - yhat
     abs_err = np.abs(err)
     rmse = float(math.sqrt((err * err).mean()))
     nz = y != 0
-    mape = float((abs_err[nz] / y[nz]).mean()) if nz.any() else 0.0
+    mape = float((abs_err[nz] / y[nz]).mean()) if nz.any() else math.nan
     return rmse, mape, float(abs_err.mean()), float(np.median(abs_err))
 
 
-def _seasonal_naive_lut(ys, dows):
-    """Fitted seasonal-naive model as a 7-slot numpy lookup: latest y per
-    weekday over the (time-ordered) history, overall mean for unseen
-    weekdays.  The vectorized twin of ``SeasonalNaiveModel.fit`` — used by
-    the batch kernels to avoid a pandas sort + to_datetime + groupby per
-    group (which dominates wall time at thousands of groups)."""
-    import numpy as np
-
-    mean = float(ys.mean()) if len(ys) else 0.0
-    lut = np.full(7, mean)
-    for wd in range(7):
-        pos = np.nonzero(dows == wd)[0]
-        if len(pos):
-            lut[wd] = ys[pos[-1]]
-    return lut
+def _window_mean(ys, lo, hi):
+    """Mean of each batch window ``ys[lo[i]:hi[i]]``: differences of one
+    ``cumsum``, exact — so equal to the per-window ``np.mean`` — while y
+    is integral (demand counts, as every caller's is)."""
+    csum = np.concatenate(([0.0], np.cumsum(ys)))
+    return (csum[hi] - csum[lo]) / (hi - lo)
 
 
-def _fold_preds_from_positions(ys, dows, wd_pos, train_end: int, test_end: int):
-    """Seasonal-naive predictions for one CV fold: for each test row, the
-    last same-weekday y within the train window, else the train-window
-    mean; truncated to int (``SeasonalNaiveModel`` fit on the window).
-    ``wd_pos`` holds each weekday's row positions, computed ONCE per group:
-    the last same-weekday observation inside the expanding train window is
-    found by ``searchsorted`` on the (sorted) position list."""
-    import numpy as np
+def _seasonal_naive(ys, dows, lo, hi, wd):
+    """Seasonal-naive predictions for many windows of a sorted batch at
+    once: query ``i`` fits on rows ``[lo[i], hi[i])`` and predicts
+    weekday ``wd[i]`` — the latest same-weekday y in the window, else
+    the window mean (``SeasonalNaiveModel`` before its int truncation).
+    The latest row comes from one ``searchsorted`` per weekday on that
+    weekday's row positions."""
+    last = np.empty(len(hi), dtype=np.int64)
+    for d in range(7):
+        at = np.concatenate(([-1], np.flatnonzero(dows == d)))
+        q = wd == d
+        last[q] = at[np.searchsorted(at, hi[q]) - 1]
+    return np.where(last >= lo, ys[last], _window_mean(ys, lo, hi))
 
-    mean = float(ys[:train_end].mean())
-    lut = np.full(7, mean)
-    for wd in range(7):
-        pos = wd_pos[wd]
-        j = int(np.searchsorted(pos, train_end)) - 1
-        if j >= 0:
-            lut[wd] = ys[pos[j]]
-    return lut[dows[train_end:test_end]].astype(int)
+
+def _cv_test_rows(ys, dows, starts, ends, n_splits: int):
+    """Walk-forward CV of the seasonal-naive model for EVERY group of a
+    sorted batch (group ``i`` is rows ``[starts[i], ends[i])``,
+    time-ordered), with no Python loop over groups.
+
+    ``TimeSeriesSplit`` folds (:func:`_split_bounds`): a group of ``n``
+    rows has ``ts = n // (n_splits + 1)`` test rows per fold, so either
+    no fold (``ts = 0``) or ``n_splits`` folds whose test rows tile its
+    last ``n_splits · ts`` rows, each fold trained on every row before
+    it (``train_end ≥ n - n_splits · ts ≥ ts ≥ 1``).  Returns flat
+    arrays over all test rows, group-major, then fold, then time: group
+    index, fold index in the batch (``fold % n_splits`` within the
+    group), batch row, the fold's ``train_end`` (a batch row) and the
+    int-truncated prediction (as float)."""
+    ts = (ends - starts) // (n_splits + 1)
+    n_test = n_splits * ts
+    grp = np.repeat(np.arange(len(starts)), n_test)
+    local = np.arange(len(grp)) - np.repeat(np.cumsum(n_test) - n_test, n_test)
+    rows = (ends - n_test)[grp] + local
+    train_end = rows - local % ts[grp]
+    fold = np.repeat(np.cumsum(ts > 0) - 1, n_test) * n_splits + local // ts[grp]
+    yhat = _seasonal_naive(ys, dows, starts[grp], train_end, dows[rows])
+    return grp, fold, rows, train_end, yhat.astype(int).astype(float)
+
+
+def _fold_mean(x, fold):
+    """Per-fold mean of the test-row values ``x``: ``bincount`` sums,
+    exact — so equal to ``np.mean``'s — for integral values."""
+    return np.bincount(fold, weights=x) / np.bincount(fold)
+
+
+def _fold_rmse(y, yhat, fold):
+    """Per-fold RMSE of the predictions ``yhat`` of the test rows ``y``."""
+    err = y - yhat
+    return np.sqrt(_fold_mean(err * err, fold))
+
+
+def _fold_metrics(y, yhat, fold):
+    """RMSE / MAPE / MAE / MedAE of every CV fold: :func:`_metrics_np`
+    over the flat test rows, same float operations.  The MAPE ratios are
+    not integral, so their mean keeps ``np.mean``'s own summation order:
+    one 2-D ``mean(axis=1)`` per distinct count of nonzero actuals."""
+    abs_err = np.abs(y - yhat)
+    size = np.bincount(fold)
+    first = np.cumsum(size) - size
+    srt = abs_err[np.lexsort((abs_err, fold))]
+    medae = (srt[first + (size - 1) // 2] + srt[first + size // 2]) / 2
+    nz = y != 0
+    ratio = abs_err[nz] / y[nz]
+    count = np.bincount(fold[nz], minlength=len(first))
+    at = np.cumsum(count) - count
+    mape = np.full(len(first), np.nan)
+    for c in np.unique(count[count > 0]):
+        f = np.flatnonzero(count == c)
+        mape[f] = ratio[at[f, None] + np.arange(c)].mean(axis=1)
+    return _fold_rmse(y, yhat, fold), mape, _fold_mean(abs_err, fold), medae
+
+
+def _cv_average(per_fold, trained, n_splits: int):
+    """Per batch group, the mean of its folds' metric rounded half-away
+    to 4 digits (NaN where not ``trained``, i.e. no fold): folds added
+    in fold order, as ``sum`` over a list does; NaN (NULL) folds are
+    skipped, and a group whose folds are all NULL is NaN."""
+    folds = per_fold.reshape(-1, n_splits)
+    known = ~np.isnan(folds)
+    total = np.zeros(len(folds))
+    for k in range(n_splits):
+        total = total + np.where(known[:, k], folds[:, k], 0.0)
+    out = np.full(len(trained), np.nan)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        out[trained] = _round_half_away(total / known.sum(axis=1), 4)
+    return out
 
 
 def _model_names(pdf: pd.DataFrame, keys: Sequence[str], starts) -> list[str]:
@@ -143,69 +210,37 @@ def _model_names(pdf: pd.DataFrame, keys: Sequence[str], starts) -> list[str]:
 def make_train_batch_kernel(
     keys: Sequence[str],
     *,
-    n_splits: int = 5,
+    n_splits: int = N_SPLITS,
     y_col: str = "y",
 ):
     """Batch kernel for :func:`operators.groupmap.sorted_group_map`: the
-    seasonal-naive walk-forward CV of :func:`make_train_fn`, applied to
-    EVERY group in an Arrow batch with one output frame per batch.  Rows
-    arrive pre-sorted by ``__ord`` within each group (the operator's
-    partition sort), so no per-group sort runs either.  Property-tested
-    equal to ``make_train_fn`` with ``SeasonalNaiveModel``
-    (``tests/test_groupmap.py``) and hash-checked by the DuckDB oracles."""
-    import numpy as np
-
+    seasonal-naive walk-forward CV of :func:`make_train_fn` for every
+    group of an Arrow batch at once (:func:`_cv_test_rows`), one output
+    frame per batch.  Rows arrive pre-sorted by ``__ord`` within each
+    group (the operator's partition sort), so no sort by time runs.
+    Property-tested equal to ``make_train_fn`` with
+    ``SeasonalNaiveModel`` (``tests/test_groupmap.py``) and hash-checked
+    by the DuckDB oracles."""
     from .models import SeasonalNaiveModel
 
-    version = SeasonalNaiveModel.version
-
     def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        ys_all = pdf[y_col].to_numpy(dtype=float)
-        dows_all = pdf["__dow"].to_numpy()
-        g = len(starts)
-        n_rows = (ends - starts).astype("int64")
-        splits_out = np.zeros(g, dtype="int32")
-        rmse_o = np.full(g, np.nan)
-        mape_o = np.full(g, np.nan)
-        mae_o = np.full(g, np.nan)
-        medae_o = np.full(g, np.nan)
-        for gi in range(g):
-            s, e = int(starts[gi]), int(ends[gi])
-            ys = ys_all[s:e]
-            dows = dows_all[s:e]
-            rmses: list[float] = []
-            mapes: list[float] = []
-            maes: list[float] = []
-            medaes: list[float] = []
-            wd_pos = None
-            for train_end, test_end in _split_bounds(e - s, n_splits):
-                if train_end < 1:
-                    continue
-                if wd_pos is None:
-                    wd_pos = [np.nonzero(dows == wd)[0] for wd in range(7)]
-                yhat = _fold_preds_from_positions(ys, dows, wd_pos, train_end, test_end)
-                r, p, a, m = _metrics_np(ys[train_end:test_end], yhat.astype(float))
-                rmses.append(r)
-                mapes.append(p)
-                maes.append(a)
-                medaes.append(m)
-            if rmses:
-                splits_out[gi] = len(rmses)
-                rmse_o[gi] = _round_half_away(sum(rmses) / len(rmses), 4)
-                mape_o[gi] = _round_half_away(sum(mapes) / len(mapes), 4)
-                mae_o[gi] = _round_half_away(sum(maes) / len(maes), 4)
-                medae_o[gi] = _round_half_away(sum(medaes) / len(medaes), 4)
+        ys = pdf[y_col].to_numpy(dtype=float)
+        _, fold, rows, _, yhat = _cv_test_rows(
+            ys, pdf["__dow"].to_numpy(), starts, ends, n_splits
+        )
+        per_fold = _fold_metrics(ys[rows], yhat, fold)
+        trained = ends - starts > n_splits
         return pd.DataFrame(
             {
                 **{k: pdf[k].to_numpy()[starts] for k in keys},
-                "n_rows": n_rows,
-                "n_splits": splits_out,
-                "rmse": rmse_o,
-                "mape": mape_o,
-                "mae": mae_o,
-                "medae": medae_o,
+                "n_rows": (ends - starts).astype("int64"),
+                "n_splits": trained.astype("int32") * n_splits,
+                **{
+                    name: _cv_average(m, trained, n_splits)
+                    for name, m in zip(("rmse", "mape", "mae", "medae"), per_fold)
+                },
                 "model_name": _model_names(pdf, keys, starts),
-                "model_version": version,
+                "model_version": SeasonalNaiveModel.version,
             }
         )
 
@@ -216,7 +251,7 @@ def make_train_fn(
     keys: Sequence[str],
     *,
     model_spec: str = "seasonal_naive",
-    n_splits: int = 5,
+    n_splits: int = N_SPLITS,
     date_col: str = "ds",
     y_col: str = "y",
 ):
@@ -229,8 +264,6 @@ def make_train_fn(
         pdf = pdf.sort_values(date_col).reset_index(drop=True)
         history = pd.DataFrame({"ds": pdf[date_col], "y": pdf[y_col]})
         for train_end, test_end in _split_bounds(n, n_splits):
-            if train_end < 1:
-                continue
             model = get_model(model_spec).fit(history.iloc[:train_end])
             fold = history.iloc[train_end:test_end]
             yhat = model.predict(fold["ds"])["yhat"]
@@ -255,7 +288,7 @@ def make_train_fn(
                     "n_rows": n,
                     "n_splits": len(rmses),
                     "rmse": mean(rmses),
-                    "mape": mean(mapes),
+                    "mape": mean([p for p in mapes if not math.isnan(p)]),
                     "mae": mean(maes),
                     "medae": mean(medaes),
                     "model_name": MODEL_NAME_FMT.format(store=store, product=product),
@@ -325,7 +358,7 @@ def train_groups(
     keys: Sequence[str] = ("store", "productname"),
     *,
     model_spec: str = "seasonal_naive",
-    n_splits: int = 5,
+    n_splits: int = N_SPLITS,
     date_col: str = "date",
     y_col: str = "sales",
     pre_partitioned: bool = False,

@@ -8,7 +8,7 @@ parameters) under one shared protocol — previously four drifting copies
 of the same code (code-review r8, round 2):
 
 - **digest root**: the directory name folds the SOURCE files
-  (name + size + mtime) and every build parameter, so regenerated
+  (name + size + mtime in ns) and every build parameter, so regenerated
   testdata or changed hyperparameters mint a NEW root and the stale
   build is simply never read again — the staleness contract
   :mod:`..cache` uses for persist slots.
@@ -38,16 +38,17 @@ from collections.abc import Callable, Iterable, Sequence
 
 def digest_root(namespace: str, src_paths: Iterable[str], params: Sequence) -> str:
     """/tmp root keyed by source-file identity (name+size+mtime) and the
-    build parameters (see module doc)."""
+    build parameters (see module doc).  The mtime is taken in ns: a
+    same-size rewrite within one second must still mint a new root."""
     entries = ["params#" + "#".join(str(p) for p in params)]
     for src in src_paths:
         if os.path.isdir(src):
             for name in sorted(os.listdir(src)):
                 st = os.stat(os.path.join(src, name))
-                entries.append(f"{name}#{st.st_size}#{int(st.st_mtime)}")
+                entries.append(f"{name}#{st.st_size}#{st.st_mtime_ns}")
         elif os.path.exists(src):
             st = os.stat(src)
-            entries.append(f"{src}#{st.st_size}#{int(st.st_mtime)}")
+            entries.append(f"{src}#{st.st_size}#{st.st_mtime_ns}")
     digest = hashlib.sha256("\n".join(entries).encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), namespace, digest)
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..ml import forecast_groups, gate_series, gated_forecast_groups, train_groups
+from ..ml.compare import MA_WINDOW, compare_models_groups
 from . import QueryDef
 
 KEYS = ("l_suppkey", "l_returnflag")
@@ -656,40 +657,28 @@ FROM s2
 """
 
 
-#: challenger trailing-mean window, interpolated into BOTH sides
-_MA_WINDOW = 28
-
-
 def q_model_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Champion/challenger bake-off (ml/compare.py): walk-forward CV RMSE
     for seasonal-naive AND the trailing-mean challenger over IDENTICAL
     folds, one grouped-map pass, promotion per group on the rounded
     values — the model-selection loop the reference's single-family
     Prophet pipeline never runs."""
-    from ..ml.compare import compare_models_groups
-
     def build() -> DataFrame:
         series = demand_series(spark, sf_dir)
-        return compare_models_groups(
-            series,
-            KEYS,
-            n_splits=5,
-            ma_window=_MA_WINDOW,
-            pre_partitioned=True,
-        )
+        return compare_models_groups(series, KEYS, pre_partitioned=True)
 
     # one-row-per-group bake-off OUTPUT slot-pinned (r13): the retrain
     # decision and repeat invocations reuse it instead of re-running the
     # two-model CV kernel (the slot key subsumes the r12 plan memo — a
     # slot hit returns the same constructed frame)
     return _readout_slot(
-        spark, sf_dir, "ml.compare", build, KEYS, 5, _MA_WINDOW
+        spark, sf_dir, "ml.compare", build, KEYS, 5, MA_WINDOW
     )
 
 
 #: q_model_compare oracle: the _TRAIN_SQL CV scaffolding with BOTH models'
 #: fold predictions — naive = latest same-weekday y in the train window
-#: (train-mean fallback), challenger = trunc(mean of last {_MA_WINDOW}
+#: (train-mean fallback), challenger = trunc(mean of last {MA_WINDOW}
 #: train rows), both truncated to int; per-model fold RMSE averaged and
 #: rounded to 4 before the promotion CASE (ties keep the incumbent).
 _MODEL_COMPARE_SQL = f"""
@@ -720,7 +709,7 @@ ma_levels AS (
          CAST(trunc(avg(r.y)) AS INTEGER) AS level
   FROM splits s JOIN ranked r
     ON r.l_suppkey = s.l_suppkey AND r.l_returnflag = s.l_returnflag
-   AND r.rn > s.train_end - {_MA_WINDOW} AND r.rn <= s.train_end
+   AND r.rn > s.train_end - {MA_WINDOW} AND r.rn <= s.train_end
   GROUP BY 1, 2, 3),
 lookup AS (
   SELECT t.l_suppkey, t.l_returnflag, t.i, t.rn AS trn, h.y,
@@ -793,8 +782,7 @@ def q_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _readout_slot(
         spark, sf_dir, "ml.conf",
         lambda: conformal_intervals_groups(
-            demand_series(spark, sf_dir), KEYS, n_splits=5,
-            pre_partitioned=True,
+            demand_series(spark, sf_dir), KEYS, pre_partitioned=True
         ),
         KEYS, 5,
     )
@@ -1142,8 +1130,7 @@ def q_mondrian_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _readout_slot(
         spark, sf_dir, "ml.mondrian",
         lambda: mondrian_conformal_groups(
-            demand_series(spark, sf_dir), KEYS, n_splits=5,
-            pre_partitioned=True,
+            demand_series(spark, sf_dir), KEYS, pre_partitioned=True
         ),
         KEYS, 5,
     )

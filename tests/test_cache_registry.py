@@ -3,6 +3,8 @@ keyless persist tracking, and driver-side plan memoization."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from sales_forecast_mlops_at_scale_spark.cache import (
@@ -175,3 +177,18 @@ def test_plan_key_covers_subquery_relations(spark, tmp_path):
     shutil.rmtree(p2)
     spark.range(7).selectExpr("id AS y").write.parquet(p2)
     assert _plan_key(q()) != k1  # the subquery table's rewrite is seen
+
+
+def test_fixture_digest_sees_same_second_rewrite(tmp_path):
+    """A same-size rewrite within one second still mints a new fixture
+    root: the digest keys on the mtime in ns, not in whole seconds."""
+    from sales_forecast_mlops_at_scale_spark.plans.fixture_roots import digest_root
+
+    src = tmp_path / "lineitem.parquet"
+    src.write_bytes(b"a" * 16)
+    second = 1_700_000_000 * 10**9
+    os.utime(src, ns=(second, second + 100))
+    before = digest_root("t", [str(src), str(tmp_path)], [1])
+    src.write_bytes(b"b" * 16)
+    os.utime(src, ns=(second, second + 200))
+    assert digest_root("t", [str(src), str(tmp_path)], [1]) != before

@@ -8,10 +8,12 @@ itself, the fused gated forecast to the composed
 ``forecast_groups(gate_series(series, train_groups(series)))`` — on the
 smoke demand series and on a fixture of degenerate series, and when
 Arrow batches are shrunk far below group size, forcing the
-trailing-group carry-over across many batches.  Plus the machinery
-units (boundary detection with null keys) and the plan promise
-(``pre_partitioned=True`` downstream of ``repartition(keys)`` runs the
-whole pipeline on ONE exchange)."""
+trailing-group carry-over across many batches.  The ML registry queries
+built on those kernels (train, forecast, gated, compare, marginal and
+Mondrian conformal) also match their DuckDB oracles on the degenerate
+series.  Plus the machinery units (boundary detection with null keys)
+and the plan promise (``pre_partitioned=True`` downstream of
+``repartition(keys)`` runs the whole pipeline on ONE exchange)."""
 
 from __future__ import annotations
 
@@ -45,7 +47,7 @@ from sales_forecast_mlops_at_scale_spark.plans.ml_queries import (
 )
 from sales_forecast_mlops_at_scale_spark.schemas import FORECAST_OUTPUT, TRAIN_METRICS
 
-from .conftest import SMOKE_SF_DIR
+from .conftest import SMOKE_SF_DIR, assert_matches_oracle
 
 _DAY0 = dt.date(2025, 11, 1)
 #: degenerate (l_suppkey, l_returnflag, ds, y) series
@@ -56,7 +58,7 @@ DEGENERATE_ROWS = [
     *[(2, "A", _DAY0 + dt.timedelta(days=i), 1 if i % 2 else 900) for i in range(28)],
     # degenerate: single observation → no fold with train_end >= 1 → NULL
     (3, "B", dt.date(2025, 12, 1), 5),
-    # minimal two-point series: one fold trains on 1 row
+    # minimal two-point series: too short for a fold (ts = 0) → NULL
     (4, "B", dt.date(2025, 12, 1), 5),
     (4, "B", dt.date(2025, 12, 2), 7),
 ]
@@ -66,6 +68,17 @@ DEGENERATE_ROWS = [
 EDGE_ROWS = [
     *[(5, "C", _DAY0 + dt.timedelta(days=i), 0) for i in range(28)],
     *[(6, "C", _DAY0 + dt.timedelta(weeks=i), 3 * i + 1) for i in range(12)],
+]
+
+
+#: the oracle test's further series: too short for a fold (5 rows,
+#: ts = 0), one row per fold (6 rows, ts = 1), every third day, and 20
+#: zero days before demand starts (folds with no nonzero actual)
+SHORT_ROWS = [
+    *[(7, "D", _DAY0 + dt.timedelta(days=i), i + 1) for i in range(5)],
+    *[(8, "D", _DAY0 + dt.timedelta(days=i), 4 * i % 5) for i in range(6)],
+    *[(9, "E", _DAY0 + dt.timedelta(days=3 * i), i % 4 + 1) for i in range(40)],
+    *[(10, "E", _DAY0 + dt.timedelta(days=i), 0 if i < 20 else i) for i in range(30)],
 ]
 
 
@@ -293,3 +306,55 @@ def test_gate_rate_scaffold_invariant_on_degenerate_series(spark):
     for rf in derived:
         assert actual.get(rf, 0) == derived[rf], (rf, actual, derived)
     assert set(actual) <= set(derived)
+
+
+@pytest.fixture(scope="module")
+def degenerate_sf(tmp_path_factory):
+    """A ``lineitem.parquet`` of every degenerate series, typed like the
+    TPC-H fixture's columns the ML queries read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = DEGENERATE_ROWS + EDGE_ROWS + SHORT_ROWS
+    sf_dir = tmp_path_factory.mktemp("degenerate_sf")
+    pq.write_table(
+        pa.table(
+            {
+                "l_suppkey": pa.array([r[0] for r in rows], pa.int64()),
+                "l_returnflag": pa.array([r[1] for r in rows], pa.string()),
+                "l_shipdate": pa.array(
+                    [dt.datetime.combine(r[2], dt.time()) for r in rows], pa.timestamp("us")
+                ),
+                "l_quantity": pa.array([float(r[3]) for r in rows], pa.float64()),
+            }
+        ),
+        sf_dir / "lineitem.parquet",
+    )
+    return str(sf_dir)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_train_metrics",
+        "q_forecast_7d",
+        "q_gated_forecast",
+        "q_model_compare",
+        "q_conformal_intervals",
+        "q_mondrian_conformal",
+    ],
+)
+def test_degenerate_series_match_oracle(spark, degenerate_sf, name):
+    """The seasonal-naive kernels against their DuckDB oracles on the
+    degenerate series: no fold, one row per fold, gaps, single
+    weekdays, and folds whose actuals are all zero."""
+    import duckdb
+
+    from sales_forecast_mlops_at_scale_spark.plans import all_queries
+
+    qdef = all_queries()[name]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{degenerate_sf}/lineitem.parquet')"
+    )
+    assert_matches_oracle(qdef.fn(spark, degenerate_sf), con, qdef.oracle)

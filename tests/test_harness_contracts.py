@@ -52,3 +52,13 @@ def test_stale_slow_id_check_allows_pytest_collection_filters(
     )
     assert out.returncode == 0, out.stdout + out.stderr
     assert f"tests/{_FORGET}::{_FAILED}" in out.stdout
+
+
+def test_driver_contract_entry_and_registry(spark):
+    """``__spark_entry__``: the smoke query returns rows, every oracle
+    names a registered query, and the registry keeps its 180 queries."""
+    import __spark_entry__ as entry
+
+    assert entry.entry(spark).count() > 0
+    assert set(entry.oracle_sql()) <= set(entry.queries())
+    assert len(entry.queries()) == 180
