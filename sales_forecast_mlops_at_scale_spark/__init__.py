@@ -11,12 +11,12 @@ idiomatic Spark DataFrame/SQL/Structured-Streaming engine designed for
 
 - ``session``    SparkSession factory (Arrow on, AQE on, UTC, injectable clock)
 - ``schemas``    every declared StructType (analog of the reference's db_tables)
-- ``catalog``    registers parquet dirs as temp views with scale-aware options
+- ``catalog``    loads the parquet fixtures as DataFrames with scale-aware options
 - ``operators``  relational operator library (dedup, top-n, scaffold, metrics, ...)
 - ``operators.llm``  dedup / similarity / text-analysis / multimodal operators
 - ``sources``    batch + streaming sources and sinks (parquet/csv/jsonl/kafka/jdbc)
 - ``streaming``  Structured Streaming ingest with idempotent exactly-once sink
-- ``ml``         grouped-map train / predict (applyInPandas), pluggable models
+- ``ml``         grouped-map train / predict (sorted_group_map), pluggable models
 - ``plans``      concrete query definitions + DuckDB oracle SQL for testing
 """
 

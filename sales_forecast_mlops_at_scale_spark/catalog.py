@@ -1,4 +1,4 @@
-"""Catalog — load the driver's parquet fixtures as DataFrames / temp views.
+"""Catalog — load the parquet fixtures as DataFrames.
 
 Analog of the reference's dual schema system (SURVEY.md §1.3): declared
 StructTypes live in :mod:`schemas`; this module is the "reflection" side
@@ -22,10 +22,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .schemas import STAR_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: Dimension tables small enough to broadcast at any scale factor.
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
@@ -105,16 +101,6 @@ def load_dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in DIM_TABLES:
         raise ValueError(f"{name} is not a dimension table: {sorted(DIM_TABLES)}")
     return F.broadcast(load_table(spark, sf_dir, name))
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Register every star-schema fixture as a temp view; returns the frames."""
-    out: dict[str, DataFrame] = {}
-    for name in STAR_TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def write_partitioned(

@@ -16,11 +16,10 @@ model-quality gate is a ``filter(rmse <= max_rmse)``, and
 :func:`explode_forecasts` turns each row back into horizon forecast rows
 (``posexplode(arrays_zip(...))``, ``date_add(horizon_start, pos)``).
 ``pipeline.run_weekly`` materializes the rows once and derives both
-outputs from them.  The kernels are the existing ones — the
-``sorted_group_map`` batch kernels of ``ml/train.py`` and
-``ml/predict.py`` for the seasonal-naive model, ``make_train_fn`` and
-``make_predict_fn`` for per-group models — so the output equals the
-composed pipeline's row for row (``tests/test_domain_pipeline.py``).
+outputs from them.  The kernels are the existing ones — the train and
+predict batch kernels of ``ml/train.py`` and ``ml/predict.py``, for any
+model — so the output equals the composed pipeline's row for row
+(``tests/test_domain_pipeline.py``).
 
 **CV → gate → predict** (:func:`gated_forecast_groups`), seasonal-naive
 only.  When the only consumer of the metrics is the quality gate
@@ -57,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import FORECAST_OUTPUT, TRAIN_METRICS
-from .predict import make_predict_batch_kernel, make_predict_fn
+from .predict import make_predict_batch_kernel
 from .train import (
     N_SPLITS,
     _cv_average,
@@ -65,7 +64,6 @@ from .train import (
     _fold_rmse,
     _grouped_model_pass,
     make_train_batch_kernel,
-    make_train_fn,
 )
 
 #: the forecast columns carried as one ``array<int>`` per group
@@ -76,54 +74,30 @@ _DATE_COL = "date"
 _Y_COL = "sales"
 
 
-def _attach_horizon(
-    metrics: pd.DataFrame, forecasts: pd.DataFrame, horizon_days: int
-) -> pd.DataFrame:
-    """Fold the forecast rows (``horizon_days`` per group, in the metrics'
-    group order, date-ascending) into list columns of the metrics rows."""
-    for c in FORECAST_ARRAYS:
-        metrics[c] = list(forecasts[c].to_numpy().reshape(-1, horizon_days))
-    return metrics
-
-
 def make_fit_forecast_batch_kernel(
-    keys: Sequence[str], horizon_start: _dt.date, horizon_days: int
-):
-    """Batch kernel for :func:`operators.groupmap.sorted_group_map`: the
-    train and predict batch kernels on the same sorted batch, one fused
-    row per group."""
-    train = make_train_batch_kernel(keys, y_col=_Y_COL)
-    predict = make_predict_batch_kernel(keys, horizon_start, horizon_days, y_col=_Y_COL)
-
-    def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        return _attach_horizon(
-            train(pdf, starts, ends), predict(pdf, starts, ends), horizon_days
-        )
-
-    return kernel
-
-
-def make_fit_forecast_fn(
     keys: Sequence[str],
     horizon_start: _dt.date,
     horizon_days: int,
     *,
     model_spec: str = "seasonal_naive",
 ):
-    """Per-group function for ``applyInPandas``: ``make_train_fn`` and
-    ``make_predict_fn`` on the same pandas group, one fused row out."""
-    train_fn = make_train_fn(
-        keys, model_spec=model_spec, date_col=_DATE_COL, y_col=_Y_COL
-    )
-    predict_fn = make_predict_fn(
-        keys, horizon_start, horizon_days,
-        model_spec=model_spec, date_col=_DATE_COL, y_col=_Y_COL,
+    """Batch kernel for :func:`operators.groupmap.sorted_group_map`: the
+    train and predict batch kernels of ``model_spec`` on the same sorted
+    batch, one fused row per group."""
+    train = make_train_batch_kernel(keys, model_spec=model_spec, y_col=_Y_COL)
+    predict = make_predict_batch_kernel(
+        keys, horizon_start, horizon_days, model_spec=model_spec, y_col=_Y_COL
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _attach_horizon(train_fn(pdf), predict_fn(pdf), horizon_days)
+    def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
+        # each group's forecast rows (its horizon, date-ascending, in the
+        # metrics' group order) become list columns of its metrics row
+        metrics, forecasts = train(pdf, starts, ends), predict(pdf, starts, ends)
+        for c in FORECAST_ARRAYS:
+            metrics[c] = list(forecasts[c].to_numpy().reshape(-1, horizon_days))
+        return metrics
 
-    return fn
+    return kernel
 
 
 def fit_forecast_groups(
@@ -137,7 +111,7 @@ def fit_forecast_groups(
     """One row per key group of a ``sales``-shaped frame (``date`` /
     ``sales`` columns): ``train_groups``' metrics plus the
     ``forecast_groups`` horizon as three ``array<int>`` columns (lazy),
-    routed by ``train._grouped_model_pass``."""
+    run by ``train._grouped_model_pass``."""
     from pyspark.sql import types as T
 
     template = T.StructType(
@@ -148,9 +122,7 @@ def fit_forecast_groups(
         sales,
         keys,
         template,
-        model_spec=model_spec,
-        batch_kernel=make_fit_forecast_batch_kernel(keys, horizon_start, horizon_days),
-        group_fn=make_fit_forecast_fn(
+        make_fit_forecast_batch_kernel(
             keys, horizon_start, horizon_days, model_spec=model_spec
         ),
         date_col=_DATE_COL,
@@ -227,11 +199,9 @@ def gated_forecast_groups(
         sales,
         keys,
         FORECAST_OUTPUT,
-        model_spec="seasonal_naive",
-        batch_kernel=make_gated_batch_kernel(
+        make_gated_batch_kernel(
             keys, horizon_start, horizon_days, y_col=y_col, max_rmse=max_rmse
         ),
-        group_fn=None,
         date_col=date_col,
         y_col=y_col,
         pre_partitioned=pre_partitioned,

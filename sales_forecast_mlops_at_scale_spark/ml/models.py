@@ -4,7 +4,9 @@ The reference hard-codes Prophet inside its Ray training task
 (``/root/reference/services/training-service/app/train_utils.py:72-151``)
 and reloads it per HTTP request at predict time
 (``services/forecast-service/app/handlers/mlflow.py:24-31``).  Here the
-model is a strategy object used inside ``applyInPandas`` group functions:
+model is a strategy object fit per key group by the grouped-map kernels
+(``train.make_model_kernel``); the seasonal-naive model also has
+vectorized batch kernels, equal to it row for row:
 
 - :class:`SeasonalNaiveModel` — deterministic weekday-lookup baseline.
   Correctness tests run against it (SURVEY.md §7 phase 4: "test the
@@ -14,7 +16,7 @@ model is a strategy object used inside ``applyInPandas`` group functions:
   importable in executors (it is not shipped in this container); same
   interface, swaps in without touching the pipeline.
 
-Models are constructed **inside** the executor-side group function (no
+Models are constructed **inside** the executor-side kernel (no
 driver-side state to serialize beyond the spec string).
 """
 
@@ -135,7 +137,7 @@ class ProphetModel:
 
 
 def get_model(spec: str = "seasonal_naive"):
-    """Model factory used inside group functions; ``spec`` is a plain
+    """Model factory used inside the grouped-map kernels; ``spec`` is a plain
     string so it ships to executors without pickling model state."""
     if spec == "seasonal_naive":
         return SeasonalNaiveModel()

@@ -1,15 +1,18 @@
 """Grouped-map training with walk-forward cross-validation.
 
 Re-expresses the reference's weekly training job (SURVEY.md §3.2) — Ray
-task per (store, product), ``train_utils.py:72-151`` — as ONE Spark job,
-routed by :func:`_grouped_model_pass`: the seasonal-naive model runs as
+task per (store, product), ``train_utils.py:72-151`` — as ONE Spark job.
+Every grouped model pass takes one route, :func:`_grouped_model_pass`:
 a batch kernel over sorted partitions
-(``operators/groupmap.sorted_group_map``), any other model as one
-``applyInPandas`` call per group with the model from ``get_model``.
-:func:`_cv_test_rows` is the one seasonal-naive walk-forward CV of
-``ml/``: numpy over every group of an Arrow batch at once, shared by the
-train, fused, gated, compare and conformal kernels (the predict kernels
-run its model, :func:`_seasonal_naive`, on the whole history).
+(``operators/groupmap.sorted_group_map``), many groups per Arrow batch.
+Only the kernel depends on the model (:func:`_has_batch_kernel`): the
+seasonal-naive model has vectorized kernels — :func:`_cv_test_rows` is
+the one seasonal-naive walk-forward CV of ``ml/``, numpy over every
+group of a batch at once, shared by the train, fused, gated, compare and
+conformal kernels (the predict kernels run its model,
+:func:`_seasonal_naive`, on the whole history) — and every other model
+runs through :func:`make_model_kernel`, which fits the model from
+``get_model`` on each group of the batch.
 
 The reference's ``ray.put(df)`` broadcast of the full frame to 1,115 tasks
 (``ray_train_all_job.py:37``) becomes the groupBy shuffle: each executor
@@ -30,6 +33,7 @@ least the executor core count.
 
 from __future__ import annotations
 
+import datetime as _dt
 import math
 from collections.abc import Sequence
 
@@ -38,12 +42,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..operators.groupmap import hash_partition, sorted_group_map
+from ..operators.groupmap import sorted_group_map
 from ..schemas import TRAIN_METRICS
-from .models import MODEL_NAME_FMT, get_model
+from .models import MODEL_NAME_FMT, SeasonalNaiveModel, get_model
 
 #: walk-forward CV splits (``TimeSeriesSplit(n_splits=5)``, module doc)
 N_SPLITS = 5
+#: a model's forecast columns, as (forecast_sale, lower_ci, upper_ci)
+_BANDS = ["yhat", "yhat_lower", "yhat_upper"]
 
 
 def _with_time_cols(df: DataFrame, date_col: str) -> DataFrame:
@@ -207,21 +213,124 @@ def _model_names(pdf: pd.DataFrame, keys: Sequence[str], starts) -> list[str]:
     return [MODEL_NAME_FMT.format(store=s_, product=p_) for s_, p_ in zip(stores, products)]
 
 
+def _horizon(horizon_start: _dt.date, horizon_days: int):
+    """The group-invariant horizon, built once per job: its dates, their
+    weekdays, and their ``datetime.date`` values."""
+    dates = pd.date_range(pd.Timestamp(horizon_start), periods=horizon_days, freq="D")
+    return dates, dates.dayofweek.to_numpy(), np.asarray(dates.date, dtype=object)
+
+
+def _metrics_frame(pdf, keys, starts, ends, n_folds, metrics, version) -> pd.DataFrame:
+    """TRAIN_METRICS rows of the batch groups ``[starts[i], ends[i])``:
+    ``n_folds`` CV folds run and ``metrics``, the (rmse, mape, mae,
+    medae) fold means of each group."""
+    return pd.DataFrame(
+        {
+            **{k: pdf[k].to_numpy()[starts] for k in keys},
+            "n_rows": (ends - starts).astype("int64"),
+            "n_splits": n_folds,
+            **dict(zip(("rmse", "mape", "mae", "medae"), metrics)),
+            "model_name": _model_names(pdf, keys, starts),
+            "model_version": version,
+        }
+    )
+
+
+def _forecast_frame(pdf, keys, starts, sale, lower, upper, f_dates, version) -> pd.DataFrame:
+    """FORECAST_OUTPUT rows of the batch groups whose first row is at
+    ``starts``: ``sale`` / ``lower`` / ``upper`` are their (groups ×
+    horizon) int forecasts and bands."""
+    horizon_days = len(f_dates)
+    return pd.DataFrame(
+        {
+            **{k: np.repeat(pdf[k].to_numpy()[starts], horizon_days) for k in keys},
+            "forecast_date": np.tile(f_dates, len(starts)),
+            "forecast_sale": sale.ravel(),
+            "lower_ci": lower.ravel(),
+            "upper_ci": upper.ravel(),
+            "model_name": np.repeat(
+                np.asarray(_model_names(pdf, keys, starts), dtype=object), horizon_days
+            ),
+            "model_version": version,
+        }
+    )
+
+
+def _has_batch_kernel(model_spec: str) -> bool:
+    """The one model choice of ``ml/``: only the seasonal-naive model has
+    vectorized batch kernels; any other runs in :func:`make_model_kernel`."""
+    return model_spec == "seasonal_naive"
+
+
+def _model_cv(model_spec: str, history: pd.DataFrame, n_splits: int):
+    """Walk-forward CV of ``get_model(model_spec)`` on one time-ordered
+    history: the folds run and the fold means of RMSE / MAPE / MAE /
+    MedAE, rounded half-away to 4 digits (NaN without a fold; MAPE over
+    the folds with a nonzero actual).  No closing full-history fit
+    (``train_utils.py:125-149``): the forecast fits at predict time."""
+    folds = []
+    for train_end, test_end in _split_bounds(len(history), n_splits):
+        model = get_model(model_spec).fit(history.iloc[:train_end])
+        test = history.iloc[train_end:test_end]
+        yhat = model.predict(test["ds"])["yhat"]
+        folds.append(_metrics_np(test["y"].to_numpy(float), yhat.to_numpy(float)))
+    rmse, mape, mae, medae = zip(*folds) if folds else ((),) * 4
+    mean = lambda xs: _round_half_away(sum(xs) / len(xs), 4) if xs else math.nan  # noqa: E731
+    mape = [p for p in mape if not math.isnan(p)]
+    return len(folds), mean(rmse), mean(mape), mean(mae), mean(medae)
+
+
+def make_model_kernel(
+    keys: Sequence[str],
+    model_spec: str,
+    *,
+    y_col: str = "y",
+    n_splits: int = N_SPLITS,
+    horizon: tuple[_dt.date, int] | None = None,
+):
+    """Batch kernel for :func:`operators.groupmap.sorted_group_map` of a
+    model without its own: ``get_model(model_spec)`` per group of the
+    batch, on the group's ``ds`` (from ``__ord``) and ``y`` rows, already
+    time-ordered by the operator's sort.  Without ``horizon`` it emits
+    the walk-forward CV (:func:`_model_cv`) as TRAIN_METRICS rows; with
+    ``horizon = (start, days)`` the forecast of the model fit on the
+    whole history as FORECAST_OUTPUT rows.  One output frame per batch."""
+    if horizon is not None:
+        dates, _, f_dates = _horizon(*horizon)
+
+    def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
+        ds = pd.to_datetime(pdf["__ord"].to_numpy(), unit="D")
+        ys = pdf[y_col].to_numpy()
+        groups = [pd.DataFrame({"ds": ds[s:e], "y": ys[s:e]}) for s, e in zip(starts, ends)]
+        version = get_model(model_spec).version
+        if horizon is None:
+            cv = np.array([_model_cv(model_spec, g, n_splits) for g in groups])
+            n_folds = cv[:, 0].astype("int32")
+            return _metrics_frame(pdf, keys, starts, ends, n_folds, cv[:, 1:].T, version)
+        fits = (get_model(model_spec).fit(g) for g in groups)
+        bands = np.stack([m.predict(pd.Series(dates))[_BANDS].to_numpy() for m in fits])
+        return _forecast_frame(pdf, keys, starts, *bands.transpose(2, 0, 1), f_dates, version)
+
+    return kernel
+
+
 def make_train_batch_kernel(
     keys: Sequence[str],
     *,
+    model_spec: str = "seasonal_naive",
     n_splits: int = N_SPLITS,
     y_col: str = "y",
 ):
     """Batch kernel for :func:`operators.groupmap.sorted_group_map`: the
-    seasonal-naive walk-forward CV of :func:`make_train_fn` for every
-    group of an Arrow batch at once (:func:`_cv_test_rows`), one output
-    frame per batch.  Rows arrive pre-sorted by ``__ord`` within each
-    group (the operator's partition sort), so no sort by time runs.
-    Property-tested equal to ``make_train_fn`` with
-    ``SeasonalNaiveModel`` (``tests/test_groupmap.py``) and hash-checked
-    by the DuckDB oracles."""
-    from .models import SeasonalNaiveModel
+    walk-forward CV of every group of an Arrow batch, one output frame
+    per batch.  For the seasonal-naive model it is vectorized
+    (:func:`_cv_test_rows`): rows arrive pre-sorted by ``__ord`` within
+    each group (the operator's partition sort), so no sort by time runs.
+    Property-tested equal to :func:`make_model_kernel` running
+    ``SeasonalNaiveModel`` per group (``tests/test_groupmap.py``) and
+    hash-checked by the DuckDB oracles."""
+    if not _has_batch_kernel(model_spec):
+        return make_model_kernel(keys, model_spec, y_col=y_col, n_splits=n_splits)
 
     def kernel(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
         ys = pdf[y_col].to_numpy(dtype=float)
@@ -230,74 +339,11 @@ def make_train_batch_kernel(
         )
         per_fold = _fold_metrics(ys[rows], yhat, fold)
         trained = ends - starts > n_splits
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy()[starts] for k in keys},
-                "n_rows": (ends - starts).astype("int64"),
-                "n_splits": trained.astype("int32") * n_splits,
-                **{
-                    name: _cv_average(m, trained, n_splits)
-                    for name, m in zip(("rmse", "mape", "mae", "medae"), per_fold)
-                },
-                "model_name": _model_names(pdf, keys, starts),
-                "model_version": SeasonalNaiveModel.version,
-            }
-        )
+        means = [_cv_average(m, trained, n_splits) for m in per_fold]
+        n_folds = trained.astype("int32") * n_splits
+        return _metrics_frame(pdf, keys, starts, ends, n_folds, means, SeasonalNaiveModel.version)
 
     return kernel
-
-
-def make_train_fn(
-    keys: Sequence[str],
-    *,
-    model_spec: str = "seasonal_naive",
-    n_splits: int = N_SPLITS,
-    date_col: str = "ds",
-    y_col: str = "y",
-):
-    """Build the per-group function for ``applyInPandas``: walk-forward CV
-    of ``get_model(model_spec)``, one TRAIN_METRICS row out per group."""
-
-    def train_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rmses, mapes, maes, medaes = [], [], [], []
-        n = len(pdf)
-        pdf = pdf.sort_values(date_col).reset_index(drop=True)
-        history = pd.DataFrame({"ds": pdf[date_col], "y": pdf[y_col]})
-        for train_end, test_end in _split_bounds(n, n_splits):
-            model = get_model(model_spec).fit(history.iloc[:train_end])
-            fold = history.iloc[train_end:test_end]
-            yhat = model.predict(fold["ds"])["yhat"]
-            r, p, a, m = _metrics_np(fold["y"].to_numpy(float), yhat.to_numpy(float))
-            rmses.append(r)
-            mapes.append(p)
-            maes.append(a)
-            medaes.append(m)
-        # The reference ends with a final full-history fit + MLflow registry
-        # push (train_utils.py:125-149).  Our predict path fits-at-predict
-        # (see predict.py), so the final fit here would be dead work; the
-        # registry metadata (name/version) is still emitted per group.
-        model = get_model(model_spec)
-        key_vals = {k: pdf[k].iloc[0] for k in keys}
-        store = key_vals.get(keys[0])
-        product = key_vals.get(keys[1]) if len(keys) > 1 else ""
-        mean = lambda xs: _round_half_away(sum(xs) / len(xs), 4) if xs else None  # noqa: E731
-        return pd.DataFrame(
-            [
-                {
-                    **key_vals,
-                    "n_rows": n,
-                    "n_splits": len(rmses),
-                    "rmse": mean(rmses),
-                    "mape": mean([p for p in mapes if not math.isnan(p)]),
-                    "mae": mean(maes),
-                    "medae": mean(medaes),
-                    "model_name": MODEL_NAME_FMT.format(store=store, product=product),
-                    "model_version": model.version,
-                }
-            ]
-        )
-
-    return train_fn
 
 
 def _keyed_schema(template: T.StructType, df: DataFrame, keys: Sequence[str]) -> T.StructType:
@@ -313,44 +359,33 @@ def _grouped_model_pass(
     sales: DataFrame,
     keys: Sequence[str],
     template: T.StructType,
+    kernel,
     *,
-    model_spec: str,
-    batch_kernel,
-    group_fn,
     date_col: str,
     y_col: str,
     pre_partitioned: bool = False,
 ) -> DataFrame:
-    """The one routing point of every grouped model pass (train, forecast,
-    fused train + forecast, gated forecast); the output schema is
-    ``template`` keyed on ``sales``' key columns.
-
-    The seasonal-naive model runs ``batch_kernel`` through
-    :func:`operators.groupmap.sorted_group_map` — thousands of small
-    groups per Arrow batch instead of one ``applyInPandas`` call (and one
-    pandas frame) per group; ``pre_partitioned=True`` additionally skips
-    the exchange when the caller already hash-partitioned ``sales`` on
-    ``keys`` (see ``plans/ml_queries.demand_series``).  Any other model
-    (Prophet) runs ``group_fn`` in the classic per-group
-    ``applyInPandas`` shape, where the per-call constant is noise next to
-    the fit."""
-    schema = _keyed_schema(template, sales, keys)
-    timed = _with_time_cols(sales, date_col)
-    if model_spec == "seasonal_naive":
-        # guide §4.1: mapInPandas is opaque to column pruning, so select
-        # exactly what the kernel reads — the raw date column otherwise
-        # rides the shuffle+sort+Arrow boundary unused (date32 → pandas
-        # materializes an object array of datetime.date per task)
-        timed = timed.select(*keys, y_col, "__dow", "__ord")
-        return sorted_group_map(
-            timed,
-            keys,
-            batch_kernel,
-            schema,
-            order_cols=("__ord",),
-            pre_partitioned=pre_partitioned,
-        )
-    return hash_partition(timed, keys).groupBy(*keys).applyInPandas(group_fn, schema)
+    """The one route of every grouped model pass (train, forecast, fused
+    train + forecast, gated forecast): ``kernel`` through
+    :func:`operators.groupmap.sorted_group_map`, thousands of small
+    groups per Arrow batch, each time-ordered by ``__ord``; the output
+    schema is ``template`` keyed on ``sales``' key columns.
+    ``pre_partitioned=True`` skips the exchange when the caller already
+    hash-partitioned ``sales`` on ``keys`` (see
+    ``plans/ml_queries.demand_series``)."""
+    # guide §4.1: mapInPandas is opaque to column pruning, so select
+    # exactly what the kernels read — the raw date column otherwise
+    # rides the shuffle+sort+Arrow boundary unused (date32 → pandas
+    # materializes an object array of datetime.date per task)
+    timed = _with_time_cols(sales, date_col).select(*keys, y_col, "__dow", "__ord")
+    return sorted_group_map(
+        timed,
+        keys,
+        kernel,
+        _keyed_schema(template, sales, keys),
+        order_cols=("__ord",),
+        pre_partitioned=pre_partitioned,
+    )
 
 
 def train_groups(
@@ -365,16 +400,12 @@ def train_groups(
 ) -> DataFrame:
     """One CV-metrics row per key group (the reference's per-model MLflow
     metrics, as a DataFrame): TRAIN_METRICS with the key columns' actual
-    types substituted, routed by :func:`_grouped_model_pass`."""
+    types substituted, run by :func:`_grouped_model_pass`."""
     return _grouped_model_pass(
         sales,
         keys,
         TRAIN_METRICS,
-        model_spec=model_spec,
-        batch_kernel=make_train_batch_kernel(keys, n_splits=n_splits, y_col=y_col),
-        group_fn=make_train_fn(
-            keys, model_spec=model_spec, n_splits=n_splits, date_col=date_col, y_col=y_col
-        ),
+        make_train_batch_kernel(keys, model_spec=model_spec, n_splits=n_splits, y_col=y_col),
         date_col=date_col,
         y_col=y_col,
         pre_partitioned=pre_partitioned,

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -40,7 +40,3 @@ def rebase_dates(
     days_from_latest = F.datediff(F.lit(anchor), F.col(date_col).cast("date"))
     return df.withColumn(out_col, F.date_sub(F.lit(yesterday), days_from_latest))
 
-
-def rebased_day_offset(date_col: Column, anchor: Column) -> Column:
-    """Column-level variant: days between ``anchor`` and ``date_col``."""
-    return F.datediff(anchor, date_col)

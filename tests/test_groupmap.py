@@ -3,17 +3,19 @@ grouped map that carries the ML family.
 
 The contract under test: the seasonal-naive batch kernels over sorted
 partitions are BIT-IDENTICAL to their references — train and forecast
-to the per-group ``applyInPandas`` path running ``SeasonalNaiveModel``
-itself, the fused gated forecast to the composed
+to ``applyInPandas`` over the generic per-model kernel
+(``train.make_model_kernel``) running ``SeasonalNaiveModel`` itself,
+one time-sorted group at a time, the fused gated forecast to the composed
 ``forecast_groups(gate_series(series, train_groups(series)))`` — on the
 smoke demand series and on a fixture of degenerate series, and when
 Arrow batches are shrunk far below group size, forcing the
 trailing-group carry-over across many batches.  The ML registry queries
 built on those kernels (train, forecast, gated, compare, marginal and
 Mondrian conformal) also match their DuckDB oracles on the degenerate
-series.  Plus the machinery units (boundary detection with null keys)
-and the plan promise (``pre_partitioned=True`` downstream of
-``repartition(keys)`` runs the whole pipeline on ONE exchange)."""
+series.  Plus the machinery units (boundary detection with null keys),
+the plan promise (``pre_partitioned=True`` downstream of
+``repartition(keys)`` runs the whole pipeline on ONE exchange), and a
+model without a batch kernel running per group on the same route."""
 
 from __future__ import annotations
 
@@ -30,11 +32,10 @@ from sales_forecast_mlops_at_scale_spark.ml import (
     gated_forecast_groups,
     train_groups,
 )
-from sales_forecast_mlops_at_scale_spark.ml.predict import make_predict_fn
 from sales_forecast_mlops_at_scale_spark.ml.train import (
     _keyed_schema,
     _with_time_cols,
-    make_train_fn,
+    make_model_kernel,
 )
 from sales_forecast_mlops_at_scale_spark.operators.groupmap import (
     group_starts,
@@ -112,6 +113,17 @@ def cmp_series(request, spark, series):
     ).repartition(*KEYS)
 
 
+def _per_group(kernel):
+    """A batch kernel as an ``applyInPandas`` group function: the group
+    sorted by time, then passed as a batch of one group."""
+
+    def fn(pdf):
+        pdf = pdf.sort_values("__ord", kind="stable").reset_index(drop=True)
+        return kernel(pdf, np.array([0]), np.array([len(pdf)]))
+
+    return fn
+
+
 def _schemas(series):
     return (
         _keyed_schema(TRAIN_METRICS, series, KEYS),
@@ -162,7 +174,7 @@ def test_train_batched_equals_apply_in_pandas(spark, cmp_series):
     old = (
         _with_time_cols(series, "ds")
         .groupBy(*KEYS)
-        .applyInPandas(make_train_fn(KEYS, date_col="ds", y_col="y"), tschema)
+        .applyInPandas(_per_group(make_model_kernel(KEYS, "seasonal_naive")), tschema)
     )
     new = train_groups(
         series, KEYS, model_spec="seasonal_naive", date_col="ds", y_col="y",
@@ -178,7 +190,8 @@ def test_forecast_batched_equals_apply_in_pandas(spark, cmp_series, anchor):
         _with_time_cols(series, "ds")
         .groupBy(*KEYS)
         .applyInPandas(
-            make_predict_fn(KEYS, anchor, 7, date_col="ds", y_col="y"), fschema
+            _per_group(make_model_kernel(KEYS, "seasonal_naive", horizon=(anchor, 7))),
+            fschema,
         )
     )
     new = forecast_groups(
@@ -202,21 +215,18 @@ def test_gated_batched_equals_apply_in_pandas(spark, cmp_series, anchor):
     assert _canon(old) == _canon(new)
 
 
-def test_carry_over_across_tiny_arrow_batches(spark, series):
+@pytest.mark.parametrize("model_spec", ["seasonal_naive", "moving_average"])
+def test_carry_over_across_tiny_arrow_batches(spark, series, model_spec):
     """7-row Arrow batches split every ~30-row group across ≥4 batches —
-    the carry-over path runs for essentially every group; the result must
-    not move by a bit.  Also covers the whole-batch-is-one-group branch
+    the carry-over path runs for essentially every group, for the
+    vectorized kernel and the per-model one alike; the result must not
+    move by a bit.  Also covers the whole-batch-is-one-group branch
     (len(starts) == 1 → accumulate into pending)."""
-    tschema, _ = _schemas(series)
-    baseline = train_groups(
-        series, KEYS, model_spec="seasonal_naive", date_col="ds", y_col="y"
-    )
+    baseline = train_groups(series, KEYS, model_spec=model_spec, date_col="ds", y_col="y")
     expected = _canon(baseline)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        small = train_groups(
-            series, KEYS, model_spec="seasonal_naive", date_col="ds", y_col="y"
-        )
+        small = train_groups(series, KEYS, model_spec=model_spec, date_col="ds", y_col="y")
         assert _canon(small) == expected
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -235,16 +245,45 @@ def test_pre_partitioned_plan_has_single_exchange(spark, series):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_prophet_spec_still_routes_to_apply_in_pandas(spark, series):
-    """The heavy-model fallback keeps the classic per-group shape: the
-    physical plan must contain FlatMapGroupsInPandas (not MapInPandas).
-    Import-gated specs raise only at execution, so the plan is buildable
-    even without the prophet wheel."""
-    df = train_groups(
-        series, KEYS, model_spec="prophet", date_col="ds", y_col="y"
+def test_non_batch_models_run_per_group_through_get_model(spark, series, anchor):
+    """A model without a batch kernel takes the same sorted-batch route
+    (MapInPandas, never a per-group FlatMapGroupsInPandas) and runs
+    ``get_model``'s model on each group: the moving-average forecast is
+    the truncated mean of the group's last 28 observations, ±10 % bands
+    truncated.  Import-gated specs raise only at execution, so the
+    prophet plan is buildable without the prophet wheel."""
+    import duckdb
+
+    plan = (
+        train_groups(series, KEYS, model_spec="prophet", date_col="ds", y_col="y")
+        ._jdf.queryExecution()
+        .analyzed()
+        .toString()
     )
-    plan = df._jdf.queryExecution().analyzed().toString()
-    assert "FlatMapGroupsInPandas" in plan
+    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan, plan
+
+    got = forecast_groups(
+        series, KEYS, horizon_start=anchor, horizon_days=7,
+        model_spec="moving_average", date_col="ds", y_col="y",
+    )
+    con = duckdb.connect()
+    con.register("series", series.toPandas())
+    want = con.execute(
+        f"""
+        WITH tail AS (
+            SELECT *, row_number() OVER (
+                PARTITION BY l_suppkey, l_returnflag ORDER BY ds DESC) AS rn
+            FROM series),
+        level AS (
+            SELECT l_suppkey, l_returnflag, trunc(avg(y::DOUBLE)) AS lv
+            FROM tail WHERE rn <= 28 GROUP BY l_suppkey, l_returnflag)
+        SELECT l_suppkey, l_returnflag, DATE '{anchor}' + h.i::INT AS forecast_date,
+               lv::INT, trunc(lv * 0.9)::INT, trunc(lv * 1.1)::INT,
+               'forecaster-store-' || l_suppkey || '-' || l_returnflag, '1'
+        FROM level CROSS JOIN range(7) AS h(i)
+        """
+    ).fetchall()
+    assert _canon(got) == sorted(want)
 
 
 def test_group_starts_preserves_int64_precision():
