@@ -30,7 +30,7 @@ import json
 import os
 import time
 
-from sales_forecast_mlops_at_scale_spark.cache import clear_slots
+from sales_forecast_mlops_at_scale_spark.cache import clear_slots, memo_stats
 from sales_forecast_mlops_at_scale_spark.plans import all_queries
 from sales_forecast_mlops_at_scale_spark.session import get_spark
 
@@ -289,8 +289,8 @@ def print_results(payload: dict) -> None:
        each parseable on its own: ``{"queries_part": i, "of": n,
        "q": {name: min_sec, ...}}`` — these keep per-query and scaling
        comparison possible when line 1 is truncated;
-    3. one compact line (<1 KB) with the headline total and the slowest
-       query mins.
+    3. one compact line (<1 KB) with the headline total, the registry
+       plan cache's hits and misses, and the slowest query mins.
     """
     timings = payload["queries"]
     print(json.dumps(payload))
@@ -316,6 +316,8 @@ def print_results(payload: dict) -> None:
         "canary_wall_end": payload["canary_wall_end"],
         "overhead_floor": payload["overhead_floor"],
         "overhead_floor_end": payload["overhead_floor_end"],
+        "plan_hits": payload.get("plan_hits"),
+        "plan_misses": payload.get("plan_misses"),
         "slowest": slowest,
     }))
 
@@ -339,6 +341,7 @@ def main() -> None:
     # floor rides next to it (affine calibration, VERDICT r10 #3)
     canary = canary_wall(spark)
     overhead = overhead_floor(spark)
+    registry_before = memo_stats()["registry"]
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     # noisy queries get extra reps (up to max_reps) until the CONVERGED
@@ -394,6 +397,9 @@ def main() -> None:
     # much trust a normalized comparison deserves (ADVICE r10)
     canary_end = canary_wall(spark)
     overhead_end = overhead_floor(spark)
+    # reps 2..N of a query are served by the registry plan cache (rep 1
+    # follows a clear_slots, so "first" still builds every plan)
+    registry = memo_stats()["registry"]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     # KEY ORDER MATTERS: the driver stores only the TAIL of this line
@@ -411,6 +417,8 @@ def main() -> None:
         "canary_wall_end": canary_end,
         "overhead_floor": overhead,
         "overhead_floor_end": overhead_end,
+        "plan_hits": registry["hits"] - registry_before["hits"],
+        "plan_misses": registry["misses"] - registry_before["misses"],
         "first": firsts,
         "spread": spreads,
         "queries": timings,

@@ -26,13 +26,38 @@ This is a session-scoped materialized-intermediate cache, not a results
 cache: queries remain correct with the registry disabled (drop to plain
 ``persist``), and a cluster deployment would swap slots for a
 materialized table with the same keying.
+
+Beside the slots, one LRU-capped memo store (``_MEMO``) keeps
+CONSTRUCTED plans and driver-side values, in three flavors:
+
+- **registry plans** (:func:`registry_plan`): every ``QueryDef.fn``
+  that ``plans.all_queries()`` returns goes through it.  A repeat call
+  returns the first call's DataFrame while the session, ``sf_dir``,
+  ``spark.sql.shuffle.partitions`` and the :func:`path_sig` of
+  ``sf_dir`` and of each input file's directory are unchanged.  Never
+  cached: plans with a leaf that is not a local file (a live stream,
+  ``LocalRelation``, ``LogicalRDD``) or with over ``_STAT_FILE_CAP``
+  files.  A ``q_stream_*`` build drains its stream into files and is
+  cached on those files only (more at :func:`registry_plan`);
+- **plan memos** (:func:`plan_memo`): operator sub-plans keyed on
+  :func:`_plan_key` / :func:`derived_key`;
+- **value memos** (:func:`value_memo`): values whose construction ran
+  Spark actions.
+
+All three share the lock, the LRU cap and the lifetime:
+:func:`clear_slots` drops every entry.  :func:`memo_stats` counts hits,
+misses and evictions per flavor.  :func:`path_sig` is the one file
+freshness test, shared with ``catalog.load_table``'s table memo.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
+import stat
 import threading
 from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
@@ -48,22 +73,29 @@ _LIVE_LOCK = threading.Lock()
 _STAT_FILE_CAP = 1024
 
 
-def _source_files(df: DataFrame) -> list[str]:
-    """Input files collected from the ANALYZED logical plan.
+def path_sig(path: str) -> tuple | None:
+    """``(size, mtime_ns)`` of ``path`` plus, for a directory, ``(name,
+    size, mtime_ns)`` of each direct child (an in-place rewrite of a
+    child leaves the directory's mtime alone); ``None`` once it is gone.
+    A memo entry over files is fresh while its paths keep this
+    signature; ns mtimes see a same-size rewrite within one second."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return st.st_size, st.st_mtime_ns
+        children = []
+        for e in os.scandir(path):
+            est = e.stat()
+            children.append((e.name, est.st_size, est.st_mtime_ns))
+        return st.st_size, st.st_mtime_ns, tuple(sorted(children))
+    except OSError:
+        return None
 
-    ``df.inputFiles()`` reads the OPTIMIZED plan, which applies cache
-    substitution first — so the moment a semantically-equal frame is
-    persisted anywhere in the session, ``inputFiles()`` returns ``[]``
-    and a name-digest keyed on it flips between invocations, silently
-    breaking slot reuse (observed: the first ``persist_slot`` call
-    digests the real file list, every later call digests the empty
-    list).  The analyzed plan still holds the real relations, so walk
-    it and collect every file-based relation's listing; per-node
-    failures (streaming relations, exotic sources) are skipped — the
-    walk only needs to be DETERMINISTIC across invocations, and a
-    consistently-skipped node still is."""
-    files, _ = _walk_leaves(df)
-    return files
+
+def _local_path(f: str) -> str | None:
+    """The local file system path of the file URI ``f``, else ``None``."""
+    url = urlparse(f)
+    return unquote(url.path) if url.scheme in ("", "file") else None
 
 
 #: Leaf node classes that carry no data of their own, so contributing
@@ -72,108 +104,87 @@ def _source_files(df: DataFrame) -> list[str]:
 _DATALESS_LEAVES = frozenset({"OneRowRelation", "Range"})
 
 
-def _walk_leaves(df: DataFrame) -> tuple[list[str], str | None]:
-    """Walk the ANALYZED plan once, returning ``(files, data_digest)``.
+def _walk_leaves(df: DataFrame) -> tuple[list[str], list[str] | None]:
+    """The ANALYZED plan's leaves as ``(files, data_parts)``.
 
-    ``files`` is every file-based relation's listing (see
-    :func:`_source_files` for why the analyzed — not optimized — plan).
-    ``data_digest`` covers the leaves that carry data OUTSIDE any file:
-    ``LocalRelation`` rows (Arrow-path local frames) are digested from
-    their ``UnsafeRow`` string forms, which print the row bytes and are
-    deterministic for identical data; ``LogicalRDD`` leaves (what
-    PySpark ``createDataFrame`` actually produces, and
-    ``localCheckpoint`` outputs) contribute their RDD id — unique for
-    the session's lifetime, so two same-schema-different-data frames can
-    never share a key (a semantically identical REBUILD gets a fresh id
-    and conservatively misses: a miss only costs a rebuild, never
-    correctness).  A leaf we can't account for at all makes the digest
-    ``None`` — the caller must then treat the plan as UNKEYABLE,
-    because the 32-bit ``semanticHash`` would be the key's only
-    data-sensitive component and a collision would silently serve
-    another dataset's results (ADVICE r6)."""
+    ``files`` is every file-based relation's listing.  The analyzed plan,
+    not the optimized one: ``df.inputFiles()`` reads the OPTIMIZED plan,
+    which applies cache substitution first, so once a semantically-equal
+    frame is persisted anywhere in the session it returns ``[]`` and a
+    key built on it flips between invocations.  ``data_parts`` covers
+    the leaves that carry data OUTSIDE any file: ``LocalRelation`` rows
+    (Arrow-path local frames) as their ``UnsafeRow`` string forms,
+    deterministic for identical data; ``LogicalRDD`` leaves (PySpark
+    ``createDataFrame`` and ``localCheckpoint`` outputs) as their RDD
+    id, unique for the session's lifetime, so two same-schema frames
+    with different data never share a key (a rebuild gets a fresh id and
+    conservatively misses).  A leaf we can't account for at all makes
+    ``data_parts`` ``None``: the plan is UNKEYABLE, because the 32-bit
+    ``semanticHash`` would be the key's only data-sensitive component
+    and a collision would silently serve another dataset's results.
+
+    One ``collectLeaves()`` call per plan (a py4j walk over every node
+    costs 0.5 s on ``q_ann_recall_all``'s plan at sf0.01).  Subquery
+    plans (scalar/IN/EXISTS hang off expressions, not children) come
+    from one recursive ``subqueriesAll()``; if that accessor ever
+    moves, refuse to key rather than under-key."""
     files: list[str] = []
     data_parts: list[str] = []
-    opaque = False
     root = df._jdf.queryExecution().analyzed()
-    stack = [root]
-    # subquery expressions (scalar/IN/EXISTS) hang off expressions, not
-    # children(), so a child-only walk would silently OMIT their
-    # relations from the key — a table referenced only inside a
-    # subquery could then be rewritten without changing the key, the
-    # exact stale-aliasing class the opaque rule exists to prevent.
-    # subqueriesAll is recursive, so ONE py4j call covers every level;
-    # if the accessor ever moves, refuse to key rather than under-key.
+    plans = [root]
     try:
         subs = root.subqueriesAll()
-        for i in range(subs.size()):
-            stack.append(subs.apply(i))
+        plans += [subs.apply(i) for i in range(subs.size())]
     except Exception:  # noqa: BLE001 — API surface change
-        opaque = True
-    while stack:
-        node = stack.pop()
-        ch = node.children()
-        n = ch.size()
-        if n == 0:
+        return files, None
+    for plan in plans:
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            node = leaves.apply(i)
             name = node.getClass().getSimpleName()
-            if name == "LogicalRelation":
-                try:
+            try:
+                if name == "LogicalRelation":
                     files.extend(str(f) for f in node.relation().inputFiles())
-                except Exception:  # noqa: BLE001 — non-file relation
-                    opaque = True
-            elif name == "LocalRelation":
-                try:
+                elif name == "LocalRelation":
                     data_parts.append(str(node.data().toString()))
-                except Exception:  # noqa: BLE001 — inaccessible rows
-                    opaque = True
-            elif name == "LogicalRDD":
-                try:
+                elif name == "LogicalRDD":
                     data_parts.append(f"rdd:{node.rdd().id()}")
-                except Exception:  # noqa: BLE001 — no rdd accessor
-                    opaque = True
-            elif name not in _DATALESS_LEAVES:
-                opaque = True
-        for i in range(n):
-            stack.append(ch.apply(i))
-    if opaque:
-        return sorted(files), None
-    digest = hashlib.sha256("\n".join(sorted(data_parts)).encode()).hexdigest()
-    return sorted(files), digest
-
-
-def _files_digest(df: DataFrame) -> str:
-    """Digest of the source files behind ``df``: name + size + mtime.
-
-    Names alone under-key: a directory rewritten in place with identical
-    file names (compaction, an external writer with deterministic part
-    names) would key identically and serve stale cached data.  Size and
-    modification time come from the driver-side FileSystem status — one
-    metadata RPC per file, same order as the listing itself.  Beyond
-    ``_STAT_FILE_CAP`` files the per-file stat cost stops being free, so
-    we degrade to names-only; at that point slot reuse assumes
-    content-addressed immutable part files (Spark's own writers qualify:
-    every part name embeds a job UUID)."""
-    try:
-        files = _source_files(df)
-    except Exception:  # noqa: BLE001 — connect clients
-        files = sorted(df.inputFiles())
-    return _stamp_files(df, files)
+                elif name not in _DATALESS_LEAVES:
+                    return sorted(files), None
+            except Exception:  # noqa: BLE001 — non-file relation, no accessor
+                return sorted(files), None
+    return sorted(files), sorted(data_parts)
 
 
 def _stamp_files(df: DataFrame, files: list[str]) -> str:
+    """Digest of ``files`` by name + size + mtime.
+
+    Names alone under-key: a directory rewritten in place with identical
+    file names (compaction, an external writer with deterministic part
+    names) would key identically and serve stale cached data.  A local
+    file is stamped with :func:`path_sig` (no py4j call); any other
+    takes size and modification time from the driver-side FileSystem
+    status, one metadata RPC per file.  Beyond ``_STAT_FILE_CAP`` files
+    the per-file stat cost stops being free, so we degrade to
+    names-only; reuse then assumes content-addressed immutable part
+    files (Spark's own writers qualify: every part name embeds a job
+    UUID)."""
     entries = files
     if 0 < len(files) <= _STAT_FILE_CAP:
         try:
             sess = df.sparkSession
-            jvm = sess._jvm
-            hconf = sess._jsc.hadoopConfiguration()
             stamped = []
             fs_cache: dict[str, object] = {}
             for f in files:
-                path = jvm.org.apache.hadoop.fs.Path(f)
-                scheme = f.split(":", 1)[0] if ":" in f else ""
+                local = _local_path(f)
+                if local is not None:
+                    stamped.append(f"{f}#{path_sig(local)}")
+                    continue
+                path = sess._jvm.org.apache.hadoop.fs.Path(f)
+                scheme = f.split(":", 1)[0]
                 fs = fs_cache.get(scheme)
                 if fs is None:
-                    fs = path.getFileSystem(hconf)
+                    fs = path.getFileSystem(sess._jsc.hadoopConfiguration())
                     fs_cache[scheme] = fs
                 st = fs.getFileStatus(path)
                 stamped.append(f"{f}#{st.getLen()}#{st.getModificationTime()}")
@@ -190,16 +201,17 @@ def _plan_key(df: DataFrame) -> tuple[int, str] | None:
         # Relation prints without its path), so same-shaped plans over
         # different directories stringify identically; semanticHash does
         # include relation identity but is only 32 bits.  The sorted
-        # input-file digest (name+size+mtime, see _files_digest) plus
-        # the LocalRelation row digest pin the data: reuse requires
-        # hash AND shape AND the exact same leaf data-as-stamped.  A
-        # plan with an OPAQUE leaf (LogicalRDD, streaming) is unkeyable
-        # — its only data-sensitive key component would be the 32-bit
+        # input-file digest (name+size+mtime, see _stamp_files) plus
+        # the local-leaf digest pin the data: reuse requires hash AND
+        # shape AND the exact same leaf data-as-stamped.  A plan with an
+        # OPAQUE leaf (streaming, unknown source) is unkeyable — its
+        # only data-sensitive key component would be the 32-bit
         # semanticHash, and a collision would silently serve another
         # dataset's cached rows / memoized results (ADVICE r6).
-        files, data_digest = _walk_leaves(df)
-        if data_digest is None:
+        files, data_parts = _walk_leaves(df)
+        if data_parts is None:
             return None
+        data_digest = hashlib.sha256("\n".join(data_parts).encode()).hexdigest()
         stamp = _stamp_files(df, files) + "#" + data_digest
         return plan.semanticHash(), plan.canonicalized().toString() + "#" + stamp
     except Exception:  # noqa: BLE001 — connect-only clients etc.
@@ -263,51 +275,79 @@ def persist_slot(
 _KEYLESS: list[DataFrame] = []
 
 # LRU-bounded: each memoized DataFrame pins a JVM plan tree (MBs for
-# Lloyd-unrolled indexes), so an unbounded dict would grow one entry per
-# distinct (corpus, queries, params) for the session's lifetime —
-# contradicting the bounded-memory contract _LIVE enforces per slot.
+# Lloyd-unrolled indexes; once the frame itself ran an action, also its
+# executed plan's broadcast relations), so an unbounded dict would grow
+# one entry per distinct (corpus, queries, params) for the session's
+# lifetime — contradicting the bounded-memory contract _LIVE enforces.
 # 32 entries covers every amortization pattern we serve (a handful of
 # index tiers × a handful of live query batches) while capping driver
 # retention; eviction only costs a plan rebuild, never correctness.
 _MEMO_CAP = 32
 
-#: One store for both memo flavors; entries are ``(owning_session,
-#: value)`` so the lookup logic (liveness, ownership, LRU, cap) exists
-#: exactly once.
-_MEMO: OrderedDict[tuple[int, str], tuple[object, object]] = OrderedDict()
+#: One store for every memo flavor (registry plans, ``plan_memo``,
+#: ``value_memo``); entries are ``(flavor, owning_session, value,
+#: stamp)`` so the lookup logic (liveness, ownership, freshness, LRU,
+#: cap) exists exactly once.
+_MEMO: OrderedDict[tuple[int, str], tuple[str, object, object, tuple]] = OrderedDict()
+
+#: Per-flavor hit / miss / eviction counts since process start (a miss
+#: is every build, keyed or not); read them with :func:`memo_stats`.
+_STATS = {
+    f: {"hits": 0, "misses": 0, "evictions": 0} for f in ("registry", "plan", "value")
+}
 
 
-def _memo(key: tuple[int, str] | None, build_entry, *, session):
-    """Shared memo core: ``build_entry() -> (owner, value)``.  A hit is
-    served only if its owning session is alive AND (when ``session`` is
-    given) is the caller's session; ``session=None`` accepts any live
-    owner."""
-    if key is None:
-        return build_entry()[1]
-    # _LIVE_LOCK guards the lookup/insert/evict sequence for the same
-    # reason it guards the slots: foreachBatch bodies run on separate
-    # driver threads (streaming/dedup_ingest.py routes through plan_memo),
-    # and an unguarded read-modify-write on the OrderedDict can corrupt
-    # the LRU order or double-build (ADVICE r12).  build_entry() itself
-    # runs OUTSIDE the lock — it may take seconds of py4j work and must
-    # not serialize unrelated slot traffic.
+def memo_stats() -> dict[str, dict[str, int]]:
+    """A snapshot of the per-flavor hit / miss / eviction counters."""
     with _LIVE_LOCK:
-        hit = _MEMO.get(key)
-        if hit is not None:
-            owner, value = hit
-            try:
-                alive = owner.sparkContext._jsc is not None
-            except Exception:  # noqa: BLE001 — stopped session
-                alive = False
-            if alive and (session is None or owner is session):
-                _MEMO.move_to_end(key)
-                return value
-    owner, value = build_entry()
+        return {f: dict(c) for f, c in _STATS.items()}
+
+
+def _fresh(stamp: tuple) -> bool:
+    """Every ``(path, path_sig)`` pair of ``stamp`` still holds."""
+    return all(path_sig(path) == sig for path, sig in stamp)
+
+
+def _memo(key: tuple[int, str] | None, build_entry, *, session, flavor: str):
+    """Shared memo core: ``build_entry() -> (owner, value, stamp)``.
+
+    A hit is served only if its owning session is alive AND (when
+    ``session`` is given) is the caller's session, and its ``stamp``
+    (see :func:`_fresh`; ``()`` for the key-only flavors) still holds;
+    ``session=None`` accepts any live owner.  A ``None`` stamp from the
+    build means "do not store"."""
+    if key is not None:
+        # _LIVE_LOCK guards the lookup/insert/evict sequence for the same
+        # reason it guards the slots: foreachBatch bodies run on separate
+        # driver threads (streaming/dedup_ingest.py routes through
+        # plan_memo), and an unguarded read-modify-write on the
+        # OrderedDict can corrupt the LRU order or double-build (ADVICE
+        # r12).  build_entry() itself runs OUTSIDE the lock — it may take
+        # seconds of py4j work and must not serialize unrelated slot
+        # traffic.
+        with _LIVE_LOCK:
+            hit = _MEMO.get(key)
+            if hit is not None:
+                _, owner, value, stamp = hit
+                try:
+                    alive = owner.sparkContext._jsc is not None
+                except Exception:  # noqa: BLE001 — stopped session
+                    alive = False
+                if alive and (session is None or owner is session):
+                    if _fresh(stamp):
+                        _MEMO.move_to_end(key)
+                        _STATS[flavor]["hits"] += 1
+                        return value
+                    del _MEMO[key]  # stale inputs: never served again
+    owner, value, stamp = build_entry()
     with _LIVE_LOCK:
-        _MEMO[key] = (owner, value)
-        _MEMO.move_to_end(key)
-        while len(_MEMO) > _MEMO_CAP:
-            _MEMO.popitem(last=False)
+        _STATS[flavor]["misses"] += 1
+        if key is not None and stamp is not None:
+            _MEMO[key] = (flavor, owner, value, stamp)
+            _MEMO.move_to_end(key)
+            while len(_MEMO) > _MEMO_CAP:
+                _, (evicted, *_rest) = _MEMO.popitem(last=False)
+                _STATS[evicted]["evictions"] += 1
     return value
 
 
@@ -333,9 +373,9 @@ def plan_memo(
 
     def build_entry():
         out = builder()
-        return out.sparkSession, out
+        return out.sparkSession, out, ()
 
-    return _memo(key, build_entry, session=session)
+    return _memo(key, build_entry, session=session, flavor="plan")
 
 
 def value_memo(key: tuple[int, str] | None, builder, *, session):
@@ -347,25 +387,66 @@ def value_memo(key: tuple[int, str] | None, builder, *, session):
     the value itself may not carry one); a hit from a different or
     stopped session is rejected.  Shares the store, LRU cap, and
     ``clear_slots`` lifetime with the plan memo."""
-    return _memo(key, lambda: (session, builder()), session=session)
-
-
-def query_memo(tag: str, base: DataFrame, builder, *params) -> DataFrame:
-    """Memoize a query's CONSTRUCTED plan keyed on ``base``'s plan key
-    plus ``params`` (optimization r12; the :func:`plan_memo` serving
-    pattern at query granularity).  Repeat invocations in one session
-    skip the py4j expression construction — a hit returns the plan,
-    never results, so every evaluation still computes from the parquet
-    inputs; changed input files change the digest and miss.  A ``None``
-    param is an UNKEYABLE ingredient (e.g. a second frame whose plan
-    key could not be derived) — refuse to key rather than alias two
-    different inputs under one memo entry."""
-    key = (
-        None
-        if any(p is None for p in params)
-        else derived_key(_plan_key(base), tag, *params)
+    return _memo(
+        key, lambda: (session, builder(), ()), session=session, flavor="value"
     )
-    return plan_memo(key, builder, session=base.sparkSession)
+
+
+def _registry_stamp(df: DataFrame, sf_dir: str) -> tuple | None:
+    """``(path, path_sig)`` for every directory a registry plan depends
+    on, or ``None`` when the plan must not be cached.
+
+    The directories are those holding the plan's input files (their
+    signatures cover the files, and a file added next to them, which
+    the plan's listing would miss) and ``sf_dir`` (fixture and
+    trained-state roots are derived from its tables but read from
+    elsewhere, so a rewritten table must miss even when the plan reads
+    only the derived root).  A leaf that is not a local file carries
+    data from work the stamp can't see."""
+    try:
+        files, data_parts = _walk_leaves(df)
+        if data_parts != [] or len(files) > _STAT_FILE_CAP:
+            return None
+        dirs = {sf_dir}
+        for f in files:
+            path = _local_path(f)
+            if path is None:
+                return None
+            dirs.add(os.path.dirname(path))
+        stamp = tuple((d, path_sig(d)) for d in sorted(dirs))
+        return None if any(sig is None for _, sig in stamp) else stamp
+    except Exception:  # noqa: BLE001 — connect clients
+        return None
+
+
+def registry_plan(name: str, spark, sf_dir: str, build) -> DataFrame:
+    """The registry query ``name``'s plan, built by ``build(spark,
+    sf_dir)`` once and then served from the memo store.
+
+    A repeat call returns the DataFrame of the first while it is the
+    same live session, the same ``sf_dir``, the same
+    ``spark.sql.shuffle.partitions`` (the one conf a build reads, in
+    ``groupmap.hash_partition``) and every stamped directory (see
+    :func:`_registry_stamp`) keeps its :func:`path_sig`.  A hit makes
+    one py4j call (the conf read) and checks the stamps with
+    ``os.stat``.  The key sees nothing else: not module state a build
+    reads, nor a stream behind files a build drained it into.
+
+    A hit is the same DataFrame object, so an action on it (``collect``,
+    ``toPandas``) re-runs its query execution and may reuse completed
+    shuffle and broadcast stages instead of re-reading the files: the
+    stamps keep that correct, and each cached entry keeps those
+    shuffle files and broadcasts alive until it is evicted or
+    :func:`clear_slots` drops it."""
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    tag = f"registry|{name}|{sf_dir}|{parts}"
+    key = (hash(tag) & 0x7FFFFFFF, tag)
+
+    def build_entry():
+        df = build(spark, sf_dir)
+        return spark, df, _registry_stamp(df, sf_dir)
+
+    return _memo(key, build_entry, session=spark, flavor="registry")
 
 
 def track_keyless(df: DataFrame) -> DataFrame:
@@ -385,7 +466,8 @@ def track_keyless(df: DataFrame) -> DataFrame:
 
 def clear_slots() -> None:
     """Unpersist and drop every live slot and every tracked keyless
-    persist (tests / session teardown)."""
+    persist, and drop every memo entry, registry plans included (tests /
+    session teardown).  The hit / miss / eviction counters keep counting."""
     with _LIVE_LOCK:
         for _, _, df in _LIVE.values():
             try:

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import path_sig
+
 #: Dimension tables small enough to broadcast at any scale factor.
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
@@ -33,28 +35,12 @@ DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 #: build pays it 1-3×, so the memo is the single biggest lever on
 #: cold-path plan-construction latency.  DataFrames are immutable plans:
 #: handing the same object to many queries is safe.  Staleness is
-#: checked per call against the path's (mtime_ns, size) — a rewrite,
+#: checked per call against the path's ``cache.path_sig`` — a rewrite,
 #: append, or compaction changes the signature and forces a re-read, so
 #: correctness never depends on the memo (it only skips re-listing an
 #: UNCHANGED path).  Entries are per-session (identity-checked) and the
 #: map stays bounded by the number of distinct table paths touched.
-_TABLE_MEMO: dict[str, tuple[object, tuple[int, int], DataFrame]] = {}
-
-
-def _path_sig(path: str) -> tuple[int, int] | None:
-    """(mtime_ns, size) for a file; for a directory, the max mtime_ns of
-    the dir and its direct children (appends create/replace entries, and
-    Spark writers always rewrite ``_SUCCESS``, bumping the dir)."""
-    try:
-        st = os.stat(path)
-        if not os.path.isdir(path):
-            return st.st_mtime_ns, st.st_size
-        newest = st.st_mtime_ns
-        for e in os.scandir(path):
-            newest = max(newest, e.stat().st_mtime_ns)
-        return newest, st.st_size
-    except OSError:
-        return None
+_TABLE_MEMO: dict[str, tuple[object, tuple, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -64,7 +50,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       (floor division, matching DuckDB's nanos read of the same parquet).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    sig = _path_sig(path)
+    sig = path_sig(path)
     if sig is not None:
         hit = _TABLE_MEMO.get(path)
         if hit is not None:

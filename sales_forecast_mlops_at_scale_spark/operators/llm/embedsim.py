@@ -325,7 +325,7 @@ def srp_topk(
     candidates only.  Queries with no collision in any band return no
     rows (the approximate contract).
     """
-    from ...cache import _plan_key, derived_key, persist_slot, query_memo
+    from ...cache import _plan_key, derived_key, persist_slot, plan_memo
 
     corpus_key = _plan_key(corpus)
     queries_key = _plan_key(queries)
@@ -385,18 +385,14 @@ def srp_topk(
 
     # whole-plan memo (optimization r12; the ivf/ivfpq serving pattern):
     # keyed on BOTH frames' plan keys + every parameter; a dim=None
-    # scalar pre-read only runs on a miss, and unkeyable inputs always
-    # build.  dim=None is mapped to the sentinel "auto" BEFORE keying
-    # (ADVICE r12): query_memo treats a literal None param as "unkeyable
-    # ingredient" and would silently disable the memo, yet the inferred
-    # dim is a pure function of the corpus already pinned by the plan
-    # key, so "auto" aliases nothing.
-    return query_memo(
-        "embedsim.srp_topk", corpus, build,
-        queries_key, k, nbits, band_bits,
-        "auto" if dim is None else dim, id_col, vec_col,
-        ndigits,
+    # scalar pre-read only runs on a miss, and an unkeyable input always
+    # builds.  dim=None keys as "auto": the inferred dim is a pure
+    # function of the corpus already pinned by the plan key.
+    key = None if queries_key is None else derived_key(
+        corpus_key, "embedsim.srp_topk", queries_key, k, nbits, band_bits,
+        "auto" if dim is None else dim, id_col, vec_col, ndigits,
     )
+    return plan_memo(key, build, session=corpus.sparkSession)
 
 
 def semantic_dedup(
@@ -446,37 +442,6 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    from ...cache import query_memo
-
-    # whole-plan memo (optimization r12): the branch decision below runs
-    # one cluster-count rollup per BUILD; a memo hit reuses the already-
-    # constructed plan (the branch is a pure function of the pinned
-    # corpus + params, so the decision cannot go stale within a key)
-    return query_memo(
-        "embedsim.semantic_dedup",
-        corpus,
-        lambda: _semantic_dedup_build(
-            corpus, threshold=threshold, num_centroids=num_centroids,
-            id_col=id_col, vec_col=vec_col, ndigits=ndigits,
-            max_cluster_rows=max_cluster_rows, np=np, pd=pd,
-        ),
-        threshold, num_centroids, id_col, vec_col, ndigits,
-        max_cluster_rows,
-    )
-
-
-def _semantic_dedup_build(
-    corpus: DataFrame,
-    *,
-    threshold: float,
-    num_centroids: int,
-    id_col: str,
-    vec_col: str,
-    ndigits: int,
-    max_cluster_rows: int,
-    np,
-    pd,
-) -> DataFrame:
     c = _prepared(corpus, id_col, vec_col)
     centroids = hash_pick_centroids(c, num_centroids)
     assigned = persist_slot(

@@ -127,40 +127,28 @@ def bm25_topk(
 
     Output: ``doc_id, score, n_terms, rank`` (score = fixed-point sum /
     10^6, rounded to 6 digits; ties broken by doc id).
-
-    The constructed plan is memoized (optimization r12; the pq/ivfpq
-    serving pattern — see :func:`...cache.query_memo`): a search tier
-    constructs its ranking plan once per (corpus, query) and serves
-    repeats; a hit returns a plan, never results.
     """
-    from ...cache import query_memo
 
-    def build() -> DataFrame:
-        base = _staged_tokens(docs, id_col, text_col)
-        term_arr = F.array(*[F.lit(t) for t in query_terms])
-        # per-row array filter BEFORE the explode: non-matching tokens
-        # never become rows (identical row multiset to explode-then-filter)
-        matched = base.select(
-            "doc",
-            F.explode(
-                F.filter(
-                    F.col("__toks"), lambda t: F.array_contains(term_arr, t)
-                )
-            ).alias("term"),
-        )
-        per_doc = _bm25_scored(base, matched, k1=k1, b=b)
-        top = per_doc.orderBy(F.col("s_fp").desc(), F.col("doc").asc()).limit(k)
-        w = Window.orderBy(F.col("s_fp").desc(), F.col("doc").asc())
-        return top.withColumn("rank", F.row_number().over(w)).select(
-            F.col("doc").alias("doc_id"),
-            F.round(F.col("s_fp") / F.lit(_FP), 6).alias("score"),
-            "n_terms",
-            "rank",
-        )
-
-    return query_memo(
-        "retrieval.bm25_topk", docs, build,
-        tuple(query_terms), k, k1, b, id_col, text_col,
+    base = _staged_tokens(docs, id_col, text_col)
+    term_arr = F.array(*[F.lit(t) for t in query_terms])
+    # per-row array filter BEFORE the explode: non-matching tokens
+    # never become rows (identical row multiset to explode-then-filter)
+    matched = base.select(
+        "doc",
+        F.explode(
+            F.filter(
+                F.col("__toks"), lambda t: F.array_contains(term_arr, t)
+            )
+        ).alias("term"),
+    )
+    per_doc = _bm25_scored(base, matched, k1=k1, b=b)
+    top = per_doc.orderBy(F.col("s_fp").desc(), F.col("doc").asc()).limit(k)
+    w = Window.orderBy(F.col("s_fp").desc(), F.col("doc").asc())
+    return top.withColumn("rank", F.row_number().over(w)).select(
+        F.col("doc").alias("doc_id"),
+        F.round(F.col("s_fp") / F.lit(_FP), 6).alias("score"),
+        "n_terms",
+        "rank",
     )
 
 
@@ -207,40 +195,7 @@ def hybrid_rrf(
     ``rrf_fp = Σ_lists 10^9 div (rrf_k + rank)`` — integer, exact.
 
     Output: ``doc_id, rrf_fp, lex_rank, vec_rank, rank``.
-
-    Plan-memoized like :func:`bm25_topk`, keyed on BOTH input frames'
-    plan keys + every parameter (an unkeyable input degrades to
-    always-build).
     """
-    from ...cache import _plan_key, query_memo
-
-    return query_memo(
-        "retrieval.hybrid_rrf",
-        docs,
-        lambda: _hybrid_rrf_build(
-            docs, embeddings, exemplar_id, k=k, k_each=k_each, rrf_k=rrf_k,
-            n_terms=n_terms, id_col=id_col, text_col=text_col,
-            vec_id_col=vec_id_col, vec_col=vec_col,
-        ),
-        _plan_key(embeddings), exemplar_id, k, k_each, rrf_k, n_terms,
-        id_col, text_col, vec_id_col, vec_col,
-    )
-
-
-def _hybrid_rrf_build(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    exemplar_id: int,
-    *,
-    k: int,
-    k_each: int,
-    rrf_k: int,
-    n_terms: int,
-    id_col: str,
-    text_col: str,
-    vec_id_col: str,
-    vec_col: str,
-) -> DataFrame:
     from .embedsim import brute_force_topk
 
     base = _staged_tokens(docs, id_col, text_col)

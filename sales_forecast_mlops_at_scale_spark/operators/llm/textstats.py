@@ -292,51 +292,45 @@ def tfidf_top_terms(
     and the scored join), so it is persist-slot-pinned — unpersisted,
     the tokenize+explode+groupBy subtree executes once per side
     (optimization r12, guide §2.4: the r11 plan showed two identical
-    HashAggregate(count) subtrees over separate documents scans).  The
-    whole constructed plan rides :func:`...cache.query_memo`.
+    HashAggregate(count) subtrees over separate documents scans).
     """
     from pyspark.sql import Window
 
-    from ...cache import (
-        _plan_key, derived_key, persist_slot, query_memo, value_memo,
-    )
+    from ...cache import _plan_key, derived_key, persist_slot, value_memo
 
     base_key = _plan_key(df)
 
-    def build() -> DataFrame:
-        n_docs = value_memo(
-            derived_key(base_key, "tfidf.n_docs"),
-            df.count,
-            session=df.sparkSession,
+    n_docs = value_memo(
+        derived_key(base_key, "tfidf.n_docs"),
+        df.count,
+        session=df.sparkSession,
+    )
+    toks = df.select(
+        F.col(id_col).alias("doc"),
+        F.explode(tokens(normalized_text(F.col(text_col)))).alias("term"),
+    )
+    tf = persist_slot(
+        "textstats.tfidf.tf",
+        toks.groupBy("doc", "term").agg(F.count(F.lit(1)).alias("tf")),
+        key=derived_key(base_key, "tfidf.tf", text_col, id_col),
+    )
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    scored = tf.join(dfreq, "term").select(
+        "doc",
+        "term",
+        "tf",
+        "df",
+        F.round(
+            F.col("tf") * (F.lit(n_docs + 1) / (F.col("df") + F.lit(1))), 6
+        ).alias("score"),
+    )
+    w = Window.partitionBy("doc").orderBy(
+        F.col("score").desc(), F.col("term").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("doc").alias(id_col), "term", "tf", "df", "score", "rank"
         )
-        toks = df.select(
-            F.col(id_col).alias("doc"),
-            F.explode(tokens(normalized_text(F.col(text_col)))).alias("term"),
-        )
-        tf = persist_slot(
-            "textstats.tfidf.tf",
-            toks.groupBy("doc", "term").agg(F.count(F.lit(1)).alias("tf")),
-            key=derived_key(base_key, "tfidf.tf", text_col, id_col),
-        )
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        scored = tf.join(dfreq, "term").select(
-            "doc",
-            "term",
-            "tf",
-            "df",
-            F.round(
-                F.col("tf") * (F.lit(n_docs + 1) / (F.col("df") + F.lit(1))), 6
-            ).alias("score"),
-        )
-        w = Window.partitionBy("doc").orderBy(
-            F.col("score").desc(), F.col("term").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("doc").alias(id_col), "term", "tf", "df", "score", "rank"
-            )
-        )
-
-    return query_memo("textstats.tfidf_top_terms", df, build, text_col, id_col, k)
+    )

@@ -28,14 +28,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-def _query_memo(tag: str, base: DataFrame, builder, *params) -> DataFrame:
-    """See :func:`..cache.query_memo` (promoted there so every plans
-    module shares one implementation)."""
-    from ..cache import query_memo
-
-    return query_memo(tag, base, builder, *params)
-
-
 # -- as-of join: each click ↦ user's most recent prior-or-equal purchase ------
 
 
@@ -3409,9 +3401,7 @@ def q_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.abtest import experiment_frame, welch_ttest
 
     ev = _events(spark, sf_dir)
-    return _query_memo(
-        "q_ab_welch", ev, lambda: welch_ttest(experiment_frame(ev))
-    )
+    return welch_ttest(experiment_frame(ev))
 
 
 def q_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3425,9 +3415,7 @@ def q_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.abtest import cuped_adjust, experiment_frame
 
     ev = _events(spark, sf_dir)
-    return _query_memo(
-        "q_ab_cuped", ev, lambda: cuped_adjust(experiment_frame(ev))
-    )
+    return cuped_adjust(experiment_frame(ev))
 
 
 def q_ab_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3440,9 +3428,7 @@ def q_ab_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.abtest import experiment_frame, quantile_effects
 
     ev = _events(spark, sf_dir)
-    return _query_memo(
-        "q_ab_quantiles", ev, lambda: quantile_effects(experiment_frame(ev))
-    )
+    return quantile_effects(experiment_frame(ev))
 
 
 def q_ab_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3453,7 +3439,6 @@ def q_ab_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     users are withheld (no sample variance; inf/NaN are not
     hash-stable).  Same exact-integer-moments contract as the rest of
     the A/B family; one join + one conditional-aggregate pass."""
-    from ..cache import _plan_key
     from ..operators.abtest import experiment_frame, segment_effects
 
     dim = load_table(spark, sf_dir, "customer").select(
@@ -3461,12 +3446,7 @@ def q_ab_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("segment"),
     )
     ev = _events(spark, sf_dir)
-    return _query_memo(
-        "q_ab_segments",
-        ev,
-        lambda: segment_effects(experiment_frame(ev), dim),
-        _plan_key(dim),
-    )
+    return segment_effects(experiment_frame(ev), dim)
 
 
 def q_ab_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4333,27 +4313,6 @@ def q_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     / range constraints over orders and lineitem, each family in ONE
     aggregation pass, plus a referential-integrity check
     orders→customer.  Output: (check, metric, threshold, passed)."""
-    from ..cache import _plan_key
-
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    customer = load_table(spark, sf_dir, "customer")
-
-    def build() -> DataFrame:
-        return _quality_checks_build(orders, lineitem, customer)
-
-    return _query_memo(
-        "q_quality_checks",
-        orders,
-        build,
-        _plan_key(lineitem),
-        _plan_key(customer),
-    )
-
-
-def _quality_checks_build(
-    orders: DataFrame, lineitem: DataFrame, customer: DataFrame
-) -> DataFrame:
     from ..operators.warehouse import (
         Expectation,
         expectation_report,
@@ -4362,6 +4321,9 @@ def _quality_checks_build(
         uniqueness,
     )
 
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    customer = load_table(spark, sf_dir, "customer")
     orders_suite = expectation_report(
         orders,
         [

@@ -524,35 +524,28 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     index — here it is itself a deterministic, oracled query (both tiers
     are deterministic, so the recall numbers are too).  Shares the
     normalized-corpus/query pin with q_ann_recall_all (one
-    materialization serves both tiers' semantically-equal subtrees).
-    Whole-query plan memo (optimization r12; see cache.query_memo)."""
-    from ..cache import persist_slot, query_memo
+    materialization serves both tiers' semantically-equal subtrees)."""
+    from ..cache import persist_slot
     from ..operators.llm.embedsim import _prepared
 
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def build() -> DataFrame:
-        persist_slot(
-            "annrecall.prepared_corpus", _prepared(emb, "vec_id", "embedding")
+    persist_slot(
+        "annrecall.prepared_corpus", _prepared(emb, "vec_id", "embedding")
+    )
+    persist_slot("annrecall.queries", emb.filter(F.col("vec_id") < 8))
+    exact = q_embed_topk(spark, sf_dir).select("q_id", "nn_id")
+    approx = q_embed_srp_topk(spark, sf_dir).select(
+        "q_id", "nn_id", F.lit(1).alias("hit")
+    )
+    return (
+        exact.join(approx, ["q_id", "nn_id"], "left")
+        .groupBy("q_id")
+        .agg(
+            F.count(F.lit(1)).cast("int").alias("k"),
+            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("int").alias("n_hits"),
         )
-        persist_slot("annrecall.queries", emb.filter(F.col("vec_id") < 8))
-        exact = q_embed_topk(spark, sf_dir).select("q_id", "nn_id")
-        approx = q_embed_srp_topk(spark, sf_dir).select(
-            "q_id", "nn_id", F.lit(1).alias("hit")
-        )
-        return (
-            exact.join(approx, ["q_id", "nn_id"], "left")
-            .groupBy("q_id")
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("k"),
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("int").alias("n_hits"),
-            )
-            .withColumn(
-                "recall", F.round(F.col("n_hits") / F.col("k"), 6)
-            )
-        )
-
-    return query_memo("q_ann_recall", emb, build)
+        .withColumn("recall", F.round(F.col("n_hits") / F.col("k"), 6))
+    )
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,14 +684,10 @@ def q_top_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination scan: docs vs the held-out tenth of the
     corpus (doc_id % 10 == 0) on distinct word 8-grams."""
-    from ..cache import query_memo
-
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 10 == 0)
     cand = docs.filter(F.col("doc_id") % 10 != 0)
-    return query_memo(
-        "q_contamination", docs, lambda: contamination_check(cand, bench, n=8)
-    )
+    return contamination_check(cand, bench, n=8)
 
 
 def q_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,23 +760,18 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer: the oracle twin re-trains the identical 8 merges as
     unrolled SQL rounds, so train AND encode are both differentially
     checked."""
-    from ..cache import query_memo
     from ..operators.llm.bpe import bpe_encode, bpe_train
 
     docs = load_table(spark, sf_dir, "documents")
-
-    def build() -> DataFrame:
-        merges, _ = bpe_train(docs, n_merges=8)
-        enc = bpe_encode(docs, merges)
-        return (
-            enc.select(F.explode("pieces").alias("piece"))
-            .groupBy("piece")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_occurrences"))
-            .orderBy(F.col("n_occurrences").desc(), F.col("piece").asc())
-            .limit(20)
-        )
-
-    return query_memo("q_bpe_encode", docs, build)
+    merges, _ = bpe_train(docs, n_merges=8)
+    enc = bpe_encode(docs, merges)
+    return (
+        enc.select(F.explode("pieces").alias("piece"))
+        .groupBy("piece")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_occurrences"))
+        .orderBy(F.col("n_occurrences").desc(), F.col("piece").asc())
+        .limit(20)
+    )
 
 
 #: One unrolled BPE training round (seg{i-1} -> seg{i}) for the encode
@@ -1601,19 +1585,14 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection: top-50 raw-pool docs (source ≠ src0) by
     hashed-unigram importance weight against the src0 target corpus
     (operators/llm/importance.dsir_weights)."""
-    from ..cache import query_memo
     from ..operators.llm.importance import dsir_weights
 
     docs = load_table(spark, sf_dir, "documents")
-    return query_memo(
-        "q_dsir_select",
-        docs,
-        lambda: dsir_weights(
-            docs.filter(F.col("source") != "src0"),
-            docs.filter(F.col("source") == "src0"),
-            n_buckets=1024,
-            k=50,
-        ),
+    return dsir_weights(
+        docs.filter(F.col("source") != "src0"),
+        docs.filter(F.col("source") == "src0"),
+        n_buckets=1024,
+        k=50,
     )
 
 
@@ -2091,38 +2070,30 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_codebook,
     )
 
-    from ..cache import query_memo
-
     emb = load_table(spark, sf_dir, "embeddings")
     m, dim = 32, 64
-
-    def build() -> DataFrame:
-        cb = pq_codebook(emb, m=m, dim=dim)
-        sub = _subspaces(_unit(_prepared(emb, "vec_id", "embedding")), m=m)
-        per_sv = (
-            sub.join(F.broadcast(cb), "m")
-            .groupBy("vid", "m")
-            .agg(F.min(_sqdist_fp(F.col("sv"), F.col("cv"), dim // m)).alias("d_fp"))
+    cb = pq_codebook(emb, m=m, dim=dim)
+    sub = _subspaces(_unit(_prepared(emb, "vec_id", "embedding")), m=m)
+    per_sv = (
+        sub.join(F.broadcast(cb), "m")
+        .groupBy("vid", "m")
+        .agg(F.min(_sqdist_fp(F.col("sv"), F.col("cv"), dim // m)).alias("d_fp"))
+    )
+    return (
+        per_sv.groupBy("m")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_vectors"),
+            F.sum("d_fp").cast("long").alias("sum_sqerr_fp"),
         )
-        return (
-            per_sv.groupBy("m")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_vectors"),
-                F.sum("d_fp").cast("long").alias("sum_sqerr_fp"),
-            )
-            .select(
-                F.col("m").cast("long").alias("subspace"),
-                "n_vectors",
-                "sum_sqerr_fp",
-                F.round(
-                    F.col("sum_sqerr_fp") / (F.col("n_vectors") * 1000000.0), 6
-                ).alias("mse"),
-            )
+        .select(
+            F.col("m").cast("long").alias("subspace"),
+            "n_vectors",
+            "sum_sqerr_fp",
+            F.round(
+                F.col("sum_sqerr_fp") / (F.col("n_vectors") * 1000000.0), 6
+            ).alias("mse"),
         )
-
-    # whole-query plan memo (optimization r12): the codebook + 32-way
-    # subspace expressions were ~1.6 s of py4j construction per call
-    return query_memo("q_pq_distortion", emb, build, m, dim)
+    )
 
 
 #: Distortion twin: the shared index CTEs, then each subvector's
@@ -2915,15 +2886,10 @@ def q_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Topic-balanced subset: nearest-centroid cluster assignment + cap
     of 20 per cluster by salted-md5 rank
     (operators/llm/embedsim.cluster_balanced_sample)."""
-    from ..cache import query_memo
     from ..operators.llm.embedsim import cluster_balanced_sample
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return query_memo(
-        "q_cluster_balance",
-        emb,
-        lambda: cluster_balanced_sample(emb, cap=20, num_centroids=16),
-    )
+    return cluster_balanced_sample(emb, cap=20, num_centroids=16)
 
 
 #: Balance twin: the shared assignment CTE (rounded-cosine argmax, cid
@@ -2970,52 +2936,44 @@ def q_ann_recall_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     substitution rewrite each tier's semantically-equal subtree to the
     single materialization (VERDICT r9 #7); at cluster scale the same
     two frames are the materialized eval tables an offline recall audit
-    would stage first.  Whole-query plan memo (optimization r12): the
-    five-tier union was ~1.9 s of pure plan construction per invocation
-    (profiled warm_build_s on the r12 baseline) — the pq/ivfpq tiers
-    already memoized their own sub-plans; this extends the same pattern
-    to the composed eval so a serving session builds it once."""
-    from ..cache import persist_slot, query_memo
+    would stage first.  The five-tier union is ~1.9 s of pure plan
+    construction; the registry plan cache (``cache.registry_plan``)
+    serves a repeat call without rebuilding it."""
+    from ..cache import persist_slot
     from ..operators.llm.embedsim import _prepared
 
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def build() -> DataFrame:
-        persist_slot(
-            "annrecall.prepared_corpus", _prepared(emb, "vec_id", "embedding")
+    persist_slot(
+        "annrecall.prepared_corpus", _prepared(emb, "vec_id", "embedding")
+    )
+    persist_slot("annrecall.queries", emb.filter(F.col("vec_id") < 8))
+    exact = q_embed_topk(spark, sf_dir).select("q_id", "nn_id")
+    methods = {
+        "srp": q_embed_srp_topk,
+        "ivf": q_embed_ivf_topk,
+        "pq": q_pq_topk,
+        "ivfpq": q_ivfpq_topk,
+    }
+    out = None
+    for name, fn in sorted(methods.items()):
+        approx = fn(spark, sf_dir).select("q_id", "nn_id", F.lit(1).alias("hit"))
+        scored = (
+            exact.join(approx, ["q_id", "nn_id"], "left")
+            .groupBy("q_id")
+            .agg(
+                F.count(F.lit(1)).cast("int").alias("k"),
+                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("int").alias("n_hits"),
+            )
+            .select(
+                F.lit(name).alias("method"),
+                "q_id",
+                "k",
+                "n_hits",
+                F.round(F.col("n_hits") / F.col("k"), 6).alias("recall"),
+            )
         )
-        persist_slot("annrecall.queries", emb.filter(F.col("vec_id") < 8))
-        exact = q_embed_topk(spark, sf_dir).select("q_id", "nn_id")
-        methods = {
-            "srp": q_embed_srp_topk,
-            "ivf": q_embed_ivf_topk,
-            "pq": q_pq_topk,
-            "ivfpq": q_ivfpq_topk,
-        }
-        out = None
-        for name, fn in sorted(methods.items()):
-            approx = fn(spark, sf_dir).select(
-                "q_id", "nn_id", F.lit(1).alias("hit")
-            )
-            scored = (
-                exact.join(approx, ["q_id", "nn_id"], "left")
-                .groupBy("q_id")
-                .agg(
-                    F.count(F.lit(1)).cast("int").alias("k"),
-                    F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("int").alias("n_hits"),
-                )
-                .select(
-                    F.lit(name).alias("method"),
-                    "q_id",
-                    "k",
-                    "n_hits",
-                    F.round(F.col("n_hits") / F.col("k"), 6).alias("recall"),
-                )
-            )
-            out = scored if out is None else out.unionByName(scored)
-        return out
-
-    return query_memo("q_ann_recall_all", emb, build)
+        out = scored if out is None else out.unionByName(scored)
+    return out
 
 
 def _ann_recall_all_sql() -> str:
@@ -3055,22 +3013,12 @@ GROUP BY 1, 2
 def q_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-aware negative mining: 4 deterministic negatives per
     vector from other clusters' md5-ranked pools
-    (operators/llm/embedsim.contrastive_negatives).  Plan construction
-    (~0.3 s of py4j expression building per call) is query-memoized
-    (r13) like the rest of the embedding family."""
-    from ..cache import query_memo
+    (operators/llm/embedsim.contrastive_negatives)."""
     from ..operators.llm.embedsim import contrastive_negatives
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return query_memo(
-        "q_contrastive_negatives",
-        emb,
-        lambda: contrastive_negatives(
-            emb,
-            k_neg=4,
-            pool_per_cluster=4,
-            num_centroids=16,
-        ),
+    return contrastive_negatives(
+        emb, k_neg=4, pool_per_cluster=4, num_centroids=16
     )
 
 

@@ -1241,42 +1241,26 @@ def q_retrain_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-pipelines are the already-oracled q_psi_drift / q_model_compare
     plans, so this is a composition audit: a wrong bit anywhere in
     either pipeline flips a decision flag."""
-    from ..cache import query_memo
-
     # psi_fp IS the exact integer ppm (PSI_FP = 10^6): thresholding on
     # it directly avoids re-quantizing a rounded double whose HALF_UP
     # (Spark BigDecimal) vs float rounding (DuckDB) last-ulp behavior is
     # not guaranteed bit-identical (ADVICE r8)
-    def build() -> DataFrame:
-        drift = q_psi_drift(spark, sf_dir).agg(
-            F.max("psi_fp").alias("max_psi_ppm")
+    drift = q_psi_drift(spark, sf_dir).agg(F.max("psi_fp").alias("max_psi_ppm"))
+    cmp_ = q_model_compare(spark, sf_dir)
+    flips = cmp_.where(F.col("n_splits") > 0).agg(
+        F.count(F.lit(1)).alias("n_scored"),
+        F.expr(
+            "cast(sum(CASE WHEN champion != 'seasonal_naive' THEN 1 ELSE 0 END)"
+            " * 1000000L as bigint) div count(1)"
+        ).alias("flip_ppm"),
+    )
+    return (
+        drift.crossJoin(flips)
+        .withColumn("retrain", F.col("max_psi_ppm") > F.lit(_DECISION_PSI_PPM))
+        .withColumn("switch_family", F.col("flip_ppm") > F.lit(_DECISION_FLIP_PPM))
+        .select(
+            "max_psi_ppm", "n_scored", "flip_ppm", "retrain", "switch_family"
         )
-        cmp_ = q_model_compare(spark, sf_dir)
-        flips = cmp_.where(F.col("n_splits") > 0).agg(
-            F.count(F.lit(1)).alias("n_scored"),
-            F.expr(
-                "cast(sum(CASE WHEN champion != 'seasonal_naive' THEN 1 ELSE 0 END)"
-                " * 1000000L as bigint) div count(1)"
-            ).alias("flip_ppm"),
-        )
-        return (
-            drift.crossJoin(flips)
-            .withColumn(
-                "retrain", F.col("max_psi_ppm") > F.lit(_DECISION_PSI_PPM)
-            )
-            .withColumn(
-                "switch_family", F.col("flip_ppm") > F.lit(_DECISION_FLIP_PPM)
-            )
-            .select(
-                "max_psi_ppm", "n_scored", "flip_ppm", "retrain",
-                "switch_family",
-            )
-        )
-
-    # both sub-pipelines are pure functions of lineitem, so the composed
-    # plan is keyed on the one fact scan (optimization r12)
-    return query_memo(
-        "q_retrain_decision", load_table(spark, sf_dir, "lineitem"), build
     )
 
 

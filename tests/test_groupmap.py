@@ -163,6 +163,36 @@ def test_sorted_group_map_counts_groups(spark):
     assert sorted((r.k, r.n) for r in out.collect()) == [("a", 5), ("b", 5), ("c", 5)]
 
 
+def test_drop_zip_importers_keeps_imports_working(tmp_path, monkeypatch):
+    """The task-end cleanup forgets the cached zip finders, so the next
+    task's ``importlib.invalidate_caches()`` has no archive to re-read;
+    modules already imported from the zip keep working, and the zip's
+    other modules still import."""
+    import importlib
+    import sys
+    import zipfile
+
+    from sales_forecast_mlops_at_scale_spark.operators.groupmap import (
+        _drop_zip_importers,
+    )
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zmod_first.py", "def answer():\n    return 41 + 1\n")
+        zf.writestr("zmod_second.py", "VALUE = 'second'\n")
+    monkeypatch.syspath_prepend(archive)
+    for name in ("zmod_first", "zmod_second"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    first = importlib.import_module("zmod_first")
+    assert archive in sys.path_importer_cache
+
+    _drop_zip_importers()
+
+    assert archive not in sys.path_importer_cache
+    assert first.answer() == 42
+    assert importlib.import_module("zmod_second").VALUE == "second"
+
+
 # ---------------------------------------------------------------------------
 # bit-exact equivalence vs the reference paths
 # ---------------------------------------------------------------------------

@@ -3109,6 +3109,7 @@ def test_stream_differential_rocksdb_parity(spark, tmp_path, monkeypatch, qname)
     import os as _os
 
     import sales_forecast_mlops_at_scale_spark.plans.fixture_roots as fr
+    from sales_forecast_mlops_at_scale_spark.cache import clear_slots
     from sales_forecast_mlops_at_scale_spark.plans import all_queries
     from sales_forecast_mlops_at_scale_spark.streaming.tws import (
         ROCKSDB_PROVIDER,
@@ -3143,6 +3144,9 @@ def test_stream_differential_rocksdb_parity(spark, tmp_path, monkeypatch, qname)
     key = "spark.sql.streaming.stateStore.providerClass"
     old = spark.conf.get(key, None)
     spark.conf.set(key, ROCKSDB_PROVIDER)
+    # the registry plan cache keys on files, not on the patched module
+    # state: drop the first call's plan so the second really rebuilds
+    clear_slots()
     try:
         rocks = canon(reg[qname].fn(spark, sf_dir))
     finally:
@@ -3190,6 +3194,7 @@ def test_stream_differential_batch_split_invariant(
 
     import sales_forecast_mlops_at_scale_spark.plans.analytics_queries as aq
     import sales_forecast_mlops_at_scale_spark.plans.fixture_roots as fr
+    from sales_forecast_mlops_at_scale_spark.cache import clear_slots
     from sales_forecast_mlops_at_scale_spark.plans import all_queries
     from sales_forecast_mlops_at_scale_spark.streaming.tws import (
         tws_available,
@@ -3224,6 +3229,9 @@ def test_stream_differential_batch_split_invariant(
     monkeypatch.setattr(
         aq, "_STREAM_READER_OPTIONS", {"maxFilesPerTrigger": "1"}
     )
+    # the registry plan cache keys on files, not on the patched module
+    # state: drop the first call's plan so the second really rebuilds
+    clear_slots()
     split = canon(reg[qname].fn(spark, sf_dir))
     assert split == base
 
@@ -3258,6 +3266,7 @@ def test_stream_drain_granularity(
 
     import sales_forecast_mlops_at_scale_spark.plans.analytics_queries as aq
     import sales_forecast_mlops_at_scale_spark.plans.fixture_roots as fr
+    from sales_forecast_mlops_at_scale_spark.cache import clear_slots
     from sales_forecast_mlops_at_scale_spark.plans import all_queries
     from sales_forecast_mlops_at_scale_spark.streaming.tws import (
         tws_available,
@@ -3288,5 +3297,8 @@ def test_stream_drain_granularity(
     monkeypatch.setattr(fr, "digest_root", redirected)
     monkeypatch.setattr(aq, "_EPOCH_SPLIT", (split_col, 2))
     monkeypatch.setattr(aq, "_DRAIN_PER_FILE", True)
+    # the registry plan cache keys on files, not on the patched module
+    # state: drop the first call's plan so the second really rebuilds
+    clear_slots()
     per_file = canon(reg[qname].fn(spark, sf_dir))
     assert (per_file == base) is expect_equal

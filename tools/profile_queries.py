@@ -2,8 +2,11 @@
 
 For each named query: time the PLAN BUILD (the registry fn call — pure
 driver/py4j work), the cold first execution, and the warm steady state
-(min of N), all against the noop sink (guide §1.4) so the measurement is
-the computation, not result collection.  Also dumps the AQE-initial
+(min of N), all against the noop sink (guide §1.4) so the measurement
+is the computation, not result collection.  The warm builds are served
+by the registry plan cache, so ``warm_build_s`` times a cache hit;
+``plan_hits`` / ``plan_misses`` count the query's registry lookups.
+Also dumps the AQE-initial
 ``explain("formatted")`` and counts plan features (Exchange /
 BatchEvalPython / ArrowEvalPython / MapInPandas / SortMergeJoin /
 BroadcastHashJoin) so before/after claims are mechanical.
@@ -23,7 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sales_forecast_mlops_at_scale_spark.cache import clear_slots
+from sales_forecast_mlops_at_scale_spark.cache import clear_slots, memo_stats
 from sales_forecast_mlops_at_scale_spark.plans import all_queries
 from sales_forecast_mlops_at_scale_spark.session import get_spark
 
@@ -74,6 +77,7 @@ def main() -> None:
         qd = registry[name]
         spark.sparkContext.setJobDescription(name)
         rec: dict[str, object] = {}
+        before = memo_stats()["registry"]
         try:
             t0 = time.perf_counter()
             df = qd.fn(spark, SF_DIR)
@@ -106,6 +110,9 @@ def main() -> None:
             rec["warm_count_s"] = round(time.perf_counter() - t0, 3)
         except Exception as e:  # noqa: BLE001
             rec["err"] = f"{type(e).__name__}: {e}"[:500]
+        after = memo_stats()["registry"]
+        rec["plan_hits"] = after["hits"] - before["hits"]
+        rec["plan_misses"] = after["misses"] - before["misses"]
         results[name] = rec
         clear_slots()
         spark.catalog.clearCache()
