@@ -28,7 +28,7 @@ cache: queries remain correct with the registry disabled (drop to plain
 materialized table with the same keying.
 
 Beside the slots, one LRU-capped memo store (``_MEMO``) keeps
-CONSTRUCTED plans and driver-side values, in three flavors:
+CONSTRUCTED plans and driver-side values, in two flavors:
 
 - **registry plans** (:func:`registry_plan`): every ``QueryDef.fn``
   that ``plans.all_queries()`` returns goes through it.  A repeat call
@@ -38,13 +38,13 @@ CONSTRUCTED plans and driver-side values, in three flavors:
   cached: plans with a leaf that is not a local file (a live stream,
   ``LocalRelation``, ``LogicalRDD``) or with over ``_STAT_FILE_CAP``
   files.  A ``q_stream_*`` build drains its stream into files and is
-  cached on those files only (more at :func:`registry_plan`);
-- **plan memos** (:func:`plan_memo`): operator sub-plans keyed on
-  :func:`_plan_key` / :func:`derived_key`;
+  cached on those files only (more at :func:`registry_plan`).  A
+  registry query that embeds another takes it through
+  :func:`registry_plan` too, so the two share one plan;
 - **value memos** (:func:`value_memo`): values whose construction ran
-  Spark actions.
+  Spark actions, keyed on :func:`_plan_key` / :func:`derived_key`.
 
-All three share the lock, the LRU cap and the lifetime:
+Both share the lock, the LRU cap and the lifetime:
 :func:`clear_slots` drops every entry.  :func:`memo_stats` counts hits,
 misses and evictions per flavor.  :func:`path_sig` is the one file
 freshness test, shared with ``catalog.load_table``'s table memo.
@@ -284,16 +284,15 @@ _KEYLESS: list[DataFrame] = []
 # retention; eviction only costs a plan rebuild, never correctness.
 _MEMO_CAP = 32
 
-#: One store for every memo flavor (registry plans, ``plan_memo``,
-#: ``value_memo``); entries are ``(flavor, owning_session, value,
-#: stamp)`` so the lookup logic (liveness, ownership, freshness, LRU,
-#: cap) exists exactly once.
+#: One store for both memo flavors (registry plans, ``value_memo``);
+#: entries are ``(flavor, owning_session, value, stamp)`` so the lookup
+#: logic (liveness, ownership, freshness, LRU, cap) exists exactly once.
 _MEMO: OrderedDict[tuple[int, str], tuple[str, object, object, tuple]] = OrderedDict()
 
 #: Per-flavor hit / miss / eviction counts since process start (a miss
 #: is every build, keyed or not); read them with :func:`memo_stats`.
 _STATS = {
-    f: {"hits": 0, "misses": 0, "evictions": 0} for f in ("registry", "plan", "value")
+    f: {"hits": 0, "misses": 0, "evictions": 0} for f in ("registry", "value")
 }
 
 
@@ -311,18 +310,17 @@ def _fresh(stamp: tuple) -> bool:
 def _memo(key: tuple[int, str] | None, build_entry, *, session, flavor: str):
     """Shared memo core: ``build_entry() -> (owner, value, stamp)``.
 
-    A hit is served only if its owning session is alive AND (when
-    ``session`` is given) is the caller's session, and its ``stamp``
-    (see :func:`_fresh`; ``()`` for the key-only flavors) still holds;
-    ``session=None`` accepts any live owner.  A ``None`` stamp from the
+    A hit is served only if its owning session is alive AND is the
+    caller's ``session``, and its ``stamp`` (see :func:`_fresh`; ``()``
+    for :func:`value_memo`) still holds.  A ``None`` stamp from the
     build means "do not store"."""
     if key is not None:
         # _LIVE_LOCK guards the lookup/insert/evict sequence for the same
-        # reason it guards the slots: foreachBatch bodies run on separate
-        # driver threads (streaming/dedup_ingest.py routes through
-        # plan_memo), and an unguarded read-modify-write on the
-        # OrderedDict can corrupt the LRU order or double-build (ADVICE
-        # r12).  build_entry() itself runs OUTSIDE the lock — it may take
+        # reason it guards the slots: memo calls may come from separate
+        # driver threads (concurrent sessions, streaming query threads),
+        # and an unguarded read-modify-write on the OrderedDict can
+        # corrupt the LRU order or double-build (ADVICE r12).
+        # build_entry() itself runs OUTSIDE the lock — it may take
         # seconds of py4j work and must not serialize unrelated slot
         # traffic.
         with _LIVE_LOCK:
@@ -333,7 +331,7 @@ def _memo(key: tuple[int, str] | None, build_entry, *, session, flavor: str):
                     alive = owner.sparkContext._jsc is not None
                 except Exception:  # noqa: BLE001 — stopped session
                     alive = False
-                if alive and (session is None or owner is session):
+                if alive and owner is session:
                     if _fresh(stamp):
                         _MEMO.move_to_end(key)
                         _STATS[flavor]["hits"] += 1
@@ -351,42 +349,18 @@ def _memo(key: tuple[int, str] | None, build_entry, *, session, flavor: str):
     return value
 
 
-def plan_memo(
-    key: tuple[int, str] | None, builder, *, session=None
-) -> DataFrame:
-    """Driver-side memo of a CONSTRUCTED plan: same key → the same
-    DataFrame object, skipping Python/py4j expression re-construction.
-
-    Orthogonal to :func:`persist_slot` (which caches DATA): building a
-    wide plan like the PQ index + ADC search costs ~1 s of pure py4j
-    round trips per invocation — pure driver latency, invariant to data
-    size, and exactly what a production search tier amortizes by
-    constructing its query plan once and serving many.  The key must
-    come from :func:`_plan_key`/:func:`derived_key` so it pins the
-    source files (digest includes size+mtime): changed inputs or params
-    miss and rebuild.  Correctness never depends on a hit — the memo
-    returns a plan, not results; evaluation still runs the query.
-    ``None`` key (unkeyable session) → always build.  Pass ``session``
-    (the caller's ``df.sparkSession``) so a hit built by a DIFFERENT
-    concurrent session over the same files is rejected rather than
-    served across session boundaries."""
-
-    def build_entry():
-        out = builder()
-        return out.sparkSession, out, ()
-
-    return _memo(key, build_entry, session=session, flavor="plan")
-
-
 def value_memo(key: tuple[int, str] | None, builder, *, session):
-    """Like :func:`plan_memo` but for arbitrary driver-side values whose
-    construction ran Spark ACTIONS (an iterative trainer's merge list +
-    checkpointed state, a collected anchor) — a repeat call with the
-    same key returns the stored value instead of replaying the jobs.
-    The caller passes the owning ``session`` explicitly (required, since
-    the value itself may not carry one); a hit from a different or
+    """Driver-side memo of a value whose construction ran Spark ACTIONS
+    (an iterative trainer's merge list + checkpointed state, a collected
+    anchor, a checkpointed label frame) — a repeat call with the same
+    key returns the stored value instead of replaying the jobs.  The
+    key must come from :func:`_plan_key` / :func:`derived_key` so it
+    pins the source files (digest includes size+mtime): changed inputs
+    or params miss and rebuild.  ``None`` key (unkeyable input) →
+    always build.  The caller passes the owning ``session`` explicitly
+    (the value itself may not carry one); a hit from a different or
     stopped session is rejected.  Shares the store, LRU cap, and
-    ``clear_slots`` lifetime with the plan memo."""
+    ``clear_slots`` lifetime with the registry plans."""
     return _memo(
         key, lambda: (session, builder(), ()), session=session, flavor="value"
     )

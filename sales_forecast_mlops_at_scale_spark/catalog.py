@@ -87,23 +87,3 @@ def load_dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in DIM_TABLES:
         raise ValueError(f"{name} is not a dimension table: {sorted(DIM_TABLES)}")
     return F.broadcast(load_table(spark, sf_dir, name))
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a canonical table date-partitioned parquet.
-
-    The reference kept unpartitioned Postgres heaps (SURVEY.md §4 —
-    "partition pruning: absent").  For the 100 TB design, fact tables are
-    partitioned by a low-cardinality date key so time-range predicates
-    (Q-lastdays et al.) prune partitions instead of scanning history.
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import _plan_key, derived_key, plan_memo
+from ..cache import persist_slot
 
 #: chi-square critical value at 95%, 1 df — the standard SRM bar
 SRM_CHI2_95 = 3.841
@@ -481,23 +481,9 @@ def ab_report(users: DataFrame) -> DataFrame:
     statistic at once.  Counts and flags are cast to double (exact for
     any count below 2⁵³); all formulas and degenerate-withhold guards
     are the IDENTICAL expressions the per-statistic operators use, so
-    the report can never disagree with them.
-
-    Driver-side cost (optimization r12): the 16 closed-form triples are
-    ~0.75 s of pure py4j Column construction per call (profiled), so the
-    whole constructed plan is memoized keyed on the user frame's plan
-    key — the pq/ivfpq serving pattern; a hit returns the plan, never
-    results, and unkeyable inputs (test LocalRelations) always build."""
-
-    def build() -> DataFrame:
-        g = _with_group_moments(arm_moments_wide(users))
-        return _explode_triples(g, _core_triples()).orderBy("stat", "metric")
-
-    return plan_memo(
-        derived_key(_plan_key(users), "ab.report"),
-        build,
-        session=users.sparkSession,
-    )
+    the report can never disagree with them."""
+    g = _with_group_moments(arm_moments_wide(users))
+    return _explode_triples(g, _core_triples()).orderBy("stat", "metric")
 
 
 def ab_report_full(
@@ -534,65 +520,47 @@ def ab_report_full(
     :func:`quantile_effects` / :func:`segment_effects` emit (pinned
     row-for-row by tests), so the full report can never disagree with
     the per-statistic operators."""
-    from ..cache import persist_slot
+    u = persist_slot("abtest.users", users)
+    wide = u.groupBy().agg(*_moment_aggs(), *_quantile_aggs(levels))
+    g = _with_group_moments(wide)
 
-    # whole-plan memo (see ab_report): keyed on BOTH inputs' plan keys
-    # plus every parameter; the user-frame persist slot derives its key
-    # from the same base instead of re-walking the frame's plan
-    ku = _plan_key(users)
-    kd = _plan_key(dim)
-    key = (
-        None
-        if ku is None or kd is None
-        else derived_key(ku, "ab.report_full", kd, levels, min_arm_n)
-    )
-
-    def build() -> DataFrame:
-        u = persist_slot(
-            "abtest.users", users, key=derived_key(ku, "ab.users")
-        )
-
-        wide = u.groupBy().agg(*_moment_aggs(), *_quantile_aggs(levels))
-        g = _with_group_moments(wide)
-
-        triples = list(_core_triples())
-        for i, p in enumerate(levels):
-            lbl = f"p{int(round(p * 100))}"
-            qc, qt = F.col("qc")[i], F.col("qt")[i]
-            triples += [
-                ("quantile", f"{lbl}/q_control_cents", F.round(qc, 6)),
-                ("quantile", f"{lbl}/q_treatment_cents", F.round(qt, 6)),
-                ("quantile", f"{lbl}/qte_cents", F.round(qt - qc, 6)),
-            ]
-        report = _explode_triples(g, triples)
-
-        seg = segment_effects(u, dim, min_arm_n=min_arm_n)
-        seg_fields = [
-            "n_control",
-            "n_treatment",
-            "mean_control_cents",
-            "mean_treatment_cents",
-            "lift_cents",
-            "t_stat",
+    triples = list(_core_triples())
+    for i, p in enumerate(levels):
+        lbl = f"p{int(round(p * 100))}"
+        qc, qt = F.col("qc")[i], F.col("qt")[i]
+        triples += [
+            ("quantile", f"{lbl}/q_control_cents", F.round(qc, 6)),
+            ("quantile", f"{lbl}/q_treatment_cents", F.round(qt, 6)),
+            ("quantile", f"{lbl}/qte_cents", F.round(qt - qc, 6)),
         ]
-        seg_rows = F.array(
-            *[
-                F.struct(
-                    F.lit("segment").alias("stat"),
-                    F.concat(F.col("segment"), F.lit("/"), F.lit(f)).alias(
-                        "metric"
-                    ),
-                    F.col(f).cast("double").alias("value"),
-                )
-                for f in seg_fields
-            ]
-        )
-        seg_long = seg.select(F.explode(seg_rows).alias("r")).select(
-            "r.stat", "r.metric", "r.value"
-        )
-        return report.unionByName(seg_long).orderBy("stat", "metric")
+    report = _explode_triples(g, triples)
 
-    return plan_memo(key, build, session=users.sparkSession)
+    seg = segment_effects(u, dim, min_arm_n=min_arm_n)
+    seg_fields = [
+        "n_control",
+        "n_treatment",
+        "mean_control_cents",
+        "mean_treatment_cents",
+        "lift_cents",
+        "t_stat",
+    ]
+    seg_rows = F.array(
+        *[
+            F.struct(
+                F.lit("segment").alias("stat"),
+                F.concat(F.col("segment"), F.lit("/"), F.lit(f)).alias(
+                    "metric"
+                ),
+                F.col(f).cast("double").alias("value"),
+            )
+            for f in seg_fields
+        ]
+    )
+    seg_long = seg.select(F.explode(seg_rows).alias("r")).select(
+        "r.stat", "r.metric", "r.value"
+    )
+    return report.unionByName(seg_long).orderBy("stat", "metric")
+
 
 
 def quantile_effects(

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import _plan_key, derived_key, persist_slot, plan_memo
+from ..cache import _plan_key, derived_key, persist_slot
 
 SCALE = 10**12
 
@@ -65,11 +65,9 @@ def pagerank(
     collected/re-broadcast per step.  Only for graphs whose edge
     aggregate is bounded (e.g. a key-domain-bounded graph such as
     nation×nation); the default keeps the scale-safe shuffle join."""
-    # whole-plan memo (optimization r12): the 10-iteration unrolled loop
-    # is ~20 joins of py4j construction plus a node-count action per
-    # invocation — repeat calls over unchanged edges reuse the built
-    # frame (the pq/ivfpq serving pattern; unkeyable edges always build)
-    memo_key = derived_key(
+    # the slots key on the edges' plan key plus every parameter, so the
+    # edge plan is walked once rather than once per slot
+    key = derived_key(
         _plan_key(edges),
         "pagerank",
         iterations,
@@ -80,67 +78,59 @@ def pagerank(
         persist,
         broadcast_edges,
     )
-
-    def build() -> DataFrame:
-        e = edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(w).cast("long").alias("w"),
+    e = edges.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        F.col(w).cast("long").alias("w"),
+    )
+    if persist:
+        e2 = persist_slot("pagerank.edges", e, key=derived_key(key, "edges"))
+    else:
+        e2 = e
+    outw = e2.groupBy("src").agg(F.sum("w").alias("wout"))
+    ew = e2.join(outw, "src").select("src", "dst", "w", "wout")
+    if persist:
+        ew = persist_slot(
+            "pagerank.weighted_edges", ew, key=derived_key(key, "ew")
         )
-        if persist:
-            e2 = persist_slot(
-                "pagerank.edges", e, key=derived_key(memo_key, "edges")
-            )
-        else:
-            e2 = e
-        outw = e2.groupBy("src").agg(F.sum("w").alias("wout"))
-        ew = e2.join(outw, "src").select("src", "dst", "w", "wout")
-        if persist:
-            ew = persist_slot(
-                "pagerank.weighted_edges", ew, key=derived_key(memo_key, "ew")
-            )
-        nodes = (
-            e2.select(F.col("src").alias("node"))
-            .union(e2.select(F.col("dst").alias("node")))
-            .distinct()
+    nodes = (
+        e2.select(F.col("src").alias("node"))
+        .union(e2.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    if persist:
+        nodes = persist_slot("pagerank.nodes", nodes, key=derived_key(key, "nodes"))
+    # node count: a catalog-grade scalar (the init constant needs it
+    # on the driver); one tiny job over the persisted node frame
+    n = nodes.count()
+    init = scale // n
+    base = (15 * init) // 100
+    ranks = nodes.withColumn("rank", F.lit(init).cast("long"))
+    ew_side = F.broadcast(ew) if broadcast_edges else ew
+    # densify with `nodes LEFT JOIN contrib` + coalesce(m, 0), NOT a
+    # union-of-zero-rows into the groupBy: the contrib groupBy is
+    # unique on node, so when downstream consumers never read `rank`
+    # (e.g. a bare count over the joined readout) Catalyst's
+    # non-duplicating-outer-join elimination prunes the ENTIRE
+    # iteration pipeline — a union-based densify pins the row count
+    # to the contribution join and forfeits that pruning.  (An r12
+    # union-zero variant was measured and reverted for exactly this:
+    # identical integer arithmetic, but it disabled left-join
+    # elimination and made rank-pruned readouts pay all iterations.)
+    for _ in range(iterations):
+        contrib = (
+            ew_side.join(ranks, ew["src"] == ranks["node"])
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.expr("rank * w DIV wout")).alias("m"))
         )
-        if persist:
-            nodes = persist_slot(
-                "pagerank.nodes", nodes, key=derived_key(memo_key, "nodes")
-            )
-        # node count: a catalog-grade scalar (the init constant needs it
-        # on the driver); one tiny job over the persisted node frame
-        n = nodes.count()
-        init = scale // n
-        base = (15 * init) // 100
-        ranks = nodes.withColumn("rank", F.lit(init).cast("long"))
-        ew_side = F.broadcast(ew) if broadcast_edges else ew
-        # densify with `nodes LEFT JOIN contrib` + coalesce(m, 0), NOT a
-        # union-of-zero-rows into the groupBy: the contrib groupBy is
-        # unique on node, so when downstream consumers never read `rank`
-        # (e.g. a bare count over the joined readout) Catalyst's
-        # non-duplicating-outer-join elimination prunes the ENTIRE
-        # iteration pipeline — a union-based densify pins the row count
-        # to the contribution join and forfeits that pruning.  (An r12
-        # union-zero variant was measured and reverted for exactly this:
-        # identical integer arithmetic, but it disabled left-join
-        # elimination and made rank-pruned readouts pay all iterations.)
-        for _ in range(iterations):
-            contrib = (
-                ew_side.join(ranks, ew["src"] == ranks["node"])
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum(F.expr("rank * w DIV wout")).alias("m"))
-            )
-            ranks = nodes.join(contrib, "node", "left").select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr("85 * coalesce(m, 0L) DIV 100").cast("long")
-                ).alias("rank"),
-            )
-        return ranks
-
-    return plan_memo(memo_key, build, session=edges.sparkSession)
+        ranks = nodes.join(contrib, "node", "left").select(
+            "node",
+            (
+                F.lit(base)
+                + F.expr("85 * coalesce(m, 0L) DIV 100").cast("long")
+            ).alias("rank"),
+        )
+    return ranks
 
 
 def pagerank_sql(
@@ -206,90 +196,82 @@ def triangle_stats(
     The oriented edge frame feeds three operators, so it is persisted
     (caller-owned lifetime, house convention).
     """
-    # Driver-side cost (optimization r12): ``pairs`` is usually a DEEP
-    # plan (the MinHash LSH pipeline), so keying each slot with
-    # ``_plan_key`` walks/canonicalizes that whole tree per slot — pass
-    # ``key`` (e.g. ``minhash.lsh_pairs_key``) and the slots derive from
-    # it instead; the whole output plan is memoized under the same key.
+    # ``pairs`` is usually a DEEP plan (the MinHash LSH pipeline), so
+    # keying each slot with ``_plan_key`` would walk/canonicalize that
+    # whole tree per slot — pass ``key`` (e.g. ``minhash.lsh_pairs_key``)
+    # and the slots derive from it instead.
     base = key if key is not None else _plan_key(pairs)
 
-    def build() -> DataFrame:
-        # the canonical pair set feeds FOUR consumers (degree agg, the
-        # orientation join, the wedge-closure join, and — through deg —
-        # the final output join); when ``pairs`` is itself an expensive
-        # pipeline (MinHash LSH + exact verify), an unpersisted frame
-        # re-executes it per consumer.  Materialize once; deg likewise
-        # feeds three joins.
-        e = persist_slot(
-            "graph.triangle.pairs",
-            pairs.select(F.col(left).alias("a"), F.col(right).alias("b")),
-            key=derived_key(base, "tri.pairs", left, right),
-        )
-        sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        deg = persist_slot(
-            "graph.triangle.deg",
-            sym.groupBy(F.col("a").alias("v")).agg(
-                F.count(F.lit(1)).alias("degree")
-            ),
-            key=derived_key(base, "tri.deg", left, right),
-        )
-        # orient: src = endpoint with smaller (degree, id); join degrees
-        # on both endpoints (da/db), then pick direction
-        da = deg.select(F.col("v").alias("a"), F.col("degree").alias("da"))
-        db = deg.select(F.col("v").alias("b"), F.col("degree").alias("db"))
-        ed = e.join(da, "a").join(db, "b")
-        a_first = (F.col("da") < F.col("db")) | (
-            (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-        )
-        oriented = ed.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        )
-        oriented = persist_slot(
-            "graph.triangle.oriented",
-            oriented,
-            key=derived_key(base, "tri.oriented", left, right),
-        )
-        # wedges from a common apex: unordered out-neighbor pairs (v, w)
-        o1 = oriented.alias("o1")
-        o2 = oriented.alias("o2")
-        wedge = o1.join(
-            o2,
-            (F.col("o1.src") == F.col("o2.src"))
-            & (F.col("o1.dst") < F.col("o2.dst")),
-        ).select(
-            F.col("o1.src").alias("u"),
-            F.col("o1.dst").alias("v"),
-            F.col("o2.dst").alias("w"),
-        )
-        # close the wedge against the canonical (a<b) edge set
-        tri = wedge.join(
-            e,
-            (F.least("v", "w") == F.col("a"))
-            & (F.greatest("v", "w") == F.col("b")),
-        ).select("u", "v", "w")
-        per_v = (
-            tri.select(F.explode(F.array("u", "v", "w")).alias("v"))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("triangles"))
-        )
-        clustering = F.when(
-            F.col("degree") >= 2,
-            F.round(
-                (2.0 * F.coalesce(F.col("triangles"), F.lit(0)))
-                / (F.col("degree") * (F.col("degree") - F.lit(1))),
-                ndigits,
-            ),
-        ).otherwise(F.lit(0.0))
-        return deg.join(per_v, "v", "left").select(
-            F.col("v").alias("vertex"),
-            "degree",
-            F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles"),
-            clustering.alias("clustering"),
-        )
-
-    return plan_memo(
-        derived_key(base, "tri.out", left, right, ndigits),
-        build,
-        session=pairs.sparkSession,
+    # the canonical pair set feeds FOUR consumers (degree agg, the
+    # orientation join, the wedge-closure join, and — through deg —
+    # the final output join); when ``pairs`` is itself an expensive
+    # pipeline (MinHash LSH + exact verify), an unpersisted frame
+    # re-executes it per consumer.  Materialize once; deg likewise
+    # feeds three joins.
+    e = persist_slot(
+        "graph.triangle.pairs",
+        pairs.select(F.col(left).alias("a"), F.col(right).alias("b")),
+        key=derived_key(base, "tri.pairs", left, right),
+    )
+    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    deg = persist_slot(
+        "graph.triangle.deg",
+        sym.groupBy(F.col("a").alias("v")).agg(
+            F.count(F.lit(1)).alias("degree")
+        ),
+        key=derived_key(base, "tri.deg", left, right),
+    )
+    # orient: src = endpoint with smaller (degree, id); join degrees
+    # on both endpoints (da/db), then pick direction
+    da = deg.select(F.col("v").alias("a"), F.col("degree").alias("da"))
+    db = deg.select(F.col("v").alias("b"), F.col("degree").alias("db"))
+    ed = e.join(da, "a").join(db, "b")
+    a_first = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
+    )
+    oriented = ed.select(
+        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
+        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+    )
+    oriented = persist_slot(
+        "graph.triangle.oriented",
+        oriented,
+        key=derived_key(base, "tri.oriented", left, right),
+    )
+    # wedges from a common apex: unordered out-neighbor pairs (v, w)
+    o1 = oriented.alias("o1")
+    o2 = oriented.alias("o2")
+    wedge = o1.join(
+        o2,
+        (F.col("o1.src") == F.col("o2.src"))
+        & (F.col("o1.dst") < F.col("o2.dst")),
+    ).select(
+        F.col("o1.src").alias("u"),
+        F.col("o1.dst").alias("v"),
+        F.col("o2.dst").alias("w"),
+    )
+    # close the wedge against the canonical (a<b) edge set
+    tri = wedge.join(
+        e,
+        (F.least("v", "w") == F.col("a"))
+        & (F.greatest("v", "w") == F.col("b")),
+    ).select("u", "v", "w")
+    per_v = (
+        tri.select(F.explode(F.array("u", "v", "w")).alias("v"))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("triangles"))
+    )
+    clustering = F.when(
+        F.col("degree") >= 2,
+        F.round(
+            (2.0 * F.coalesce(F.col("triangles"), F.lit(0)))
+            / (F.col("degree") * (F.col("degree") - F.lit(1))),
+            ndigits,
+        ),
+    ).otherwise(F.lit(0.0))
+    return deg.join(per_v, "v", "left").select(
+        F.col("v").alias("vertex"),
+        "degree",
+        F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles"),
+        clustering.alias("clustering"),
     )

@@ -308,8 +308,7 @@ def srp_topk(
     A vector's ``nbits``-bit signature is split into ``nbits/band_bits``
     bands; query and corpus rows that agree on ANY full band become
     candidate pairs (OR-amplification), and only candidates are exactly
-    rescored (plan-memoized; see the end of the function).  Band width
-    tunes selectivity: a band collides with
+    rescored.  Band width tunes selectivity: a band collides with
     probability (1 - θ/π)^band_bits, so 4-bit bands keep recall on
     moderately-similar pairs (cos 0.5 → ~20%/band) while 8-bit bands
     suit high-threshold near-dup mining (cos 0.95 → ~77%/band, near
@@ -325,74 +324,57 @@ def srp_topk(
     candidates only.  Queries with no collision in any band return no
     rows (the approximate contract).
     """
-    from ...cache import _plan_key, derived_key, persist_slot, plan_memo
+    d = dim
+    if d is None:
+        d = len(corpus.select(vec_col).first()[0])  # 1-row scalar read
+    signs = srp_signs(nbits, d)
+    band_udf = _srp_band_udf(signs, band_bits)
 
-    corpus_key = _plan_key(corpus)
-    queries_key = _plan_key(queries)
-
-    def build() -> DataFrame:
-        d = dim
-        if d is None:
-            d = len(corpus.select(vec_col).first()[0])  # 1-row scalar read
-        signs = srp_signs(nbits, d)
-        band_udf = _srp_band_udf(signs, band_bits)
-
-        # each prepared (normalized) side feeds TWO consumers — the
-        # banded signature explode and the exact rescore — so both are
-        # persist-slot-pinned (optimization r12, guide §2.4): the r11
-        # scan audit showed 4 embeddings scans; pinning makes it one
-        # materialization per side.  Same lifetime contract as the
-        # ivf/annrecall prepared pins.
-        cp = persist_slot(
-            "embedsim.srp.prepared_corpus",
-            _prepared(corpus, id_col, vec_col),
-            key=derived_key(corpus_key, "srp.prep", id_col, vec_col),
-        )
-        qp = persist_slot(
-            "embedsim.srp.prepared_queries",
-            _prepared(queries, id_col, vec_col),
-            key=derived_key(queries_key, "srp.prep.q", id_col, vec_col),
-        )
-
-        def with_bands(p: DataFrame, id_alias: str) -> DataFrame:
-            return p.select(
-                F.col("vid").alias(id_alias),
-                F.posexplode(band_udf(F.col("v"))).alias("band", "val"),
-            )
-
-        c_sig = with_bands(cp, "vid")
-        q_sig = with_bands(qp, "qid")
-        cand = (
-            q_sig.join(c_sig, ["band", "val"])
-            .filter(F.col("qid") != F.col("vid"))
-            .select("qid", "vid")
-            .distinct()
-        )
-        c = cp
-        q = qp.select(
-            F.col("vid").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
-        )
-        score = F.round(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), ndigits
-        )
-        scored = (
-            cand.join(c, "vid")
-            .join(F.broadcast(q), "qid")
-            .select(F.col("qid").alias("q_id"), F.col("vid").alias("nn_id"), score.alias("score"))
-        )
-        w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("nn_id").asc())
-        return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-    # whole-plan memo (optimization r12; the ivf/ivfpq serving pattern):
-    # keyed on BOTH frames' plan keys + every parameter; a dim=None
-    # scalar pre-read only runs on a miss, and an unkeyable input always
-    # builds.  dim=None keys as "auto": the inferred dim is a pure
-    # function of the corpus already pinned by the plan key.
-    key = None if queries_key is None else derived_key(
-        corpus_key, "embedsim.srp_topk", queries_key, k, nbits, band_bits,
-        "auto" if dim is None else dim, id_col, vec_col, ndigits,
+    # each prepared (normalized) side feeds TWO consumers — the
+    # banded signature explode and the exact rescore — so both are
+    # persist-slot-pinned (optimization r12, guide §2.4): the r11
+    # scan audit showed 4 embeddings scans; pinning makes it one
+    # materialization per side.  Same lifetime contract as the
+    # ivf/annrecall prepared pins.
+    cp = persist_slot(
+        "embedsim.srp.prepared_corpus",
+        _prepared(corpus, id_col, vec_col),
+        key=derived_key(_plan_key(corpus), "srp.prep", id_col, vec_col),
     )
-    return plan_memo(key, build, session=corpus.sparkSession)
+    qp = persist_slot(
+        "embedsim.srp.prepared_queries",
+        _prepared(queries, id_col, vec_col),
+        key=derived_key(_plan_key(queries), "srp.prep.q", id_col, vec_col),
+    )
+
+    def with_bands(p: DataFrame, id_alias: str) -> DataFrame:
+        return p.select(
+            F.col("vid").alias(id_alias),
+            F.posexplode(band_udf(F.col("v"))).alias("band", "val"),
+        )
+
+    c_sig = with_bands(cp, "vid")
+    q_sig = with_bands(qp, "qid")
+    cand = (
+        q_sig.join(c_sig, ["band", "val"])
+        .filter(F.col("qid") != F.col("vid"))
+        .select("qid", "vid")
+        .distinct()
+    )
+    c = cp
+    q = qp.select(
+        F.col("vid").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
+    )
+    score = F.round(
+        _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), ndigits
+    )
+    scored = (
+        cand.join(c, "vid")
+        .join(F.broadcast(q), "qid")
+        .select(F.col("qid").alias("q_id"), F.col("vid").alias("nn_id"), score.alias("score"))
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("nn_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def semantic_dedup(
@@ -749,51 +731,7 @@ def ivf_topk(
     centroids move to actual cluster means, tightening buckets and
     raising recall at equal ``nprobe`` without touching the probe/search
     dataflow.
-
-    The constructed plan is memoized on (corpus, queries, params) — see
-    :func:`cache.plan_memo`: repeat searches skip the driver-side py4j
-    expression building (~1 s for the Lloyd-unrolled tree) and execute
-    directly against the slot-pinned centroids.
     """
-    from ...cache import _plan_key, derived_key, plan_memo
-
-    qkey = _plan_key(queries)
-    # None queries-key poisons the whole memo key (see pq.pq_adc_topk)
-    memo_key = (
-        derived_key(
-            _plan_key(corpus),
-            "ivf.search",
-            qkey,
-            k, num_centroids, nprobe, refine_iters, refine_sample_frac,
-            id_col, vec_col, ndigits,
-        )
-        if qkey is not None
-        else None
-    )
-    return plan_memo(
-        memo_key,
-        lambda: _ivf_topk_build(
-            corpus, queries, k=k, num_centroids=num_centroids, nprobe=nprobe,
-            refine_iters=refine_iters, refine_sample_frac=refine_sample_frac,
-            id_col=id_col, vec_col=vec_col, ndigits=ndigits,
-        ),
-        session=corpus.sparkSession,
-    )
-
-
-def _ivf_topk_build(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int,
-    num_centroids: int,
-    nprobe: int,
-    refine_iters: int,
-    refine_sample_frac: float | None,
-    id_col: str,
-    vec_col: str,
-    ndigits: int,
-) -> DataFrame:
     c = _prepared(corpus, id_col, vec_col)
     if refine_iters:
         # the prepared corpus feeds one assignment pass per Lloyd

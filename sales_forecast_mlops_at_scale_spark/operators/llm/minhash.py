@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ...cache import _plan_key, derived_key, persist_slot, plan_memo
+from ...cache import _plan_key, derived_key, persist_slot
 
 from .jaccard import shingle_index, shingle_sets
 
@@ -138,92 +138,73 @@ def minhash_incremental_pairs(
         raise ValueError("pass exactly one of corpus_df / corpus_sets")
     if corpus_bands is not None and corpus_sets is None:
         raise ValueError("corpus_bands requires corpus_sets (exact verify)")
-    # whole-plan memo + derived slot keys, exactly as minhash_lsh_pairs:
-    # an unkeyable input (the streaming ingest's micro-batch LogicalRDD)
-    # yields key=None and the memo degrades to always-build — correct,
-    # and the O(batch) ingest contract is untouched
-    kn = _plan_key(new_df)
-    kc = _plan_key(corpus_df if corpus_df is not None else corpus_sets)
-    kb = _plan_key(corpus_bands) if corpus_bands is not None else (0, "")
-    key = None
-    if kn is not None and kc is not None and kb is not None:
-        key = derived_key(
-            kn, "minhash.inc_pairs", kc, kb, corpus_bands is not None,
-            text_col, id_col, n, threshold, bands, rows_per_band,
-        )
-    given_corpus_sets = corpus_sets
-
-    def build() -> DataFrame:
-        corpus_sets = given_corpus_sets
-        new_sets = persist_slot(
-            "minhash.new_sets",
-            shingle_sets(new_df, text_col, id_col, n=n),
-            key=derived_key(kn, "minhash.new_sets", text_col, id_col, n),
-        )
+    # slot keys derive from the inputs' keys (as in minhash_lsh_pairs)
+    new_sets = persist_slot(
+        "minhash.new_sets",
+        shingle_sets(new_df, text_col, id_col, n=n),
+        key=derived_key(_plan_key(new_df), "minhash.new_sets", text_col, id_col, n),
+    )
+    if corpus_bands is None:
+        # derived in-session sets feed TWO consumers (signature agg +
+        # exact verify) — pin so the shingling runs once.  With
+        # corpus_bands given (the streaming ingest), corpus_sets is the
+        # MATERIALIZED file-backed table with ONE consumer (the exact
+        # verify), and the table grows every batch so its digest-keyed
+        # slot would never hit: pinning would materialize the ENTIRE
+        # corpus into executor cache per micro-batch and evict it on
+        # the next — O(corpus) cache churn for zero reuse, violating
+        # the O(batch) ingest contract.
+        kc = _plan_key(corpus_df if corpus_df is not None else corpus_sets)
         if corpus_sets is None:
             corpus_sets = shingle_sets(corpus_df, text_col, id_col, n=n)
-        if corpus_bands is None:
-            # derived in-session sets feed TWO consumers (signature agg +
-            # exact verify) — pin so the shingling runs once.  With
-            # corpus_bands given (the streaming ingest), corpus_sets is the
-            # MATERIALIZED file-backed table with ONE consumer (the exact
-            # verify), and the table grows every batch so its digest-keyed
-            # slot would never hit: pinning would materialize the ENTIRE
-            # corpus into executor cache per micro-batch and evict it on
-            # the next — O(corpus) cache churn for zero reuse, violating
-            # the O(batch) ingest contract.
-            corpus_sets = persist_slot(
-                "minhash.corpus_sets",
-                corpus_sets,
-                key=derived_key(
-                    kc, "minhash.corpus_sets", text_col, id_col, n
-                ),
-            )
-        k = bands * rows_per_band
-        new_sigs = minhash_signatures(
-            new_df, text_col, id_col, n=n, num_hashes=k, sets=new_sets
+        corpus_sets = persist_slot(
+            "minhash.corpus_sets",
+            corpus_sets,
+            key=derived_key(kc, "minhash.corpus_sets", text_col, id_col, n),
         )
-        nb = _band_buckets(new_sigs, bands=bands, rows_per_band=rows_per_band)
-        if corpus_bands is not None:
-            cb = corpus_bands.select("doc", "band", "bkey")
-        else:
-            corpus_sigs = minhash_signatures(
-                corpus_df, text_col, id_col, n=n, num_hashes=k,
-                sets=corpus_sets,
-            )
-            cb = _band_buckets(
-                corpus_sigs, bands=bands, rows_per_band=rows_per_band
-            )
-        candidates = (
-            nb.alias("a")
-            .join(cb.alias("b"), ["band", "bkey"])
-            .select(
-                F.col("a.doc").alias("new_id"),
-                F.col("b.doc").alias("corpus_id"),
-            )
-            # a redelivered doc can sit on both sides under the SAME id
-            # (e.g. a torn ingest retry whose index row landed); it is the
-            # same document, not a duplicate of itself
-            .filter(F.col("new_id") != F.col("corpus_id"))
-            .distinct()
+    k = bands * rows_per_band
+    new_sigs = minhash_signatures(
+        new_df, text_col, id_col, n=n, num_hashes=k, sets=new_sets
+    )
+    nb = _band_buckets(new_sigs, bands=bands, rows_per_band=rows_per_band)
+    if corpus_bands is not None:
+        cb = corpus_bands.select("doc", "band", "bkey")
+    else:
+        corpus_sigs = minhash_signatures(
+            corpus_df, text_col, id_col, n=n, num_hashes=k,
+            sets=corpus_sets,
         )
-        sa = new_sets.select(
-            F.col("doc").alias("new_id"), F.col("sh").alias("sh_a")
+        cb = _band_buckets(
+            corpus_sigs, bands=bands, rows_per_band=rows_per_band
         )
-        sb = corpus_sets.select(
-            F.col("doc").alias("corpus_id"), F.col("sh").alias("sh_b")
+    candidates = (
+        nb.alias("a")
+        .join(cb.alias("b"), ["band", "bkey"])
+        .select(
+            F.col("a.doc").alias("new_id"),
+            F.col("b.doc").alias("corpus_id"),
         )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        return (
-            candidates.join(sa, "new_id")
-            .join(sb, "corpus_id")
-            .withColumn("jaccard", F.round(inter / union, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("new_id", "corpus_id", "jaccard")
-        )
-
-    return plan_memo(key, build, session=new_df.sparkSession)
+        # a redelivered doc can sit on both sides under the SAME id
+        # (e.g. a torn ingest retry whose index row landed); it is the
+        # same document, not a duplicate of itself
+        .filter(F.col("new_id") != F.col("corpus_id"))
+        .distinct()
+    )
+    sa = new_sets.select(
+        F.col("doc").alias("new_id"), F.col("sh").alias("sh_a")
+    )
+    sb = corpus_sets.select(
+        F.col("doc").alias("corpus_id"), F.col("sh").alias("sh_b")
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        candidates.join(sa, "new_id")
+        .join(sb, "corpus_id")
+        .withColumn("jaccard", F.round(inter / union, 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("new_id", "corpus_id", "jaccard")
+    )
 
 
 def minhash_lsh_pairs(
@@ -248,76 +229,61 @@ def minhash_lsh_pairs(
     session either call ``spark.catalog.clearCache()`` when done or
     materialize the sets as a table (the durable equivalent).
 
-    Driver-side cost (optimization r12): the whole constructed plan is
-    memoized (:func:`...cache.plan_memo`, the pq/ivfpq serving pattern)
-    keyed on the SOURCE frame's plan key + every parameter, and the
-    persist slots inside carry :func:`...cache.derived_key` keys from
-    the same base — repeat invocations in a session skip both the
-    ~1.4 s of py4j expression construction and the deep-plan
-    ``canonicalized()`` walks (profiled: build was 1.4 s of the 2.0 s
-    warm wall at sf0.1).  Correctness never rides a hit: the memo
-    returns a plan, evaluation still computes from the inputs, and a
-    changed source file digest misses.
+    The persist slots carry :func:`...cache.derived_key` keys from the
+    SOURCE frame's plan key, so the deep signature plans are never
+    walked with ``canonicalized()``.
     """
     base = _plan_key(df)
-    key = derived_key(
-        base, "minhash.lsh_pairs", text_col, id_col, n, threshold, bands,
-        rows_per_band,
+    sets = persist_slot(
+        "minhash.sets",
+        shingle_sets(df, text_col, id_col, n=n),
+        key=derived_key(base, "minhash.sets", text_col, id_col, n),
     )
-
-    def build() -> DataFrame:
-        sets = persist_slot(
-            "minhash.sets",
-            shingle_sets(df, text_col, id_col, n=n),
-            key=derived_key(base, "minhash.sets", text_col, id_col, n),
+    # the signature frame feeds BOTH sides of the bucket self-join
+    # below; unpersisted, the 64-way min aggregation over the
+    # exploded shingle rows executes once per side (the r11 plan
+    # dump shows two identical HashAggregate(min(xxhash64)×64)
+    # subtrees — a broadcast join defeats exchange reuse, so only a
+    # materialization dedupes it).  Same rationale and lifetime
+    # contract as ``simhash_pairs``'s sigs persist.
+    sigs = persist_slot(
+        "minhash.sigs",
+        minhash_signatures(
+            df,
+            text_col,
+            id_col,
+            n=n,
+            num_hashes=bands * rows_per_band,
+            sets=sets,
+        ),
+        key=derived_key(
+            base, "minhash.sigs", text_col, id_col, n,
+            bands * rows_per_band,
+        ),
+    )
+    buckets = _band_buckets(sigs, bands=bands, rows_per_band=rows_per_band)
+    a, b = buckets.alias("a"), buckets.alias("b")
+    candidates = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("a.doc") < F.col("b.doc")),
         )
-        # the signature frame feeds BOTH sides of the bucket self-join
-        # below; unpersisted, the 64-way min aggregation over the
-        # exploded shingle rows executes once per side (the r11 plan
-        # dump shows two identical HashAggregate(min(xxhash64)×64)
-        # subtrees — a broadcast join defeats exchange reuse, so only a
-        # materialization dedupes it).  Same rationale and lifetime
-        # contract as ``simhash_pairs``'s sigs persist.
-        sigs = persist_slot(
-            "minhash.sigs",
-            minhash_signatures(
-                df,
-                text_col,
-                id_col,
-                n=n,
-                num_hashes=bands * rows_per_band,
-                sets=sets,
-            ),
-            key=derived_key(
-                base, "minhash.sigs", text_col, id_col, n,
-                bands * rows_per_band,
-            ),
-        )
-        buckets = _band_buckets(sigs, bands=bands, rows_per_band=rows_per_band)
-        a, b = buckets.alias("a"), buckets.alias("b")
-        candidates = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bkey") == F.col("b.bkey"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-            .distinct()
-        )
-        sa = sets.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
-        sb = sets.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        return (
-            candidates.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("jaccard", F.round(inter / union, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    return plan_memo(key, build, session=df.sparkSession)
+        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        .distinct()
+    )
+    sa = sets.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
+    sb = sets.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        candidates.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("jaccard", F.round(inter / union, 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 def lsh_pairs_key(
@@ -330,7 +296,7 @@ def lsh_pairs_key(
     bands: int = BANDS,
     rows_per_band: int = ROWS_PER_BAND,
 ) -> tuple[int, str] | None:
-    """The memo/slot key :func:`minhash_lsh_pairs` uses for these inputs —
+    """A key for :func:`minhash_lsh_pairs`'s output on these inputs —
     exported so downstream operators (triangle stats, clustering) can
     derive THEIR slot keys from it instead of walking the deep pair-plan
     with ``_plan_key`` (a multi-second ``canonicalized()`` traversal)."""

@@ -379,36 +379,75 @@ def pq_adc_topk(
     the top-``R`` ADC candidates are re-ranked by exact cosine against
     the raw vectors (:func:`_exact_rerank`; output ``q_id, nn_id,
     score, rank``) — the same IndexRefineFlat tail the IVF-PQ tier uses.
-
-    The CONSTRUCTED plan is memoized on (corpus, queries, params) — see
-    :func:`cache.plan_memo`: identical repeat searches skip the ~1 s of
-    driver-side py4j expression building and go straight to execution
-    against the slot-pinned codebook/codes.
     """
-    ckey = _plan_key(corpus)
-    qkey = _plan_key(queries)
-    # an unkeyable QUERIES frame must poison the whole memo key: embedding
-    # the literal None would alias every such frame onto one entry and
-    # serve the first query's plan for a different query
-    memo_key = (
-        derived_key(
-            ckey,
-            "pq.adc.search",
-            qkey,
-            k, m, n_codewords, dim, id_col, vec_col, rerank,
-        )
-        if qkey is not None
-        else None
+    codebook = pq_codebook(
+        corpus, m=m, k=n_codewords, dim=dim, id_col=id_col, vec_col=vec_col
     )
-    from ...cache import plan_memo
-
-    return plan_memo(
-        memo_key,
-        lambda: _pq_adc_topk_build(
-            corpus, queries, k=k, m=m, n_codewords=n_codewords,
-            dim=dim, id_col=id_col, vec_col=vec_col, rerank=rerank,
+    # the PACKED code table IS the stored index (a production deployment
+    # materializes it as the compressed corpus representation); pinning
+    # it makes repeated searches touch only integer code rows, which is
+    # PQ's whole point — without it every query re-runs the M·K-way
+    # encode join over the float vectors.  Packed one-row-per-vector
+    # (optimization r13, see _packed_codes): the ADC scan is a fan-out-
+    # free broadcast join + inline fold instead of an M-way joined
+    # explosion re-summed through a corpus-sized exchange.
+    codes = persist_slot(
+        "pq.codes",
+        _packed_codes(
+            pq_encode(
+                corpus, codebook, m=m, dim=dim, id_col=id_col, vec_col=vec_col
+            ),
+            m,
+            ["vid"],
         ),
-        session=corpus.sparkSession,
+        key=derived_key(
+            _plan_key(corpus), "pq.codes.packed", m, n_codewords, dim,
+            id_col, vec_col,
+        ),
+    )
+    q_unit = _unit(_prepared(queries, id_col, vec_col)).select(
+        F.col("vid").alias("qid"), "v"
+    )
+    if dim:
+        lut = _lut_direct(q_unit, codebook, m, dim // m, ["qid"])
+    else:
+        dtable = _subspaces(q_unit, m=m).join(F.broadcast(codebook), "m").select(
+            "qid",
+            "m",
+            F.col("cid").alias("code"),
+            _sqdist_fp(F.col("sv"), F.col("cv"), None).alias("d_fp"),
+        )
+        lut = _packed_lut(dtable, m, ["qid"])
+    # flat PQ scans every candidate per query by design: Q LUT maps ×
+    # the packed corpus, one output row per (query, candidate) — the
+    # old form produced M rows per pair and re-aggregated them
+    scored = (
+        codes.crossJoin(F.broadcast(lut))
+        .filter(F.col("qid") != F.col("vid"))
+        .select("qid", "vid", _adc_sum().alias("s_fp"))
+    )
+    if rerank:
+        q = _prepared(queries, id_col, vec_col).select(
+            F.col("vid").alias("qid"), "v", "nrm"
+        )
+        return _exact_rerank(
+            scored,
+            q,
+            _prepared(corpus, id_col, vec_col),
+            k=k,
+            rerank=rerank,
+            ndigits=6,
+        )
+    w = Window.partitionBy("qid").orderBy(F.col("s_fp").asc(), F.col("vid").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias("q_id"),
+            F.col("vid").alias("nn_id"),
+            F.round(F.col("s_fp") / F.lit(SRP_QUANT_SCALE), 6).alias("adist"),
+            "rank",
+        )
     )
 
 
@@ -555,89 +594,6 @@ def _exact_rerank(
             F.col("qid").alias("q_id"),
             F.col("vid").alias("nn_id"),
             "score",
-            "rank",
-        )
-    )
-
-
-def _pq_adc_topk_build(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int,
-    m: int,
-    n_codewords: int,
-    dim: int | None,
-    id_col: str,
-    vec_col: str,
-    rerank: int = 0,
-) -> DataFrame:
-    codebook = pq_codebook(
-        corpus, m=m, k=n_codewords, dim=dim, id_col=id_col, vec_col=vec_col
-    )
-    # the PACKED code table IS the stored index (a production deployment
-    # materializes it as the compressed corpus representation); pinning
-    # it makes repeated searches touch only integer code rows, which is
-    # PQ's whole point — without it every query re-runs the M·K-way
-    # encode join over the float vectors.  Packed one-row-per-vector
-    # (optimization r13, see _packed_codes): the ADC scan is a fan-out-
-    # free broadcast join + inline fold instead of an M-way joined
-    # explosion re-summed through a corpus-sized exchange.
-    codes = persist_slot(
-        "pq.codes",
-        _packed_codes(
-            pq_encode(
-                corpus, codebook, m=m, dim=dim, id_col=id_col, vec_col=vec_col
-            ),
-            m,
-            ["vid"],
-        ),
-        key=derived_key(
-            _plan_key(corpus), "pq.codes.packed", m, n_codewords, dim,
-            id_col, vec_col,
-        ),
-    )
-    q_unit = _unit(_prepared(queries, id_col, vec_col)).select(
-        F.col("vid").alias("qid"), "v"
-    )
-    if dim:
-        lut = _lut_direct(q_unit, codebook, m, dim // m, ["qid"])
-    else:
-        dtable = _subspaces(q_unit, m=m).join(F.broadcast(codebook), "m").select(
-            "qid",
-            "m",
-            F.col("cid").alias("code"),
-            _sqdist_fp(F.col("sv"), F.col("cv"), None).alias("d_fp"),
-        )
-        lut = _packed_lut(dtable, m, ["qid"])
-    # flat PQ scans every candidate per query by design: Q LUT maps ×
-    # the packed corpus, one output row per (query, candidate) — the
-    # old form produced M rows per pair and re-aggregated them
-    scored = (
-        codes.crossJoin(F.broadcast(lut))
-        .filter(F.col("qid") != F.col("vid"))
-        .select("qid", "vid", _adc_sum().alias("s_fp"))
-    )
-    if rerank:
-        q = _prepared(queries, id_col, vec_col).select(
-            F.col("vid").alias("qid"), "v", "nrm"
-        )
-        return _exact_rerank(
-            scored,
-            q,
-            _prepared(corpus, id_col, vec_col),
-            k=k,
-            rerank=rerank,
-            ndigits=6,
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("s_fp").asc(), F.col("vid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("q_id"),
-            F.col("vid").alias("nn_id"),
-            F.round(F.col("s_fp") / F.lit(SRP_QUANT_SCALE), 6).alias("adist"),
             "rank",
         )
     )
@@ -922,58 +878,9 @@ def ivfpq_topk(
     rebuild, the pinned index.
 
     Output: ``q_id, nn_id, adist, rank`` (query excluded).
-
-    Like :func:`pq_adc_topk`, the constructed plan is memoized on
-    (corpus, queries, params) — repeat searches skip driver-side
-    expression building entirely (:func:`cache.plan_memo`).
     """
-    ckey = _plan_key(corpus)
-    qkey = _plan_key(queries)
-    # None queries-key poisons the whole memo key (see pq_adc_topk)
-    memo_key = (
-        derived_key(
-            ckey,
-            "ivfpq.search",
-            qkey,
-            k, num_centroids, nprobe, m, n_codewords,
-            refine_iters, dim, id_col, vec_col, ndigits, rerank,
-        )
-        if qkey is not None
-        else None
-    )
-    from ...cache import plan_memo
-
-    return plan_memo(
-        memo_key,
-        lambda: _ivfpq_topk_build(
-            corpus, queries, ckey=ckey, k=k, num_centroids=num_centroids,
-            nprobe=nprobe, m=m, n_codewords=n_codewords,
-            refine_iters=refine_iters, dim=dim, id_col=id_col,
-            vec_col=vec_col, ndigits=ndigits, rerank=rerank,
-        ),
-        session=corpus.sparkSession,
-    )
-
-
-def _ivfpq_topk_build(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    ckey: tuple[int, str] | None,
-    k: int,
-    num_centroids: int,
-    nprobe: int,
-    m: int,
-    n_codewords: int,
-    refine_iters: int,
-    dim: int | None,
-    id_col: str,
-    vec_col: str,
-    ndigits: int,
-    rerank: int,
-) -> DataFrame:
     idx_key = derived_key(
-        ckey,
+        _plan_key(corpus),
         "ivfpq.idx", num_centroids, m, n_codewords,
         refine_iters, dim, id_col, vec_col, ndigits,
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ...cache import _plan_key, derived_key, persist_slot, plan_memo
+from ...cache import _plan_key, derived_key, persist_slot
 
 from .textstats import normalized_text, tokens
 
@@ -115,57 +115,48 @@ def simhash_pairs(
     ``spark.catalog.clearCache()`` when done or materialize signatures
     as a table.
     """
-    # whole-plan memo + derived slot key (the minhash_lsh_pairs pattern):
-    # repeat invocations skip the py4j expression construction and the
-    # signature plan's canonicalized() walk; a hit never carries results
-    base = _plan_key(df)
-    key = derived_key(base, "simhash.pairs", text_col, id_col, max_hamming)
-
-    def build() -> DataFrame:
-        sigs = persist_slot(
-            "simhash.sigs",
-            simhash_signatures(df, text_col, id_col),
-            key=derived_key(base, "simhash.sigs", text_col, id_col),
-        )
-        chunked = sigs.select(
-            "doc",
-            "sim_hi",
-            "sim_lo",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            _chunk(
-                                F.col("sim_hi"), F.col("sim_lo"), j
-                            ).alias("cv"),
-                        )
-                        for j in range(CHUNKS)
-                    ]
-                )
-            ).alias("c"),
-        ).select(
-            "doc", "sim_hi", "sim_lo",
-            F.col("c.j").alias("j"), F.col("c.cv").alias("cv"),
-        )
-        a, b = chunked.alias("a"), chunked.alias("b")
-        hamming = F.bit_count(
-            F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi"))
-        ) + F.bit_count(F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo")))
-        return (
-            a.join(
-                b,
-                (F.col("a.j") == F.col("b.j"))
-                & (F.col("a.cv") == F.col("b.cv"))
-                & (F.col("a.doc") < F.col("b.doc")),
+    # the slot key derives from the input's key: keying the signature
+    # plan itself would walk its canonicalized() tree
+    sigs = persist_slot(
+        "simhash.sigs",
+        simhash_signatures(df, text_col, id_col),
+        key=derived_key(_plan_key(df), "simhash.sigs", text_col, id_col),
+    )
+    chunked = sigs.select(
+        "doc",
+        "sim_hi",
+        "sim_lo",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("j"),
+                        _chunk(F.col("sim_hi"), F.col("sim_lo"), j).alias("cv"),
+                    )
+                    for j in range(CHUNKS)
+                ]
             )
-            .select(
-                F.col("a.doc").alias("id_a"),
-                F.col("b.doc").alias("id_b"),
-                hamming.alias("hamming"),
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct()
+        ).alias("c"),
+    ).select(
+        "doc", "sim_hi", "sim_lo",
+        F.col("c.j").alias("j"), F.col("c.cv").alias("cv"),
+    )
+    a, b = chunked.alias("a"), chunked.alias("b")
+    hamming = F.bit_count(
+        F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi"))
+    ) + F.bit_count(F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo")))
+    return (
+        a.join(
+            b,
+            (F.col("a.j") == F.col("b.j"))
+            & (F.col("a.cv") == F.col("b.cv"))
+            & (F.col("a.doc") < F.col("b.doc")),
         )
-
-    return plan_memo(key, build, session=df.sparkSession)
+        .select(
+            F.col("a.doc").alias("id_a"),
+            F.col("b.doc").alias("id_b"),
+            hamming.alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )

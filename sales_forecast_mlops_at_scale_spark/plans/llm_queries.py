@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import persist_slot, registry_plan
 from ..catalog import load_table
 from ..operators.llm import (
     brute_force_topk,
@@ -264,7 +265,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     components → (doc, cluster representative).  This is the actual
     KEEP/DROP decision a training-data pipeline executes (keep the
     cluster minimum, drop the rest)."""
-    pairs = minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), threshold=0.5)
+    pairs = registry_plan("q_minhash_dedup", spark, sf_dir, q_minhash_dedup)
     return connected_components(pairs)
 
 
@@ -525,7 +526,6 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     are deterministic, so the recall numbers are too).  Shares the
     normalized-corpus/query pin with q_ann_recall_all (one
     materialization serves both tiers' semantically-equal subtrees)."""
-    from ..cache import persist_slot
     from ..operators.llm.embedsim import _prepared
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -533,10 +533,10 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "annrecall.prepared_corpus", _prepared(emb, "vec_id", "embedding")
     )
     persist_slot("annrecall.queries", emb.filter(F.col("vec_id") < 8))
-    exact = q_embed_topk(spark, sf_dir).select("q_id", "nn_id")
-    approx = q_embed_srp_topk(spark, sf_dir).select(
-        "q_id", "nn_id", F.lit(1).alias("hit")
-    )
+    exact = registry_plan("q_embed_topk", spark, sf_dir, q_embed_topk)
+    approx = registry_plan("q_embed_srp_topk", spark, sf_dir, q_embed_srp_topk)
+    exact = exact.select("q_id", "nn_id")
+    approx = approx.select("q_id", "nn_id", F.lit(1).alias("hit"))
     return (
         exact.join(approx, ["q_id", "nn_id"], "left")
         .groupBy("q_id")
@@ -696,7 +696,8 @@ def q_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm.cluster import dedup_summary
 
     docs = load_table(spark, sf_dir, "documents")
-    return dedup_summary(docs, minhash_lsh_pairs(docs, threshold=0.5))
+    pairs = registry_plan("q_minhash_dedup", spark, sf_dir, q_minhash_dedup)
+    return dedup_summary(docs, pairs)
 
 
 def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1643,10 +1644,9 @@ def q_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm.minhash import lsh_pairs_key
 
     docs = load_table(spark, sf_dir, "documents")
-    # the exported pair key spares triangle_stats a _plan_key walk of
-    # the deep LSH plan (optimization r12; see triangle_stats docstring)
+    # the pair key spares triangle_stats a _plan_key walk of the LSH plan
     return triangle_stats(
-        minhash_lsh_pairs(docs, threshold=0.5),
+        registry_plan("q_minhash_dedup", spark, sf_dir, q_minhash_dedup),
         key=lsh_pairs_key(docs, threshold=0.5),
     )
 
@@ -2939,7 +2939,6 @@ def q_ann_recall_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     would stage first.  The five-tier union is ~1.9 s of pure plan
     construction; the registry plan cache (``cache.registry_plan``)
     serves a repeat call without rebuilding it."""
-    from ..cache import persist_slot
     from ..operators.llm.embedsim import _prepared
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2947,7 +2946,8 @@ def q_ann_recall_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         "annrecall.prepared_corpus", _prepared(emb, "vec_id", "embedding")
     )
     persist_slot("annrecall.queries", emb.filter(F.col("vec_id") < 8))
-    exact = q_embed_topk(spark, sf_dir).select("q_id", "nn_id")
+    exact = registry_plan("q_embed_topk", spark, sf_dir, q_embed_topk)
+    exact = exact.select("q_id", "nn_id")
     methods = {
         "srp": q_embed_srp_topk,
         "ivf": q_embed_ivf_topk,
@@ -2956,7 +2956,8 @@ def q_ann_recall_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     out = None
     for name, fn in sorted(methods.items()):
-        approx = fn(spark, sf_dir).select("q_id", "nn_id", F.lit(1).alias("hit"))
+        approx = registry_plan(fn.__name__, spark, sf_dir, fn)
+        approx = approx.select("q_id", "nn_id", F.lit(1).alias("hit"))
         scored = (
             exact.join(approx, ["q_id", "nn_id"], "left")
             .groupBy("q_id")

@@ -50,6 +50,15 @@ class Clock:
 FIXED_CLOCK = Clock(as_of=_dt.date(2026, 1, 1))
 
 
+def default_driver_memory(total_bytes: int) -> str:
+    """The driver heap for a host with ``total_bytes`` of physical RAM:
+    half of it, capped at 16 GiB.  16g halves GC-induced run-to-run
+    spread vs 8g when the bench drives ~100 queries × 3 reps through one
+    JVM with operator-internal caches alive (128 GiB host); on a small
+    host a 16g heap outgrows the RAM and the kernel kills the JVM."""
+    return f"{max(1, min(16, total_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "sales-forecast-spark-engine",
     *,
@@ -73,6 +82,9 @@ def get_spark(
     ensure_protobuf_runtime()
 
     master = master or os.environ.get("SPARK_MASTER", f"local[{DEFAULT_PARALLELISM}]")
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -96,11 +108,7 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        # 16g: the bench drives ~100 queries × 3 reps through one JVM
-        # with operator-internal caches alive (caller-owned lifetime) —
-        # the larger heap halves GC-induced run-to-run spread vs 8g on a
-        # 128 GiB host; override with SPARK_DRIVER_MEMORY for small boxes
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory)
     )
     if master.startswith("local"):
         # list partition directories serially, without a Spark job: above

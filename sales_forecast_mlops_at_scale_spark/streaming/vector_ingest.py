@@ -42,7 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import _plan_key, derived_key
+from ..cache import _plan_key, derived_key, persist_slot
 from ..operators.llm.embedsim import _prepared
 from ..operators.llm.pq import (
     PQ_K,
@@ -330,13 +330,7 @@ def search_materialized(
     maintains for exactly this) settles the final order by exact
     cosine.
 
-    The CONSTRUCTED plan is memoized on (codes files, vectors files
-    when re-ranking, queries, params) like the in-session tiers
-    (:func:`cache.plan_memo`): a serving process answering repeated
-    queries pays the py4j expression build once; the file digests
-    (size+mtime) key the memo, so an ingest append OR a tier rewrite
-    (compaction) misses and rebuilds against the new listing.  The
-    stored tiers are NOT persist-pinned by default: materializing a
+    The stored tiers are NOT persist-pinned by default: materializing a
     cache scans the WHOLE codes table, while the probe filter pushed to
     the parquet scan touches only probed buckets — the O(batch)
     contract the per-micro-batch ingest dedup depends on.  A LONG-LIVED
@@ -345,81 +339,50 @@ def search_materialized(
     buys), so the serving deployment keeps them resident — the pin is
     slot-keyed on the codes file digest, so an ingest append or a
     compaction evicts it."""
-    from ..cache import plan_memo
-
     # never search mixed tiers: complete a mid-swap retrain first
     # (cheap journal-presence check; code-review r8)
     heal_retrain(root_path)
     codes_src = spark.read.parquet(f"{root_path}/codes")
-    vectors_src = spark.read.parquet(f"{root_path}/vectors") if rerank else None
-    ckey = _plan_key(codes_src)
-    vkey = _plan_key(vectors_src) if rerank else "norerank"
-    qkey = _plan_key(queries)
-    # None on ANY constituent poisons the whole memo key (see
-    # pq.pq_adc_topk): the vectors digest must participate when the
-    # re-rank branch embeds that tier's file listing, or a
-    # vectors-only rewrite (partial compaction) would serve a memoized
-    # plan referencing deleted files
-    memo_key = (
-        derived_key(
-            ckey,
-            "vecingest.search",
-            qkey,
-            vkey,
-            root_path, k, nprobe, m, dim, id_col, vec_col, ndigits, rerank,
-            pin_codes,
+    centroids = spark.read.parquet(f"{root_path}/centroids")
+    codebook = spark.read.parquet(f"{root_path}/pq_codebook")
+    codes = codes_src.select(F.col(id_col).alias("vid"), "bucket", "m", "code")
+    codes_packed = False
+    if pin_codes:
+        # the serving tier keeps the PACKED index resident
+        # (optimization r13, see pq._packed_codes): one row per
+        # vector, searches are fan-out-free joins with no per-query
+        # packing pass; the O(batch) ingest-dedup path keeps the raw
+        # table and packs only probed buckets per evaluation
+        from ..operators.llm.pq import _packed_codes
+
+        codes = persist_slot(
+            "vecingest.codes",
+            _packed_codes(codes, m, ["vid", "bucket"]),
+            key=derived_key(_plan_key(codes_src), "codes.pin.packed", id_col, m),
         )
-        if qkey is not None and vkey is not None
+        codes_packed = True
+    q = _prepared(queries, id_col, vec_col).select(
+        F.col("vid").alias("qid"), "v", "nrm"
+    )
+    vectors = (
+        _prepared(spark.read.parquet(f"{root_path}/vectors"), id_col, vec_col)
+        if rerank
         else None
     )
-
-    def build() -> DataFrame:
-        from ..cache import persist_slot
-
-        centroids = spark.read.parquet(f"{root_path}/centroids")
-        codebook = spark.read.parquet(f"{root_path}/pq_codebook")
-        codes = codes_src.select(
-            F.col(id_col).alias("vid"), "bucket", "m", "code"
-        )
-        codes_packed = False
-        if pin_codes:
-            # the serving tier keeps the PACKED index resident
-            # (optimization r13, see pq._packed_codes): one row per
-            # vector, searches are fan-out-free joins with no per-query
-            # packing pass; the O(batch) ingest-dedup path keeps the raw
-            # table and packs only probed buckets per evaluation
-            from ..operators.llm.pq import _packed_codes
-
-            codes = persist_slot(
-                "vecingest.codes",
-                _packed_codes(codes, m, ["vid", "bucket"]),
-                key=derived_key(ckey, "codes.pin.packed", id_col, m)
-                if ckey
-                else None,
-            )
-            codes_packed = True
-        q = _prepared(queries, id_col, vec_col).select(
-            F.col("vid").alias("qid"), "v", "nrm"
-        )
-        vectors = (
-            _prepared(vectors_src, id_col, vec_col) if rerank else None
-        )
-        return ivfpq_search(
-            q,
-            centroids,
-            codebook,
-            codes,
-            k=k,
-            nprobe=nprobe,
-            m=m,
-            d_sub=dim // m if dim else None,
-            ndigits=ndigits,
-            vectors=vectors,
-            rerank=rerank,
-            codes_packed=codes_packed,
-        )
-
-    return plan_memo(memo_key, build, session=spark)
+    return ivfpq_search(
+        q,
+        centroids,
+        codebook,
+        codes,
+        k=k,
+        nprobe=nprobe,
+        m=m,
+        d_sub=dim // m if dim else None,
+        ndigits=ndigits,
+        vectors=vectors,
+        rerank=rerank,
+        codes_packed=codes_packed,
+    )
 
 
 def _seed_distribution(c_prepared: DataFrame, centroids: DataFrame) -> DataFrame:

@@ -1,5 +1,5 @@
 """Unit tests for the plan-keyed cache registry (cache.py): slot reuse,
-keyless persist tracking, and driver-side plan memoization."""
+keyless persist tracking, and driver-side value memoization."""
 
 from __future__ import annotations
 
@@ -14,8 +14,8 @@ from sales_forecast_mlops_at_scale_spark.cache import (
     clear_slots,
     derived_key,
     persist_slot,
-    plan_memo,
     track_keyless,
+    value_memo,
 )
 
 from sales_forecast_mlops_at_scale_spark.catalog import load_table
@@ -116,19 +116,17 @@ def test_plan_memo_hits_on_same_key_only(spark):
         return out
 
     k1 = derived_key(base, "memo-test", 1)
-    first = plan_memo(k1, builder)
-    assert plan_memo(k1, builder) is first and len(builds) == 1
+    first = value_memo(k1, builder, session=spark)
+    assert value_memo(k1, builder, session=spark) is first and len(builds) == 1
     # different params -> rebuild; None key -> always build
-    plan_memo(derived_key(base, "memo-test", 2), builder)
-    plan_memo(None, builder)
+    value_memo(derived_key(base, "memo-test", 2), builder, session=spark)
+    value_memo(None, builder, session=spark)
     assert len(builds) == 3
     clear_slots()
     assert not _MEMO
 
 
 def test_value_memo_session_checked_and_cleared(spark):
-    from sales_forecast_mlops_at_scale_spark.cache import _MEMO, value_memo
-
     clear_slots()
     base = _plan_key(load_table(spark, SF_DIR, "embeddings"))
     builds = []

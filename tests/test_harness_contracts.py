@@ -62,3 +62,11 @@ def test_driver_contract_entry_and_registry(spark):
     assert entry.entry(spark).count() > 0
     assert set(entry.oracle_sql()) <= set(entry.queries())
     assert len(entry.queries()) == 180
+
+
+def test_default_driver_memory_is_half_the_host_capped_at_16g():
+    from sales_forecast_mlops_at_scale_spark.session import default_driver_memory
+
+    assert default_driver_memory(128 * 2**30) == "16g"
+    assert default_driver_memory(15 * 2**30) == "7g"
+    assert default_driver_memory(2**30) == "1g"

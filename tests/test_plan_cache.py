@@ -222,3 +222,71 @@ def test_dashboard_hits_equal_fresh_builds(spark):
         assert len(got), name
         assert got.equals(normalize(fresh.toPandas())), name
     clear_slots()
+
+
+def test_micro_batch_frames_leave_the_memo_store_alone(spark):
+    """A ``foreachBatch`` frame (a ``LogicalRDD`` leaf, keyed on a fresh
+    RDD id each batch) can never be served again, so pushing it through
+    the MinHash operators must store nothing that could evict a
+    registry entry."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from sales_forecast_mlops_at_scale_spark.operators.llm.minhash import (
+        minhash_incremental_pairs,
+        minhash_lsh_pairs,
+    )
+
+    clear_slots()
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    )
+    text = "the quick brown fox jumps over the lazy dog"
+
+    def batch(rows):
+        return spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+
+    for i in range(3):
+        new = batch([(10 * i + 1, text), (10 * i + 2, text + " twice")])
+        n = len(_MEMO)
+        minhash_lsh_pairs(new)
+        minhash_incremental_pairs(new, batch([(100 + i, text)]))
+        assert len(_MEMO) == n
+    clear_slots()
+
+
+def _registry_delta(before):
+    after = memo_stats()["registry"]
+    return after["hits"] - before["hits"], after["misses"] - before["misses"]
+
+
+def test_dedup_queries_share_the_minhash_registry_plan(spark):
+    """q_dedup_clusters, q_dedup_summary and q_triangle_stats take their
+    pairs from q_minhash_dedup's registry entry: each build is one miss
+    (its own) and one hit (the pairs), and the component labels of a
+    second q_dedup_clusters build come from ``value_memo``."""
+    from sales_forecast_mlops_at_scale_spark.plans import all_queries
+
+    reg = all_queries()
+    clear_slots()
+    reg["q_minhash_dedup"].fn(spark, SF_DIR)
+    for name in ("q_dedup_clusters", "q_dedup_summary", "q_triangle_stats"):
+        before = memo_stats()["registry"]
+        reg[name].fn(spark, SF_DIR)
+        assert _registry_delta(before) == (1, 1), name
+    before_value = memo_stats()["value"]
+    reg["q_dedup_clusters"].fn(spark, SF_DIR)
+    assert memo_stats()["value"]["hits"] - before_value["hits"] == 1
+    assert memo_stats()["value"]["misses"] == before_value["misses"]
+    clear_slots()
+
+
+def test_ann_recall_all_serves_its_tiers_from_the_registry(spark):
+    from sales_forecast_mlops_at_scale_spark.plans import all_queries
+
+    reg = all_queries()
+    clear_slots()
+    reg["q_ann_recall_all"].fn(spark, SF_DIR)
+    before = memo_stats()["registry"]
+    reg["q_pq_topk"].fn(spark, SF_DIR)
+    assert _registry_delta(before) == (1, 0)
+    clear_slots()

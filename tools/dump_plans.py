@@ -47,7 +47,7 @@ NOTES = {
     "q_bloom_prefilter": "Build side reduces to <=m distinct bits (one row after collect_list), broadcast; probe pass is per-row HOF membership - zero probe-side shuffle.",
     "q_stratified_sample": "Per-stratum counts broadcast back as integer allocations; one window rank per stratum over the salted hash - a single shuffle keyed by the strata columns.",
     "q_pq_topk": "Lloyd-trained codebook pinned (tiny M*K rows; plan doubles per iteration without the pin), code table pinned as the stored index; ADC = codes x broadcast distance table, integer sums, TakeOrdered-style top-k.",
-    "q_ivfpq_topk": "Coarse cosine argmax buckets + residual PQ codes; ADC touches only integer code rows of probed buckets, then top-50 candidates broadcast to the raw-vector table for the exact cosine re-rank (recall@5 0.875 at shipped nprobe=16); index slots keyed EXCLUDING search params; whole search plan memoized driver-side (LRU-bounded, session-checked).",
+    "q_ivfpq_topk": "Coarse cosine argmax buckets + residual PQ codes; ADC touches only integer code rows of probed buckets, then top-50 candidates broadcast to the raw-vector table for the exact cosine re-rank (recall@5 0.875 at shipped nprobe=16); index slots keyed EXCLUDING search params; a repeat call is served from the registry plan cache.",
     "q_ivfpq_search": "The production tier: ADC + exact re-rank against the MATERIALIZED index tables (centroids/codebook/codes/vectors maintained by streaming/vector_ingest) - no training in the plan at all; query-side frames broadcast, corpus side shuffle-free (plan-asserted); the compressed codes tier is persist-pinned (pin_codes=True - PQ's premise is codes-fit-in-memory), slot-keyed on the codes file digest so an ingest append or compaction evicts it.",
     "q_ivfpq_index_stats": "Reads only the materialized assignments tier: one groupBy(bucket) count + a broadcast 1-row total; integer ppm shares. The oracle re-derives the assignment from scratch, so tier drift fails the differential.",
     "q_pq_distortion": "Per-subvector error = min(d_fp) over the BROADCAST codebook (assignment IS the argmin, so no join against the code table); one map-side-combinable (vid, m) aggregation of longs, then a 32-row rollup.",
